@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{LocateCascade, LocateCascadeExpr, LocateStage}
 
 /** Dictionary-based location detection (SURVEY.md §2.4 E1,
   * utils.py:336-437): find a (province, city) in free text, reproducing the
@@ -27,17 +28,22 @@ import org.apache.spark.sql.functions._
   * against a lowercased expansion and is never true, so `jaksel`/`sby`
   * detect nothing — reproduced here by omitting the stage. The
   * `abbreviations` field stays on [[LocationDict]] for callers that want
-  * the repaired behavior via a custom stage.
+  * the repaired behavior ([[detectRepaired]]).
   *
   * Dictionary order is semantically load-bearing (SURVEY §7.4 risk 5), so
   * entries are a Seq, never a sorted map.
   *
-  * Implementation is a folded when-chain of `rlike` predicates over a
-  * broadcast-free literal dictionary: unlike the reference's per-row Python
-  * loop this compiles to a single codegen'd projection, and unlike a UDF it
-  * stays visible to Catalyst. For the 456-city production dictionary the
-  * chain is ~500 regex tests per row — still cheap next to a shuffle, and
-  * embarrassingly parallel at 100 TB.
+  * Implementation: the cascade is flattened into one ordered stage list
+  * ([[cascadeStages]]) and evaluated by a single native Catalyst node,
+  * [[org.apache.spark.sql.graft.LocateCascadeExpr]], whose first hitting
+  * stage wins. Each stage test is the `rlike` of its `\b<word>\b` pattern
+  * (RLike semantics), guarded by a `contains` check of the lowercased word,
+  * which every match must include, so a regex runs only on rows that hold
+  * its word.
+  * The node count of the expression does not grow with the dictionary, so
+  * per-batch planning costs the same for the 45-city compact dictionary
+  * and the 456-city production file, and the projection stays
+  * whole-stage codegen'd.
   */
 object DictionaryLocator {
 
@@ -90,20 +96,6 @@ object DictionaryLocator {
 
   def boundary(word: String): String = "\\b" + quote(word) + "\\b"
 
-  private def hit(province: String, city: String, via: String): Column =
-    struct(lit(province).as("province"),
-      (if (city == null) lit(null).cast("string") else lit(city)).as("city"),
-      lit(via).as("detected_from"))
-
-  private val NullHit =
-    lit(null).cast("struct<province:string,city:string,detected_from:string>")
-
-  /** First-match when-chain over (condition, value) stages. */
-  private def chain(stages: Seq[(Column, Column)]): Column =
-    stages.foldRight(NullHit) { case ((cond, value), acc) =>
-      when(cond, value).otherwise(acc)
-    }
-
   /** The reference's 9 province-name variations (utils.py:414-424), plus
     * the word-boundary name itself first. Deduplicated (most variations
     * no-op on short names) but order-preserving.
@@ -123,8 +115,8 @@ object DictionaryLocator {
   }
 
   /** The cascade as a broadcast n-gram join — the 100 TB path for the full
-    * 456-city dictionary, where [[detect]]'s when-chain costs ~500 regex
-    * tests per row. Here the text is tokenized once, its 1..3-gram token
+    * 456-city dictionary, where [[detect]]'s cascade holds ~500 regex
+    * stages. Here the text is tokenized once, its 1..3-gram token
     * sequences joined (broadcast) against a dimension of dictionary match
     * strings, and the reference's first-match-wins cascade becomes a
     * single sort key per candidate:
@@ -138,8 +130,8 @@ object DictionaryLocator {
     * row_number over that key reproduces the cascade exactly on
     * separator-normalized text. Caveat vs [[detect]]: `\b` also matches at
     * punctuation OUTSIDE the reference's separator set (e.g. "jakarta!"),
-    * where token equality does not — the when-chain stays the
-    * parity-exact variant; this is the plan for scale. The gap is pinned
+    * where token equality does not — [[detect]] stays the parity-exact
+    * variant; this is the plan for scale. The gap is pinned
     * by test, not only prose: DictionaryLocatorSpec's punctuation spec
     * shows full agreement on separator-set punctuation and measures the
     * join path blind on every non-separator case (`!?():'"#@+`).
@@ -209,12 +201,8 @@ object DictionaryLocator {
     * entry in [[LocationDict.abbreviations]] order wins, tagged
     * `abbreviation_match`.
     */
-  def abbreviationHit(text: Column, dict: LocationDict): Column = {
-    val matchable = translate(lower(text), "-/\\|_,;.", "        ")
-    chain(dict.abbreviations.map { case (ab, (p, c)) =>
-      (matchable.rlike(boundary(ab)), hit(p, c, "abbreviation_match"))
-    })
-  }
+  def abbreviationHit(text: Column, dict: LocationDict): Column =
+    cascade(text, abbreviationStages(dict))
 
   /** [[detect]] plus the repaired abbreviation stage as a FALLBACK: the
     * parity cascade runs unchanged and abbreviations only decide rows the
@@ -223,39 +211,52 @@ object DictionaryLocator {
     * reference-exact variant.
     */
   def detectRepaired(text: Column, dict: LocationDict): Column =
-    coalesce(detect(text, dict), abbreviationHit(text, dict))
+    cascade(text, cascadeStages(dict) ++ abbreviationStages(dict))
 
   /** The cascade as one nullable struct(province, city, detected_from).
     * Null when nothing matches (caller decides the fallback shape).
     */
-  def detect(text: Column, dict: LocationDict): Column = {
-    // utils.py:358-362 — separators become spaces so `bandung-bogor`
-    // word-boundary-matches both cities.
-    val matchable = translate(lower(text), "-/\\|_,;.", "        ")
+  def detect(text: Column, dict: LocationDict): Column =
+    cascade(text, cascadeStages(dict))
 
-    // City stage, province-major: first-exact else last-token per province.
-    val perProvince: Seq[Column] = dict.entries.map { case (p, cities) =>
-      val exactChain = chain(cities.map { c =>
-        (matchable.rlike(boundary(c)), hit(p, c, "city_match"))
-      })
-      // Single-word city tokens are the exact regex again — if exact failed
-      // they fail too, so only multi-word cities contribute token stages.
-      // Reverse order ⇒ the chain's first match is the reference's last.
-      val tokenChain = chain(cities.reverse.collect {
-        case c if c.split("\\s+").count(_.length > 2) > 0 && c.contains(' ') =>
-          val toks = c.split("\\s+").filter(_.length > 2)
-          (toks.map(t => matchable.rlike(boundary(t))).reduce(_ || _),
-            hit(p, c, "city_token_match"))
-      })
-      coalesce(exactChain, tokenChain)
+  /** The reference cascade as ordered first-hit-wins stages:
+    *
+    *  - per province, in dictionary order: its exact-city stages in city
+    *    order, then one token stage per multi-word city in REVERSE city
+    *    order (the reference keeps the LAST token hit). Single-word city
+    *    tokens are the exact regex again — if exact failed they fail too —
+    *    so only multi-word cities get token stages, over their >2-char
+    *    tokens;
+    *  - then one stage per province over its name variations
+    *    ([[provincePatterns]]).
+    */
+  private def cascadeStages(dict: LocationDict): Seq[LocateStage] = {
+    val cityStages = dict.entries.flatMap { case (p, cities) =>
+      val exact = cities.map(c => stage(Seq(c), p, c, "city_match"))
+      val tokens = cities.reverse.collect {
+        case c if c.contains(' ') && c.split("\\s+").exists(_.length > 2) =>
+          stage(c.split("\\s+").filter(_.length > 2).toSeq, p, c, "city_token_match")
+      }
+      exact ++ tokens
     }
-
-    // Province stage: first province whose name or any variation matches.
-    val provinceChain = chain(dict.provinces.map { p =>
-      (provincePatterns(p).map(v => matchable.rlike(boundary(v))).reduce(_ || _),
-        hit(p, null, "province_match"))
-    })
-
-    coalesce(perProvince :+ provinceChain: _*)
+    cityStages ++ dict.provinces.map(p =>
+      stage(provincePatterns(p), p, null, "province_match"))
   }
+
+  /** The repaired abbreviation stages, in [[LocationDict.abbreviations]]
+    * order.
+    */
+  private def abbreviationStages(dict: LocationDict): Seq[LocateStage] =
+    dict.abbreviations.map { case (ab, (p, c)) => stage(Seq(ab), p, c, "abbreviation_match") }
+
+  /** A stage hitting on any of `words` at word boundaries. */
+  private def stage(words: Seq[String], province: String, city: String,
+      via: String): LocateStage =
+    LocateStage(words.map(boundary), words.map(_.toLowerCase), province, city, via)
+
+  // utils.py:358-362 — separators become spaces so `bandung-bogor`
+  // word-boundary-matches both cities.
+  private def cascade(text: Column, stages: Seq[LocateStage]): Column =
+    LocateCascadeExpr.locate(translate(lower(text), "-/\\|_,;.", "        "),
+      LocateCascade(stages))
 }

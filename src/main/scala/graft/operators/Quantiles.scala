@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SortableDoubleBitsExpr
 import org.apache.spark.sql.types._
@@ -353,7 +355,11 @@ object Quantiles {
     val resolveMap: Map[(Any, Long), Double] =
       brackets.map(b => ((b.g, b.origK), b.value.get)).toMap
 
-    val outRows = stats.map { case (g, n) =>
+    // rows ascend by group (nulls first, as orderBy sorts), not in the
+    // iteration order of the driver's hash maps
+    val groupOrder = TypeUtils.getInterpretedOrdering(gField.dataType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(gField.dataType)
+    val outRows = (stats.map { case (g, n) =>
       val qs = ranks(g).map { r =>
         val k0 = math.floor(r).toLong
         val k1 = math.ceil(r).toLong
@@ -362,7 +368,9 @@ object Quantiles {
         lo + (hi - lo) * (r - k0)
       }
       Row(g, n, qs)
-    } ++ emptyGroups.map(g => Row(g, 0L, null))
+    } ++ emptyGroups.map(g => Row(g, 0L, null)))
+      .map(r => (Option(toCatalyst(r.get(0))), r))
+      .sortBy(_._1)(Ordering.Option(groupOrder)).map(_._2)
     val outSchema = StructType(Seq(
       StructField(groupCol, gField.dataType, gField.nullable),
       StructField("n", LongType, nullable = false),

@@ -185,4 +185,21 @@ class QuantilesSpec extends SparkSpec {
     assert(a("g")._1 === 500L) // null + NaN excluded from n
     assert(a("g")._2.head === 0.0 && a("g")._2.last === 499.0)
   }
+
+  test("output rows ascend by group, nulls first, whatever the driver map order") {
+    // 64 groups inserted in a scrambled order, plus a null group and an
+    // all-NaN group (the empty-group rows join the same order)
+    val keys = new scala.util.Random(7).shuffle((0 until 64).map(i => f"g$i%02d")) :+ "zz_nan"
+    val rows: Seq[(String, Double)] =
+      keys.flatMap(k => (0 until 5).map(i => (k, if (k == "zz_nan") Double.NaN else i.toDouble))) ++
+      (0 until 5).map(i => (null.asInstanceOf[String], i.toDouble))
+    val df = rows.toDF("g", "v").repartition(4)
+    val got = Quantiles.exactGroupQuantiles(df, "g", "v", ps).collect().map(_.getString(0)).toSeq
+    assert(got == null +: keys.sorted)
+    // composite keys ride the same order through the packed struct
+    val comp = keys.zipWithIndex.map { case (k, i) => (i % 3, k, i.toDouble) }.toDF("a", "b", "v")
+    val gotComp = Quantiles.exactGroupedQuantiles(comp, Seq("a", "b"), "v", ps)
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(gotComp == gotComp.sorted && gotComp.size == keys.size)
+  }
 }

@@ -36,4 +36,17 @@ class TablesSpec extends SparkSpec {
     assert(counts("nation") === 25L)
     assert(counts.values.forall(_ > 0L))
   }
+
+  test("documents has one row per doc_id (q_tfidf_terms' doc_id -> source dependency)") {
+    // the merged tf+df aggregate counts docs per (term, source) cell and
+    // sums those counts into df: exact only while no doc_id appears under
+    // two sources, i.e. while documents has one row per doc_id
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"/root/testdata/$sf"
+      assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
+      val r = Tables(spark, dir, "documents")
+        .agg(count(lit(1)), countDistinct(col("doc_id"))).head()
+      assert(r.getLong(0) == r.getLong(1), s"$sf: ${r.getLong(0)} rows, ${r.getLong(1)} doc_ids")
+    }
+  }
 }
