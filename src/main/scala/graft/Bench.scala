@@ -23,68 +23,18 @@ import org.apache.spark.sql.functions._
   * JSON line, so a crashing query is visible without reading stack traces.
   */
 object Bench {
+  /** The single-pass aggregate behind [[materialize]]: (xor fold, rows). */
+  private[graft] def foldFrame(df: DataFrame): DataFrame =
+    df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toSeq: _*))), count(lit(1)))
+
   /** (fold, rows): the xor fold forces every output expression; the row
     * count rides the same single-pass aggregate so cross-round comparisons
     * can spot result-size drift without a second execution.
     */
-  private def materialize(df: DataFrame): (Long, Long) = {
-    val row = df.agg(
-      bit_xor(xxhash64(struct(df.columns.map(col).toSeq: _*))),
-      count(lit(1))).head()
+  private[graft] def materialize(df: DataFrame): (Long, Long) = {
+    val row = foldFrame(df).head()
     (if (row.isNullAt(0)) 0L else row.getLong(0), row.getLong(1))
   }
-
-  /** Structural per-run counters (the r17 load-robust gate): wall time
-    * at sf0.1 proved noise-saturated — the r16 adjudication saw four
-    * same-commit windows span 70–114 s on 96/97 identical plan hashes —
-    * while job count and shuffled bytes are properties of the EXECUTED
-    * plan: they move when the plan moves and hold still under machine
-    * load. The regression rule in BASELINE.md gates on plan_shape_hash
-    * and these counters first, wall time second. Accumulators are
-    * monotonic totals; per-run deltas come from snapshots bracketing the
-    * run, with the async listener bus drained before each snapshot
-    * ([[org.apache.spark.graft.BenchTaps.drainListenerBus]]).
-    */
-  private final class StructListener extends org.apache.spark.scheduler.SparkListener {
-    private val jobs = new java.util.concurrent.atomic.AtomicLong
-    private val shufRead = new java.util.concurrent.atomic.AtomicLong
-    private val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    private val stageRetries = new java.util.concurrent.atomic.AtomicLong
-    private val stages = new java.util.concurrent.atomic.AtomicLong
-    private val tasks = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    // A stage attempt > 0 is a RESUBMISSION (fetch failure / lost blocks
-    // under external load) — its re-run traffic lands in the shuffle
-    // accumulators without changing the job count, which is exactly how
-    // the r17 official record got a +41 MB read-only excursion on
-    // q_span_removal (isolated probe: 8 byte-identical runs). The count
-    // makes a retry-tainted run self-identify so BenchDiff can demote
-    // read-only excursions instead of calling them plan regressions.
-    override def onStageSubmitted(
-        s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-      stages.incrementAndGet()
-      if (s.stageInfo.attemptNumber() > 0) stageRetries.incrementAndGet()
-      ()
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = t.taskMetrics
-      if (m != null) {
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-    def snapshot(): Snapshot = Snapshot(jobs.get(), shufRead.get(),
-      shufWrite.get(), stageRetries.get(), stages.get(), tasks.get())
-  }
-  private final case class Snapshot(
-      jobs: Long, shufRead: Long, shufWrite: Long, stageRetries: Long,
-      stages: Long, tasks: Long)
 
   /** Heap pools for the per-run peak-heap stamp (reset before each run,
     * summed after): sum of per-pool peaks upper-bounds the true
@@ -109,7 +59,7 @@ object Bench {
       stageRetries: Long, stages: Long, tasks: Long)
 
   /** The exact normalized analyzed-plan string the `plan_hash` digests —
-    * public so [[graft.tools.AnalyzedPlanDump]] renders the SAME string
+    * public so [[graft.tools.Probe]]'s `dump` renders the SAME string
     * (two hand-synced copies would let the diagnostic drift from what is
     * actually hashed). See the in-loop comment for what is normalized
     * and why.
@@ -363,10 +313,10 @@ object Bench {
     // are load-contaminated and must not be read as regressions.
     val loadavgBefore = loadavg()
     val canaryBefore = math.min(canarySeconds(), canarySeconds())
-    // structural-counter listener, scoped to this pass (registered fresh
-    // per pass so a retry's deltas never mix with the rejected window's)
-    val listener = new StructListener
-    spark.sparkContext.addSparkListener(listener)
+    // structural-counter listener (graft.tools.Harness), scoped to this
+    // pass (registered fresh per pass so a retry's deltas never mix with
+    // the rejected window's)
+    val listener = graft.tools.Harness.StructListener.attach(spark)
     val results = try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // per-query load stamp: 1-min loadavg at this query's start. The
       // suite-level canary certifies (or disclaims) the WHOLE window;
@@ -385,7 +335,6 @@ object Bench {
       def timed(): Option[RunMeasure] = {
         // drain + snapshot OUTSIDE the timed span: the drain flushes the
         // previous run's stragglers so the deltas below are this run's
-        org.apache.spark.graft.BenchTaps.drainListenerBus(spark.sparkContext)
         val s0 = listener.snapshot()
         heapPools.foreach(p =>
           try p.resetPeakUsage()
@@ -398,13 +347,10 @@ object Bench {
           val (_, rows) = materialize(df)
           val sec = (System.nanoTime() - t0) / 1e9
           val gc = gcMillis() - gc0
-          org.apache.spark.graft.BenchTaps.drainListenerBus(spark.sparkContext)
-          val s1 = listener.snapshot()
+          val d = listener.snapshot() - s0
           val peak = heapPools.map(_.getPeakUsage.getUsed).sum
-          Some(RunMeasure(sec, rows, gc, s1.jobs - s0.jobs,
-            s1.shufRead - s0.shufRead, s1.shufWrite - s0.shufWrite, peak,
-            s1.stageRetries - s0.stageRetries, s1.stages - s0.stages,
-            s1.tasks - s0.tasks))
+          Some(RunMeasure(sec, rows, gc, d.jobs, d.shuffleRead, d.shuffleWrite,
+            peak, d.stageRetries, d.stages, d.tasks))
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
@@ -460,7 +406,7 @@ object Bench {
       // time as a healthy steady-state
       if (cold.isEmpty || steady.isEmpty) errors += name
       name -> QueryRow(cold, steady, planHash, shapeHash, qLoad)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally listener.detach()
     val canaryAfter = math.min(canarySeconds(), canarySeconds())
     val loadavgAfter = loadavg()
     SuitePass(results, errors.toSeq, canaryBefore, canaryAfter,

@@ -152,7 +152,7 @@ object ScaleGates {
     * A production crawl store (tens of GB+) always probes.
     *
     * Derivation (r17 re-measure after the r16 plumbing cut removed the
-    * probe path's two eager localCheckpoints; `SegmentDedupBench probe`,
+    * probe path's two eager localCheckpoints; `StoreBench segment probe`,
     * warm JVM, 100k arrival, min of 2 reps): probe 7.43 s/16 jobs vs
     * classic 6.86 s/8 jobs at 1M history (291 MB at rest), probe
     * 7.76 s vs classic 5.87 s at 4M (1,164 MB) — the cut shrank the

@@ -9,13 +9,11 @@ package graft.ml
   * LayerNormalization / Transpose (perm) / Reshape / Split / Concat /
   * Cast (float ↔ int64).
   *
-  * Why it exists: the library's production sentiment path
-  * ([[graft.operators.OnnxSentimentClassifier]]) binds ONNX Runtime
-  * reflectively, but this build environment cannot resolve those jars —
-  * which left the model seam tested only against stubbed logits. This
-  * runtime closes that gap from the other side: a REAL ONNX protobuf
-  * model (written byte-for-byte to the public wire format) is parsed and
-  * executed with real matrix arithmetic — since round 9 including
+  * Why it exists: ONNX Runtime is not on this library's classpath, which
+  * would leave the sentiment model seam tested only against stubbed
+  * logits. With this runtime a REAL ONNX protobuf model (written
+  * byte-for-byte to the public wire format) is parsed and executed with
+  * real matrix arithmetic — since round 9 including
   * embedding lookup, multi-head self-attention (batched 4-D MatMuls),
   * GELU-via-Erf and LayerNormalization, so a small REAL transformer
   * checkpoint executes end-to-end (MiniOnnxSpec drives a 2-layer

@@ -74,16 +74,13 @@ object Checkpoints {
     if (cap > 0 && est <= BigInt(cap)) materialize(df) else df
   }
 
-  /** Truncate `df`'s lineage. `legacyConfKeys` lets call sites honor
-    * their historical opt-in keys (LakeMerge shipped
-    * `spark.graft.lake.reliableCheckpoint` before this helper existed).
+  /** Truncate `df`'s lineage: a reliable `checkpoint` when the session
+    * sets [[ReliableCheckpointConf]] to "true", else `localCheckpoint`.
     */
-  private[operators] def materialize(df: DataFrame, legacyConfKeys: String*): DataFrame = {
-    val spark = df.sparkSession
-    val reliable = (ReliableCheckpointConf +: legacyConfKeys)
-      .exists(k => spark.conf.getOption(k).contains("true"))
-    if (reliable) df.checkpoint() else df.localCheckpoint()
-  }
+  private[operators] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.conf.getOption(ReliableCheckpointConf).contains("true"))
+      df.checkpoint()
+    else df.localCheckpoint()
 
   /** Free the storage behind a frame [[materialize]] produced, once a
     * newer frame supersedes it — without this an iterative loop holds one

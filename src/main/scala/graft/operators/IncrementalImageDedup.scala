@@ -136,9 +136,9 @@ object IncrementalImageDedup {
       // hash survives the probe and min-rep over the collided slice equals
       // min-rep over the full store for those hashes. Only colliding rows
       // ever reach an exchange. Explicit broadcast, not AQE — AQE converts
-      // only after both map sides already materialized (the
-      // LshFrontierProbe lesson). Flood batches beyond the cap take the
-      // original collapsed-store plan.
+      // only after both map sides already materialized (SURVEY §18,
+      // "Unequal-join broadcasts on the arrival path"). Flood batches
+      // beyond the cap take the original collapsed-store plan.
       val bKeys = reps.select(col("__b")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       scratch += bKeys

@@ -133,11 +133,11 @@ object IncrementalSegmentDedup {
     // the anti-join — the store never shuffles at all. An explicit
     // broadcast, not AQE: AQE converts a join only AFTER both map sides
     // have materialized, i.e. after the store-side exchange already
-    // wrote (the LshFrontierProbe lesson). BELOW the store gate the
-    // plain shuffled anti-join stays — the probe path's fixed plumbing
-    // costs more than a small store's exchange (measured in the cap
-    // doc above); a flood batch beyond the batch-side cap likewise
-    // degrades to the shuffled plan.
+    // wrote (SURVEY §18, "Unequal-join broadcasts on the arrival path").
+    // BELOW the store gate the plain shuffled anti-join stays — the probe
+    // path's fixed plumbing costs more than a small store's exchange
+    // (measured in the cap doc above); a flood batch beyond the
+    // batch-side cap likewise degrades to the shuffled plan.
     val probeBytesMin =
       if (storeProbeBytesMin >= 0L) storeProbeBytesMin
       else graft.config.ScaleGates.segmentStoreProbeBytesMin(spark)

@@ -244,8 +244,9 @@ object IncrementalSemDedup {
       // hash probe with no exchange at all, and in PQ mode the codeword
       // reconstruction is computed inside the scan instead of riding a
       // shuffle. Explicit broadcast, not AQE — AQE converts a join only
-      // after both map sides have materialized (the LshFrontierProbe
-      // lesson). Bulk arrivals beyond the cap take the shuffled join.
+      // after both map sides have materialized (SURVEY §18, "Unequal-join
+      // broadcasts on the arrival path"). Bulk arrivals beyond the cap
+      // take the shuffled join.
       val batchSide = assigned.select(col("vec_id"), col("emb"), col("cell"))
       val joined =
         if (batchRows <= graft.config.ScaleGates.semBroadcastVecRowsMax(spark))

@@ -21,24 +21,6 @@ object LakeMerge {
 
   val PartitionCol = "event_date"
 
-  /** Set to "true" to materialize merge inputs with a RELIABLE checkpoint
-    * (requires `SparkContext.setCheckpointDir` on durable storage) instead
-    * of `localCheckpoint`. localCheckpoint stores blocks on executors: fine
-    * in local mode, but on a real cluster an executor lost mid-merge takes
-    * its blocks with it and fails the job — after lineage truncation there
-    * is nothing to recompute from. Cluster deployments should set this.
-    */
-  val ReliableCheckpointConf = "spark.graft.lake.reliableCheckpoint"
-
-  /** Lineage-truncating materialization for the merge inputs (Spark
-    * refuses to overwrite a path an active plan still reads from). Local
-    * by default; reliable behind [[ReliableCheckpointConf]] (this
-    * operator's historical key) or the shared
-    * [[Checkpoints.ReliableCheckpointConf]] — see the executor-loss note.
-    */
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame =
-    Checkpoints.materialize(df, ReliableCheckpointConf)
-
   /** Merge `incoming` canonical docs into the lake at `path`, partitioned
     * by event_date = to_date(metadata.created_at). Incoming beats existing
     * on key collision (the `$set` upsert contract); among duplicates within
@@ -65,7 +47,7 @@ object LakeMerge {
     // overwrite a path still referenced by the writing plan. A batch is
     // bounded (one scrape/repair slice), so materializing it is cheap
     // relative to the merge shuffle.
-    val inc = materialize(spark,
+    val inc = Checkpoints.materialize(
       incoming.withColumn(PartitionCol, to_date(col("metadata.created_at"))))
 
     val (merged, mergedDates) =
@@ -104,7 +86,7 @@ object LakeMerge {
         // Truncate lineage: Spark refuses to overwrite a path that an
         // active plan still reads from; the checkpoint materializes the
         // (pruned, small) affected slice before the write.
-        val existing = materialize(spark, spark.read.parquet(path).filter(datePred))
+        val existing = Checkpoints.materialize(spark.read.parquet(path).filter(datePred))
         (existing.withColumn("__pri", lit(0))
           .unionByName(inc.withColumn("__pri", lit(1))), dates)
       }
@@ -116,7 +98,7 @@ object LakeMerge {
     // collect below, then the write) — materialize it once instead of
     // re-running the whole LWW window per consumer
     val winners =
-      if (crossPartitionDedup) materialize(spark, winnersPlan) else winnersPlan
+      if (crossPartitionDedup) Checkpoints.materialize(winnersPlan) else winnersPlan
 
     // Dynamic overwrite only rewrites partitions PRESENT in the output: a
     // partition whose every row was a retired stale copy produces no

@@ -18,7 +18,8 @@ import graft.functions.{LexiconSentiment, TextFunctions}
   *
   * [[LexiconClassifier]] is the deterministic stand-in (same scoring as the
   * columnar [[graft.functions.LexiconSentiment]], so the two paths agree
-  * bit-for-bit); an ONNX/DJL-backed model drops in behind the same trait.
+  * bit-for-bit); an ONNX model ([[graft.ml.MiniOnnxSentimentClassifier]]) drops in
+  * behind the same trait.
   */
 trait SentimentClassifier extends Serializable {
 

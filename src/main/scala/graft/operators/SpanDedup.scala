@@ -111,7 +111,7 @@ object SpanDedup {
     // removed_chars) — left declarative, each consumer re-derives the
     // whole gram pipeline above unless Spark's exchange/stage reuse
     // happens to fire, and that reuse is a runtime RACE, not a guarantee
-    // (r17 finding, QueryCounterProbe: the same analyzed plan ran in two
+    // (r17 finding, `Probe counters`: the same analyzed plan ran in two
     // byte-deterministic modes at sf0.1 — the 41 MB candidate aggregate
     // exchange read once or twice with identical jobs/stages/tasks —
     // selected per run by whether the duplicate subtrees' builds were

@@ -18,9 +18,7 @@ import graft.pipeline.ModeDispatch
   * `_id` (`src/resilient_scraper.py:941-974`, bulk UpdateOne) — as the
   * connector's `operationType=update` + `idFieldList=_id`.
   *
-  * Dependency gating, same policy as
-  * [[graft.operators.OnnxSentimentClassifier]]: `format("mongodb")` is a
-  * STRING — this file compiles and ships with zero new dependencies, and
+  * Dependency gating: `format("mongodb")` is a STRING — this file compiles and ships with zero new dependencies, and
   * the data source resolves when a cluster deployment adds
   * `org.mongodb.spark:mongo-spark-connector_2.13:10.x` to the classpath.
   * Without it, [[MongoDocStore.isAvailable]] is false and read/write

@@ -13,16 +13,16 @@ import graft.sources.LocationDictSource
   * claim needs: docs/s per batch-window and store file counts over
   * time, with `compactEvery` ACTIVE versus OFF on the same corpus.
   *
-  * Corpus: [[IncrementalDedupBench.corpus]] (40-token hash-derived docs,
+  * Corpus: [[StoreBench.Lsh.corpus]] (40-token hash-derived docs,
   * every 7th a planted adjacent near-dup) with a constant lang column —
   * the dedup stores do real suppression work. Store sets:
   *  - mode `text` (default): curated sink, LSH signature store, segment
   *    store, BM25 index — the stores whose per-batch READ cost decays
   *    with file count;
   *  - mode `full`: text stores PLUS the media/vector stores — the
-  *    perceptual dHash store ([[ImageDedupBench.corpus]]'s synthetic
+  *    perceptual dHash store ([[StoreBench.Image.corpus]]'s synthetic
   *    BMPs, first quarter planted dup clusters), the SemDeDup store and
-  *    the IVF-PQ index ([[SemDedupBench.corpus]]'s 64-dim embeddings,
+  *    the IVF-PQ index ([[StoreBench.Sem.corpus]]'s 64-dim embeddings,
   *    same planted-cluster shape) — so the decay-bounded claim gets a
   *    measured curve on the media/vector side too, not just text.
   *
@@ -36,24 +36,6 @@ import graft.sources.LocationDictSource
   */
 object CapstoneScaleBench {
 
-  /** Recursive data-file count under a store root (0 if absent) —
-    * excludes _SUCCESS/_temporary bookkeeping so the curve counts what a
-    * reader actually opens.
-    */
-  private def fileCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-    }
-    n
-  }
-
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(100000L)
     val nBatches = args.lift(1).map(_.toInt).getOrElse(50)
@@ -62,28 +44,19 @@ object CapstoneScaleBench {
     val sampleEvery = args.lift(3).map(_.toInt).getOrElse(5)
     val mode = args.lift(4).getOrElse("text")
     require(mode == "text" || mode == "full", s"mode must be text|full, got $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-FS deployment tuning: the incremental stores' batch= trees
-      // fan 64 bucket dirs per batch, so the default threshold (32)
-      // launches a parallel-listing JOB per store read — microseconds of
-      // driver listing on a local filesystem, but ~4 scheduled jobs per
-      // arrival of pure floor. On object storage keep the default: there
-      // the parallel listing is the right plan.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.withSession(Harness.LocalStoreListing)(
+      run(_, sfDir, nDocs, nBatches, compactEverys, sampleEvery, mode))
+  }
+
+  def run(spark: SparkSession, sfDir: String, nDocs: Long, nBatches: Int,
+      compactEverys: Seq[Int], sampleEvery: Int, mode: String): Unit = {
     val work = java.nio.file.Files.createTempDirectory("capladder").toString
 
     // stage the synthetic corpus as JSONL slices once; each slice is one
     // micro-batch (maxFilesPerTrigger = 1)
     val landing = s"$work/landing"
-    IncrementalDedupBench.corpus(spark, nDocs)
+    StoreBench.Lsh.corpus(spark, nDocs)
       .withColumn("lang", lit("en"))
       .repartition(nBatches)
       .write.mode("overwrite").json(landing)
@@ -93,9 +66,9 @@ object CapstoneScaleBench {
     // batch against them — the capstone's vectors/media contract)
     val (vectors, media) =
       if (mode == "full") (
-        Some(SemDedupBench.corpus(spark, nDocs)
+        Some(StoreBench.Sem.corpus(spark, nDocs)
           .select(col("vec_id"), col("emb").as("embedding")).cache()),
-        Some(ImageDedupBench.corpus(spark, nDocs).cache()))
+        Some(StoreBench.Image.corpus(spark, nDocs).cache()))
       else (None, None)
 
     compactEverys.foreach { compactEvery =>
@@ -136,7 +109,7 @@ object CapstoneScaleBench {
             if (batchId % sampleEvery == sampleEvery - 1) {
               val secs = (System.nanoTime() - windowStart) / 1e9
               val counts = watched
-                .map { case (k, p) => s""""$k":${fileCount(spark, p)}""" }
+                .map { case (k, p) => s""""$k":${Harness.fileCount(spark, p)}""" }
                 .mkString(",")
               samples += s"""{"compact_every":$compactEvery,"batch":$batchId,""" +
                 s""""window_docs_per_sec":${math.round(windowDocs / secs)},$counts}"""
@@ -150,9 +123,8 @@ object CapstoneScaleBench {
       val wallS = (System.nanoTime() - t0) / 1e9
       samples.foreach(println)
       val finalCounts = watched
-        .map { case (k, p) => s""""$k":${fileCount(spark, p)}""" }.mkString(",")
+        .map { case (k, p) => s""""$k":${Harness.fileCount(spark, p)}""" }.mkString(",")
       println(f"""{"mode":"$mode","compact_every":$compactEvery,"docs":$nDocs,"batches":$nBatches,"wall_s":$wallS%.1f,"docs_per_sec":${nDocs / wallS}%.1f,"final_files":{$finalCounts}}""")
     }
-    spark.stop()
   }
 }

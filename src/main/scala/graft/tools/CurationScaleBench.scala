@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +15,7 @@ import graft.operators.{Checkpoints, Curation, Dedup}
   * stage scales; this is the single number for the chain a corpus user
   * actually runs (VERDICT r9 #6).
   *
-  * Corpus: the [[IncrementalDedupBench.corpus]] generator (40-token
+  * Corpus: the [[StoreBench.Lsh.corpus]] generator (40-token
   * hash-derived docs, every 7th a planted adjacent near-dup at Jaccard
   * ≈ 0.767) with a deterministic `lang` column — so the dedup stages do
   * real suppression work (~1/7 of the corpus is duplicate mass) and the
@@ -36,47 +35,16 @@ import graft.operators.{Checkpoints, Curation, Dedup}
   */
 object CurationScaleBench {
 
-  /** Cumulative shuffle bytes from completed stages (listener events are
-    * near-synchronous; snapshots sleep briefly to drain the bus).
-    */
-  private final class ShuffleMeter extends SparkListener {
-    val written = new java.util.concurrent.atomic.AtomicLong
-    val read = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        ()
-      }
-    }
-    def snapshot(): (Long, Long) = { Thread.sleep(300); (written.get, read.get) }
-  }
-
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = body
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   private def mb(b: Long): String = f"${b / 1048576.0}%9.1f"
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curation-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    val sizes = args.headOption.map(_.split(",").map(_.trim.toLong).toSeq)
-      .getOrElse(Seq(1000000L))
+  def main(args: Array[String]): Unit =
+    Harness.withSession()(run(_, args.headOption.map(_.split(",").map(_.trim.toLong).toSeq)
+      .getOrElse(Seq(1000000L))))
 
+  def run(spark: SparkSession, sizes: Seq[Long]): Unit = {
+    val meter = Harness.StructListener.attach(spark)
     sizes.foreach { n =>
-      val docs = IncrementalDedupBench.corpus(spark, n)
+      val docs = StoreBench.Lsh.corpus(spark, n)
         .select(col("doc_id"),
           element_at(typedLit(Seq("id", "en", "ms")),
             (pmod(col("doc_id"), lit(3)) + 1).cast("int")).as("lang"),
@@ -85,14 +53,11 @@ object CurationScaleBench {
 
       var stages = Vector.empty[(String, Double, Long, Long, Long)]
       def stage(name: String)(body: => DataFrame): DataFrame = {
-        val (w0, r0) = meter.snapshot()
-        val (frame, secs) = timed {
-          val f = Checkpoints.materializeFrame(body)
-          f
+        val (((frame, secs), rows), c) = meter.measure {
+          val t = Harness.timed(Checkpoints.materializeFrame(body))
+          (t, t._1.count())
         }
-        val rows = frame.count()
-        val (w1, r1) = meter.snapshot()
-        stages :+= ((name, secs, rows, w1 - w0, r1 - r0))
+        stages :+= ((name, secs, rows, c.shuffleWrite, c.shuffleRead))
         frame
       }
 
@@ -147,6 +112,6 @@ object CurationScaleBench {
       docs.unpersist()
       ()
     }
-    spark.stop()
+    meter.detach()
   }
 }

@@ -1,10 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.{BatchStore, Checkpoints, Curation, Dedup, IncrementalDedup}
+import graft.Bench.materialize
+import Harness.{rmrf, timed}
 
 /** The round-10/12 "attack near-dup+CC" measurement: the COMPOSED curation
   * chain (normalize → exact dedup → near-dup suppression → benchmark
@@ -12,7 +14,7 @@ import graft.operators.{BatchStore, Checkpoints, Curation, Dedup, IncrementalDed
   * served by the persistent [[IncrementalDedup]] LSH store — versus the
   * one-shot composed run over the same corpus with the SAME detector
   * (one `lshDedupBatch` over everything: identical signatures, banding,
-  * estimator, closure — the [[IncrementalDedupBench]] naive-arm
+  * estimator, closure — the [[StoreBench.Lsh]] naive-arm
   * discipline, so the delta is architecture, not detector).
   *
   * `tools/CurationScaleBench` showed near-dup+CC at ~75 % of the one-shot
@@ -22,7 +24,7 @@ import graft.operators.{BatchStore, Checkpoints, Curation, Dedup, IncrementalDed
   * so the marginal batch is ~flat while the one-shot arm re-pays the
   * whole corpus every run.
   *
-  * Corpus: the [[IncrementalDedupBench.corpus]] generator (40-token
+  * Corpus: the [[StoreBench.Lsh.corpus]] generator (40-token
   * hash-derived docs, every 7th a planted ADJACENT near-dup at J ≈
   * 0.767) — adjacent-only pairs mean no bridge docs, so the incremental
   * monotonicity contract has nothing to diverge on and the two arms'
@@ -35,20 +37,6 @@ import graft.operators.{BatchStore, Checkpoints, Curation, Dedup, IncrementalDed
   * (optional args: docCounts csv, batches). Results → SURVEY §16.
   */
 object IncrementalCurationBench {
-
-  private def rmrf(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true): Unit
-  }
-
-  /** (count, order-independent id checksum) — the survivor-set equality
-    * observable.
-    */
-  private def idChecksum(df: DataFrame, id: Column): (Long, Long) = {
-    val r = df.agg(count(lit(1)), bit_xor(xxhash64(id))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
 
   /** Decontamination + quality gate over a survivor frame — shared tail
     * of both arms (per batch in the incremental arm, once in the
@@ -119,20 +107,11 @@ object IncrementalCurationBench {
         if (profileMode) "250000" else "250000,500000,1000000")
       .split(",").map(_.trim.toLong).toSeq
     val nBatches = eff.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-FS deployment tuning: the incremental stores' batch= trees
-      // fan 64 bucket dirs per batch, so the default threshold (32)
-      // launches a parallel-listing JOB per store read — microseconds of
-      // driver listing on a local filesystem, but ~4 scheduled jobs per
-      // arrival of pure floor. On object storage keep the default: there
-      // the parallel listing is the right plan.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.withSession(Harness.LocalStoreListing)(run(_, counts, nBatches, profileMode))
+  }
+
+  def run(spark: SparkSession, counts: Seq[Long], nBatches: Int,
+      profileMode: Boolean): Unit = {
     val work = java.nio.file.Files.createTempDirectory("inccur").toString
 
     counts.foreach { n =>
@@ -145,7 +124,7 @@ object IncrementalCurationBench {
       // File-based stats restore the shuffled join every real corpus
       // (parquet/JSON sourced) gets; arrival simulation unaffected.
       val normedPath = s"$work/normed_$n"
-      IncrementalDedupBench.corpus(spark, n)
+      StoreBench.Lsh.corpus(spark, n)
         .select(col("doc_id"),
           TextFunctions.redactPii(TextFunctions.nfcNormalize(col("text"))).as("r"))
         .write.mode("overwrite").parquet(normedPath)
@@ -156,10 +135,6 @@ object IncrementalCurationBench {
       // for the one-shot arm — same detector both sides)
       val benchShingles = Curation.benchmarkShingles(bench, col("r"), n = 5).cache()
       benchShingles.count(): Unit
-      def timed[T](body: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = body
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
 
       // ---- one-shot arm: the whole corpus as batch 0 of a throwaway store
       val os = s"$work/oneshot_$n"; rmrf(spark, os)
@@ -175,7 +150,7 @@ object IncrementalCurationBench {
         val surv = IncrementalDedup.lshDedupBatch(
             spark, exDeduped, col("doc_id"), col("r"), os, batchId = 0L)
           .filter(col("survivor"))
-        val out = idChecksum(curateTail(surv, benchShingles), col("doc_id"))
+        val out = materialize(curateTail(surv, benchShingles))
         Checkpoints.freeFrame(exDeduped)
         out
       }
@@ -228,7 +203,7 @@ object IncrementalCurationBench {
           }
           stageNd += tNd
           val (_, tTail) = timed {
-            val (c, x) = idChecksum(curateTail(surv, benchShingles), col("doc_id"))
+            val (x, c) = materialize(curateTail(surv, benchShingles))
             incCount += c; incXor ^= x
           }
           stageTail += tTail
@@ -240,19 +215,19 @@ object IncrementalCurationBench {
         if (b >= 2) profWall += wall
       }
       prof.foreach { pr =>
-        Thread.sleep(2000) // listener bus drain
+        org.apache.spark.graft.BenchTaps.drainListenerBus(spark.sparkContext)
         spark.sparkContext.removeSparkListener(pr)
         pr.report(profWall)
       }
 
-      val equal = osOut == ((incCount, incXor))
+      val equal = osOut == ((incXor, incCount))
       println(f"n=$n%9d batches=$nBatches oneshot=${osWall}%7.1fs " +
         f"(${n / osWall}%8.0f docs/s) incr_total=${incTotal}%7.1fs " +
         f"(${n / incTotal}%8.0f docs/s) incr_last_batch=${lastBatch}%6.1fs " +
         f"(${per / lastBatch}%8.0f docs/s marginal)")
       println(f"   incr stage totals: exact=${stageEx}%6.1fs " +
         f"neardup=${stageNd}%6.1fs decontam+quality=${stageTail}%6.1fs " +
-        f"survivors_equal=$equal (oneshot=${osOut._1}, incremental=$incCount)")
+        f"survivors_equal=$equal (oneshot=${osOut._2}, incremental=$incCount)")
       // fixed-vs-marginal profile: with a near-flat store (history grows
       // but per-batch work tracks the batch), the spread of per-batch
       // walls bounds the history-dependent share; min(wall) − pure
@@ -265,6 +240,5 @@ object IncrementalCurationBench {
       benchShingles.unpersist()
       rmrf(spark, os); rmrf(spark, inc); rmrf(spark, normedPath)
     }
-    spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Bench.materialize
 import graft.operators.Embeddings
 
 /** One-off measurement main: WHERE does [[Embeddings.ivfTopK]] beat
@@ -48,30 +49,18 @@ object IvfCrossover {
           .as("embedding"))
   }
 
-  private def materialize(df: DataFrame): Long = {
-    val row = df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toSeq: _*)))).head()
-    if (row.isNullAt(0)) 0L else row.getLong(0)
-  }
-
   private def timed(reps: Int)(build: => DataFrame): Double =
-    (0 until reps).map { _ =>
-      val t0 = System.nanoTime()
-      materialize(build)
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    (0 until reps).map(_ => Harness.timed(materialize(build))._2).min
 
   def main(args: Array[String]): Unit = {
     val sizes = args.headOption.map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(5000L, 20000L, 50000L, 100000L))
     val nProbes = args.lift(1).map(_.toInt).getOrElse(1000)
     val k = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.withSession()(run(_, sizes, nProbes, k))
+  }
+
+  def run(spark: SparkSession, sizes: Seq[Long], nProbes: Int, k: Int): Unit = {
     import spark.implicits._
 
     println(f"| n | probes | nlist | exact s | ivf s | probe-only s | pq-probe s | speedup | recall@$k | pq recall@$k | pq containment |")
@@ -132,6 +121,5 @@ object IvfCrossover {
       println(f"| $n | $nProbes | $nlist | $tExact%.2f | $tIvf%.2f | $tProbe%.2f | $tPq%.2f | " +
         f"${tExact / tIvf}%.2fx | $rIvf%.3f | $rPq%.3f | $contPq%.3f |")
     }
-    spark.stop()
   }
 }

@@ -24,14 +24,10 @@ object SfReplica {
     val Array(src, out, kStr) = args
     val k = kStr.toInt
     require(k >= 1, s"k must be >= 1, got $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.withSession()(run(_, src, out, k))
+  }
 
+  def run(spark: SparkSession, src: String, out: String, k: Int): Unit =
     graft.Tables.all.foreach { t =>
       // raw parquet read/write (events' nanos column round-trips as-is;
       // the normalizing reader in Tables.apply is for QUERY consumers)
@@ -45,8 +41,6 @@ object SfReplica {
       scaled.write.mode(SaveMode.Overwrite).parquet(s"$out/$t.parquet")
       println(s"[sfreplica] $t: ${if (scaled eq df) "copied" else s"x$k"}")
     }
-    spark.stop()
-  }
 
   /** `k` copies of `df`, copy i with every id column shifted by
     * i × (max + 1); id columns keep their type. Fails with a message on an

@@ -20,8 +20,8 @@ import graft.sources.LocationDictSource
   *     punctuation ratio), a pure filter;
   *  3. enrich — language id, dictionary location cascade, lexicon
   *     sentiment label (the oracle-gated fast path — swap in
-  *     [[graft.ml.MiniOnnxSentimentClassifier]] or the ONNX Runtime
-  *     classifier for model-based labels; the plumbing is identical);
+  *     [[graft.ml.MiniOnnxSentimentClassifier]] for model-based labels;
+  *     the plumbing is identical);
   *  4. land the enriched batch as its own idempotent `batch=` partition
   *     (replay overwrites, never appends);
   *  5. feed the INCREMENTAL LSH near-dup store (signatures persisted,
@@ -318,26 +318,15 @@ object StreamingCapstone {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("capstone").toString)
     val slices = args.lift(1).map(_.toInt).getOrElse(24)
     val compactEvery = args.lift(2).map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-FS deployment tuning: the incremental stores' batch= trees
-      // fan 64 bucket dirs per batch, so the default threshold (32)
-      // launches a parallel-listing JOB per store read — microseconds of
-      // driver listing on a local filesystem, but ~4 scheduled jobs per
-      // arrival of pure floor. On object storage keep the default: there
-      // the parallel listing is the right plan.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.withSession(Harness.LocalStoreListing)(run(_, sfDir, work, slices, compactEvery))
+  }
 
+  def run(spark: SparkSession, sfDir: String, work: String, slices: Int,
+      compactEvery: Int): Unit = {
     // stage the documents table as JSONL slices — the arrival simulation;
     // staging cost stays out of the throughput window
     val landing = s"$work/landing"
@@ -368,6 +357,5 @@ object StreamingCapstone {
     val imgSurvivors = IncrementalImageDedup.survivors(spark, stores.imgStore).count()
     val semSurvivors = IncrementalSemDedup.survivors(spark, stores.semStore).count()
     println(f"""{"metric":"capstone_docs_per_sec","value":${total / wallS}%.1f,"unit":"docs/sec","docs":$total,"landed":$landed,"lsh_survivors":$survivors,"vec_rows":$vecRows,"img_survivors":$imgSurvivors,"sem_survivors":$semSurvivors,"wall_s":$wallS%.1f,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

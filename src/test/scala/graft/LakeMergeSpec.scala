@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.LakeMerge
+import graft.operators.{Checkpoints, LakeMerge}
 
 /** Cross-partition duplicate handling and checkpoint modes of the lake
   * merge (the per-partition SCOPE note on [[LakeMerge.mergeWrite]]).
@@ -91,7 +91,7 @@ class LakeMergeSpec extends SparkSpec {
     val ckpt = tmp("ckpt")
     val prevDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(ckpt)
-    spark.conf.set(LakeMerge.ReliableCheckpointConf, "true")
+    spark.conf.set(Checkpoints.ReliableCheckpointConf, "true")
     try {
       LakeMerge.mergeWrite(spark, docs(
         ("A", "2025-05-01 10:00:00", "2025-05-01 11:00:00", "a v1"),
@@ -99,7 +99,7 @@ class LakeMergeSpec extends SparkSpec {
       LakeMerge.mergeWrite(spark, docs(
         ("A", "2025-05-01 10:00:00", "2025-05-01 12:00:00", "a v2")), lake)
     } finally {
-      spark.conf.unset(LakeMerge.ReliableCheckpointConf)
+      spark.conf.unset(Checkpoints.ReliableCheckpointConf)
       prevDir.foreach(spark.sparkContext.setCheckpointDir)
     }
     val all = LakeMerge.readLake(spark, lake).orderBy("_id")

@@ -8,7 +8,7 @@ import graft.operators.SentimentRunner
 /** [[MiniOnnx]] — a REAL ONNX protobuf model file (written here to the
   * public wire format, byte-for-byte) must parse, execute with real
   * matrix arithmetic, and drive the production scoring core
-  * (`OnnxSentimentClassifier.scoreBatch`) to golden labels, including
+  * (`MiniOnnxSentimentClassifier.scoreBatch`) to golden labels, including
   * through the distributed [[SentimentRunner.label]] path.
   */
 object MiniOnnxSpec extends Serializable {
@@ -183,7 +183,7 @@ class MiniOnnxSpec extends SparkSpec {
     assert(got.take(4).forall(r => r._2 > 1.0 / 3 && r._2 < 1.0))
     // softmax argmax on the hand-computed logits for row 0:
     // [2, 0.5+0.2*0.3, -2] → positive with p = e^2 / (e^2+e^0.56+e^-2)
-    val probs = graft.operators.OnnxSentimentClassifier.softmax(
+    val probs = MiniOnnxSentimentClassifier.softmax(
       Array(2f, 0.56f, -2f))
     assert(math.abs(got.head._2 - probs(0)) < 1e-9)
   }

@@ -8,7 +8,7 @@ import graft.sources.MongoDocStore
   * what CAN be pinned is everything that carries the reference's
   * semantics — the collection routing (`utils.py:567-592`,
   * `resilient_scraper.py:1061-1068`) — plus the dependency gate's error
-  * contract, mirroring OnnxSentimentClassifier's policy.
+  * contract.
   */
 class MongoDocStoreSpec extends SparkSpec {
 

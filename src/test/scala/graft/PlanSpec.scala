@@ -239,8 +239,8 @@ class PlanSpec extends SparkSpec {
     // bounded arrival against unbounded history), so the bounded side
     // broadcasts EXPLICITLY under a measured cap — AQE alone converts a
     // join only after both map sides have materialized, i.e. after the
-    // history-sized exchange already wrote (the LshFrontierProbe
-    // lesson). These arms pin the treated plan per store: a write-path
+    // history-sized exchange already wrote (SURVEY §18, "Unequal-join
+    // broadcasts on the arrival path"). These arms pin the treated plan per store: a write-path
     // plan must carry a BroadcastHashJoin on the store-probe key. Runs
     // against a SEEDED store (batch 1) — against an empty store AQE
     // folds the join away entirely.
@@ -265,7 +265,7 @@ class PlanSpec extends SparkSpec {
     }
     locally { // image store: band probe of the store scan broadcasts batch keys
       val store = java.nio.file.Files.createTempDirectory("planimgstore").toString
-      val imgs = graft.tools.ImageDedupBench.corpus(spark, 24L)
+      val imgs = graft.tools.StoreBench.Image.corpus(spark, 24L)
       graft.operators.IncrementalImageDedup.dhashDedupBatch(
         spark, imgs.filter($"media_id" < 12), $"media_id", $"payload",
         store, batchId = 0L).collect()

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.LexiconSentiment
-import graft.operators.{LexiconClassifier, OnnxSentimentClassifier, SentimentRunner}
+import graft.ml.MiniOnnxSentimentClassifier
+import graft.operators.{LexiconClassifier, SentimentRunner}
 
 class SentimentRunnerSpec extends SparkSpec {
 
@@ -58,9 +59,8 @@ class SentimentRunnerSpec extends SparkSpec {
 
   test("ONNX scoring core through a stubbed runtime: batching, truncation, label order, fallback") {
     // the seam: scoreBatch carries every piece of classifyBatch EXCEPT the
-    // reflective model call — so the zero-jar container still executes the
-    // batching / 512-char truncation / softmax / label-argmax / fallback
-    // logic the production path will run
+    // model call — so a stub exercises the batching / 512-char truncation /
+    // softmax / label-argmax / fallback logic every model path runs
     val calls = scala.collection.mutable.ListBuffer.empty[Seq[String]]
     def fake(batch: Seq[String]): Seq[Array[Float]] = {
       calls += batch
@@ -72,7 +72,7 @@ class SentimentRunnerSpec extends SparkSpec {
     }
     val labels = Seq("positive", "neutral", "negative")
     val texts = Seq("pos one", null, "neg two", "", "meh", "pos " + "x" * 600)
-    val out = OnnxSentimentClassifier.scoreBatch(texts, labels, fake)
+    val out = MiniOnnxSentimentClassifier.scoreBatch(texts, labels, fake)
     // exactly one result per input, in input order
     assert(out.size === texts.size)
     // null/empty rows never reach the runtime; the live rows share ONE call
@@ -90,35 +90,21 @@ class SentimentRunnerSpec extends SparkSpec {
     assert(math.abs(out(0)._2 - e4 / (e4 + e1 + 1.0)) < 1e-12)
     // an all-fallback batch never invokes the runtime at all
     calls.clear()
-    assert(OnnxSentimentClassifier.scoreBatch(Seq(null, ""), labels, fake) ===
+    assert(MiniOnnxSentimentClassifier.scoreBatch(Seq(null, ""), labels, fake) ===
       Seq(("NEUTRAL", 0.0), ("NEUTRAL", 0.0)))
     assert(calls.isEmpty)
     // a runtime that drops a row is a hard error, not a misaligned column
     intercept[IllegalArgumentException] {
-      OnnxSentimentClassifier.scoreBatch(Seq("a", "b"), labels,
+      MiniOnnxSentimentClassifier.scoreBatch(Seq("a", "b"), labels,
         b => b.take(1).map(_ => Array(1f, 0f, 0f)))
     }
     // a label vocabulary that disagrees with the logit width is a hard error
     intercept[IllegalArgumentException] {
-      OnnxSentimentClassifier.scoreBatch(Seq("a"), Seq("x", "y"),
+      MiniOnnxSentimentClassifier.scoreBatch(Seq("a"), Seq("x", "y"),
         b => b.map(_ => Array(1f, 0f, 0f)))
     }
-  }
-
-  test("ONNX classifier: dependency-gated with a clear error; softmax is a distribution") {
-    // this container carries neither ai.onnxruntime nor DJL tokenizers —
-    // the reflective gate must report that, and a classify attempt must
-    // name the missing jars instead of NoClassDefFounding mid-batch
-    assert(!OnnxSentimentClassifier.isAvailable)
-    val clf = OnnxSentimentClassifier("/models/m.onnx", "/models")
-    // reference fallback contract holds even before the runtime gate:
-    // null/empty short-circuit to the verbatim ('NEUTRAL', 0.0) without
-    // touching it
-    assert(clf.classifyBatch(Seq(null, "")) == Seq(("NEUTRAL", 0.0), ("NEUTRAL", 0.0)))
-    val e = intercept[IllegalStateException] { clf.classifyBatch(Seq("bagus sekali")) }
-    assert(e.getMessage.contains("onnxruntime") && e.getMessage.contains("classpath"))
-    // the scoring math that runs once the runtime is present
-    val p = OnnxSentimentClassifier.softmax(Array(2.0f, 1.0f, 0.1f))
+    // softmax is a distribution
+    val p = MiniOnnxSentimentClassifier.softmax(Array(2.0f, 1.0f, 0.1f))
     assert(math.abs(p.sum - 1.0) < 1e-12 && p(0) > p(1) && p(1) > p(2))
     assert(math.abs(p(0) - 0.659001138885) < 1e-9)
   }
