@@ -89,6 +89,47 @@ object Bench {
     */
   val PlanHashVersion = 3
 
+  /** The one set of string masks for the JVM- and session-global
+    * counters a plan string prints: lambda class names and LambdaVariable
+    * ids always; with `sessionIds` also `[plan_id=N]`, RDD ids,
+    * `<File>.scala:<line>` call sites, expression ids and lambda variable
+    * names, which a canonicalized plan does not print. [[normalizedPlan]] leaves
+    * `sessionIds` off, so its output — and [[PlanHashVersion]] — is
+    * unchanged; [[graft.tools.Probe.dump]] turns it on, so two dumps of
+    * one query are byte-identical.
+    */
+  def maskIds(plan: String, sessionIds: Boolean = false): String = {
+    val lambdas = plan
+      .replaceAll("Lambda\\$\\d+", "Lambda")
+      .replaceAll("/0x[0-9a-f]+", "")
+      .replaceAll("@[0-9a-f]+", "")
+      // LambdaVariable ids (the last arg of `lambdavariable(name, type,
+      // nullable, id)`) come from a JVM-GLOBAL atomic counter that
+      // advances with every object-encoder the session constructs —
+      // canonicalization normalizes ExprIds but not these. Root cause of
+      // the r16 q_audio_energy drift (the only registered query with a
+      // MapPartitions/mapobjects encoder in its plan): same commit, two
+      // windows, ids 2 vs 6 purely from suite position. The spaced
+      // `, true|false, N)` anchor cannot fire inside a DataType print
+      // (those join with comma-no-space), so the mask is exact.
+      .replaceAll(
+        "(lambdavariable\\(\\w+, .+?, (?:true|false)), \\d+\\)", "$1, L)")
+    // counters whose identity matters (which attribute, which lambda
+    // variable) are renumbered by first appearance rather than erased
+    def renumber(s: String, id: scala.util.matching.Regex): String = {
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      id.replaceAllIn(s, m =>
+        m.group(1) + seen.getOrElseUpdate(m.matched, seen.size + 1))
+    }
+    if (!sessionIds) lambdas
+    else renumber(renumber(
+      lambdas
+        .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=N]")
+        .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+        .replaceAll("(\\w+\\.scala):\\d+", "$1:N"),
+      "(#)\\d+".r), "(lambda \\w+?_)\\d+".r)
+  }
+
   def normalizedPlan(df: DataFrame, maskLiterals: Boolean = false): String = {
     import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -125,23 +166,9 @@ object Bench {
         case x => x
       }
     }
-    df.queryExecution.analyzed
+    maskIds(df.queryExecution.analyzed
       .canonicalized.transformAllExpressions { case e => norm(e) }
-      .toString
-      .replaceAll("Lambda\\$\\d+", "Lambda")
-      .replaceAll("/0x[0-9a-f]+", "")
-      .replaceAll("@[0-9a-f]+", "")
-      // LambdaVariable ids (the last arg of `lambdavariable(name, type,
-      // nullable, id)`) come from a JVM-GLOBAL atomic counter that
-      // advances with every object-encoder the session constructs —
-      // canonicalization normalizes ExprIds but not these. Root cause of
-      // the r16 q_audio_energy drift (the only registered query with a
-      // MapPartitions/mapobjects encoder in its plan): same commit, two
-      // windows, ids 2 vs 6 purely from suite position. The spaced
-      // `, true|false, N)` anchor cannot fire inside a DataType print
-      // (those join with comma-no-space), so the mask is exact.
-      .replaceAll(
-        "(lambdavariable\\(\\w+, .+?, (?:true|false)), \\d+\\)", "$1, L)")
+      .toString)
       // partition WIDTHS are an environment knob (defaultParallelism /
       // SPARK_GRAFT_CPUS reaches Repartition nodes through Tables.wide
       // and operator repartitions), not declared computation — measured:

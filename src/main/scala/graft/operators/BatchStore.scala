@@ -5,16 +5,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The shared crash-safety discipline of the append-only `batch=<id>`
-  * partition stores ([[IncrementalDedup]], [[IncrementalSegmentDedup]],
-  * [[IncrementalImageDedup]], [[IncrementalSemDedup]], the
-  * [[Retrieval]] index trees and [[IvfIndex]]'s cells tree). Until round
-  * 10 each store re-implemented batch enumeration, replay exclusion, the
-  * `__next` swap, and compaction independently — four copies of the same
-  * fixed-point argument, which is exactly how the round-9 store shipped
-  * with an implicit (non-structural) replay guarantee. Single-sourcing
-  * the invariants here means the next store gets them by construction:
+/** The one commit path for persistent writes, and the shared layout
+  * discipline of the append-only `batch=<id>` partition stores
+  * ([[IncrementalDedup]], [[IncrementalSegmentDedup]],
+  * [[IncrementalImageDedup]], [[IncrementalSemDedup]], the [[Retrieval]]
+  * index trees and [[IvfIndex]]'s cells tree). [[LakeMerge]], the curated
+  * store of [[graft.streaming.StreamingIngest]] and
+  * [[graft.pipeline.MonthlyRollup]] commit through the same swap.
   *
+  *  - '''Commit''' ([[stage]], [[commit]]): a writer writes the
+  *    replacement directories into a stage beside the root
+  *    (`<root>__next`, which no read of the root can see), then commits a
+  *    [[Swap]]: the directories under the root to replace from the stage
+  *    and the ones to drop (`""` names the root itself). The commit
+  *    writes ONE manifest (`<root>__manifest`, published by rename, so it
+  *    is whole or absent) after the stage write has committed, then rolls
+  *    it forward under `swapLock`: delete + rename per replaced
+  *    directory, delete per dropped one, then the stage and the manifest
+  *    go. Every step is idempotent given the manifest.
+  *  - '''Adopt on read''' ([[heal]]): every reader and writer heals on
+  *    entry. A manifest means the commit was decided: roll it forward, so
+  *    a crash anywhere after the manifest lands reads as the new content.
+  *    A stage WITHOUT a manifest is never adopted — it is a write that
+  *    did not finish (a crash mid-write leaves `__next/_temporary`), so
+  *    the old content stays live and the next [[stage]] clears it.
   *  - '''Layout''': one directory per producer batch, `batch=<id>`,
   *    written with mode=overwrite so a checkpoint-replayed micro-batch
   *    rewrites its own partition instead of appending duplicates.
@@ -37,32 +51,22 @@ import org.apache.spark.sql.types.StructType
   *    id <= `upToBatch` into a single partition under the LARGEST
   *    EXISTING id <= `upToBatch` (a fresh id would collide with a
   *    future producer batch, whose overwrite would then replace the
-  *    consolidated history wholesale). SAFETY CONTRACT: only compact
-  *    batch ids the producer's checkpoint has committed past —
-  *    foreachBatch replays at most the last uncommitted batch, so
-  *    `upToBatch = lastBatchId - 1` is always safe while a stream is
-  *    live. Row content is untouched; only physical layout changes.
-  *  - '''Crash-safe swap''': the replacement tree is fully written
-  *    BESIDE the live one (`<path>__next`), then swapped
-  *    (delete + rename). A crash mid-write leaves the live store
-  *    untouched; a crash between delete and rename strands the only
-  *    copy at `__next`, which [[adoptNext]] heals — every reader calls
-  *    it on entry, so the store self-heals on first touch.
+  *    consolidated history wholesale). The swap replaces that one
+  *    directory and drops the folded ones; later batches are never
+  *    touched. SAFETY CONTRACT: only compact batch ids the producer's
+  *    checkpoint has committed past — foreachBatch replays at most the
+  *    last uncommitted batch, so `upToBatch = lastBatchId - 1` is always
+  *    safe while a stream is live. Row content is untouched; only
+  *    physical layout changes.
   */
 private[graft] object BatchStore {
 
-  /** JVM-wide mutex for the swap/adopt TRANSITIONS (never held during
-    * tree writes). A serving JVM runs reader threads (whose listBatches
-    * self-heal calls [[adoptNext]]) concurrently with the maintenance
-    * thread's [[completeSwap]]; unserialized, the reader's heal races
-    * the in-flight swap — the worst interleave (reader observes `p`
-    * empty, swap renames `__next` into `p`, reader's stale clear then
-    * DELETES the freshly-swapped live tree) loses the store. The lock
-    * removes every same-JVM interleave; the rename-failure tolerance
-    * inside both methods additionally accepts the benign cross-JVM
-    * outcome ("someone else completed this exact transition"), and
-    * cross-JVM WRITE discipline remains the documented single-writer
-    * contract.
+  /** JVM-wide mutex for the roll-forward (never held during stage
+    * writes). A serving JVM runs reader threads (whose [[heal]] may roll
+    * a manifest forward) concurrently with the maintenance thread's
+    * [[commit]]; the lock makes each roll-forward one step for every
+    * other thread of the JVM. Across JVMs a heal is a write, under the
+    * documented single-writer contract.
     */
   private val swapLock = new Object
 
@@ -72,75 +76,92 @@ private[graft] object BatchStore {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Self-heal a crashed [[compact]] swap: a crash between the old
-    * tree's delete and the rename leaves the ONLY copy at `__next` —
-    * adopt it before any read or write touches the store.
-    *
-    * NON-DESTRUCTIVE by construction: the heal never `delete`s a path
-    * that could hold data. The observed-empty live dir is renamed ASIDE
-    * (renames move content atomically with the dir), re-verified empty,
-    * and only then discarded — so a completeSwap in a DIFFERENT JVM that
-    * lands `__next` into the live path between our emptiness check and
-    * the clear can no longer be destroyed by the stale clear (the old
-    * delete+rename interleave lost both copies: reader sees live empty,
-    * cross-JVM swap renames `__next` in, reader's delete removes the
-    * freshly-swapped tree). If the re-verify finds the aside tree
-    * non-empty we raced exactly that swap: restore it and return — the
-    * swap already produced the state we wanted. The JVM-local swapLock
-    * still serializes same-JVM transitions; this makes the cross-JVM
-    * interleave merely racy, never lossy. A crash mid-heal strands at
-    * worst an EMPTY `__aside` dir (harmless; cleared on the next heal).
+  /** The stage beside `root`: a replacement directory is written under
+    * `dir` at the relative path it takes under the root.
     */
-  def adoptNext(fs: FileSystem, p: Path): Unit = swapLock.synchronized {
-    val next = new Path(p.toString + "__next")
-    val live = fs.exists(p) && fs.listStatus(p).nonEmpty
-    if (!live && fs.exists(next)) {
-      if (fs.exists(p)) {
-        val aside = new Path(p.toString + "__aside")
-        // a stray aside from a crashed heal is empty by construction —
-        // verify before clearing it all the same
-        if (fs.exists(aside)) {
-          require(fs.listStatus(aside).isEmpty,
-            s"BatchStore: non-empty $aside — a heal moved data aside and " +
-              "crashed before restoring; restore or inspect it manually")
-          fs.delete(aside, true)
-        }
-        if (fs.rename(p, aside)) {
-          if (fs.listStatus(aside).nonEmpty) {
-            // raced a cross-JVM completeSwap: the tree we moved aside is
-            // the freshly-swapped LIVE store — put it back, adoption done
-            require(fs.rename(aside, p),
-              s"BatchStore: failed to restore raced live tree $aside to $p")
-            return
-          }
-          fs.delete(aside, true) // verified empty — safe to discard
-        } else {
-          // the move-aside can only lose to ANOTHER HEALER (cross-JVM;
-          // swapLock covers same-JVM) having taken the empty tree itself.
-          // Two benign shapes, by how far the winner got:
-          if (fs.exists(p)) {
-            // winner completed the WHOLE heal already (adopted __next
-            // into the live path): nothing left to do — but a rename
-            // failure with a still-EMPTY live tree present is a real
-            // fault (nobody could have raced it) and must surface
-            require(fs.listStatus(p).nonEmpty && !fs.exists(next),
-              s"BatchStore: failed to move empty $p aside before adopting $next")
-            return
-          }
-          // winner moved the empty tree aside but has not adopted yet:
-          // fall through — the adoption below tolerates losing THAT
-          // race too (live tree present, __next consumed, is success)
-        }
-      }
-      // a failed adoption must surface, not fall through to an
-      // empty-store read that silently forgets the whole history — but a
-      // rename that LOST to another party having completed the same
-      // adoption (live tree present, __next consumed) is success
-      if (!fs.rename(next, p)) {
-        require(fs.exists(p) && fs.listStatus(p).nonEmpty && !fs.exists(next),
-          s"BatchStore: failed to adopt $next as $p")
+  final case class Stage(fs: FileSystem, root: Path) {
+    val dir: Path = new Path(root.toString + "__next")
+    def at(rel: String): Path = if (rel.isEmpty) dir else new Path(dir, rel)
+  }
+
+  /** A staged commit: `replace` moves `stage.at(rel)` to `root/rel`,
+    * `drop` deletes `root/rel`; `""` names the root itself.
+    */
+  final case class Swap(stage: Stage, replace: Seq[String], drop: Seq[String] = Nil)
+
+  private def manifest(root: Path): Path = new Path(root.toString + "__manifest")
+  private def manifestTmp(root: Path): Path = new Path(root.toString + "__manifest.tmp")
+  private def under(root: Path, rel: String): Path =
+    if (rel.isEmpty) root else new Path(root, rel)
+  private def clear(fs: FileSystem, p: Path): Unit =
+    if (fs.exists(p))
+      require(fs.delete(p, true) || !fs.exists(p), s"BatchStore: failed to delete $p")
+
+  /** Heal `path` and clear a stage an unfinished write left behind;
+    * returns the empty stage to write into.
+    */
+  def stage(spark: SparkSession, path: String): Stage = {
+    val (fs, root) = fsPath(spark, path)
+    heal(fs, root)
+    val st = Stage(fs, root)
+    clear(fs, st.dir)
+    clear(fs, manifestTmp(root))
+    st
+  }
+
+  /** Publish the swap's manifest and roll it forward. */
+  def commit(sw: Swap): Unit = swapLock.synchronized {
+    publish(sw)
+    rollForward(sw.stage.fs, sw.stage.root)
+  }
+
+  /** The commit point: the manifest is written beside the root and
+    * renamed into place, so a reader sees it whole or not at all.
+    */
+  private[graft] def publish(sw: Swap): Unit = {
+    val fs = sw.stage.fs
+    val tmp = manifestTmp(sw.stage.root)
+    val out = fs.create(tmp, true)
+    try out.write((sw.replace.map("+" + _) ++ sw.drop.map("-" + _))
+      .map(_ + "\n").mkString.getBytes("UTF-8"))
+    finally out.close()
+    require(fs.rename(tmp, manifest(sw.stage.root)),
+      s"BatchStore: failed to publish the manifest of ${sw.stage.root}")
+  }
+
+  /** Adopt on read: roll forward a commit whose manifest landed. */
+  def heal(fs: FileSystem, root: Path): Unit = swapLock.synchronized {
+    if (fs.exists(manifest(root))) rollForward(fs, root)
+  }
+
+  private def rollForward(fs: FileSystem, root: Path): Unit = {
+    val st = Stage(fs, root)
+    val in = fs.open(manifest(root))
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.filter(_.startsWith("+")).map(_.drop(1)).foreach { rel =>
+      val (src, dst) = (st.at(rel), under(root, rel))
+      // a replaced directory whose stage copy is gone was moved already
+      if (fs.exists(src)) {
+        clear(fs, dst)
+        if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
+        require(fs.rename(src, dst), s"BatchStore: failed to move $src to $dst")
       }
     }
+    lines.filter(_.startsWith("-")).foreach(l => clear(fs, under(root, l.drop(1))))
+    // what is left of the stage is the write job's _SUCCESS marker
+    clear(fs, st.dir)
+    clear(fs, manifest(root))
+  }
+
+  /** Delete a store for a fresh build: the root, and a stage or manifest
+    * a crashed commit of the previous generation left beside it (a
+    * manifest kept would roll forward onto the new tree).
+    */
+  def reset(spark: SparkSession, path: String): Unit = {
+    val (fs, root) = fsPath(spark, path)
+    Seq(manifest(root), manifestTmp(root), Stage(fs, root).dir, root).foreach(clear(fs, _))
   }
 
   /** The COMMITTED subset of [[listBatches]]: batch dirs carrying the
@@ -231,7 +252,7 @@ private[graft] object BatchStore {
     * and raises loudly.
     */
   def listBatches(fs: FileSystem, p: Path): Seq[(Long, Path)] = {
-    adoptNext(fs, p)
+    heal(fs, p)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
@@ -298,7 +319,7 @@ private[graft] object BatchStore {
 
   /** Consolidate every `batch=` partition with id <= `upToBatch` into a
     * single partition of `targetFiles` files under the largest existing
-    * id <= `upToBatch`, preserving later partitions verbatim. A store
+    * id <= `upToBatch`; later partitions stay as they are. A store
     * fed hourly for months carries thousands of tiny partitions whose
     * listing and open costs come to dominate every batch's read — the
     * standard small-files decay of any append-only layout.
@@ -315,10 +336,9 @@ private[graft] object BatchStore {
     * an optimal serving layout (parquet files stay splittable, so a
     * large cell in one file still reads in parallel). `merge`
     * post-processes the consolidated rows (e.g. summing additive
-    * per-batch statistics rows); later batches are copied verbatim,
-    * never merged.
+    * per-batch statistics rows).
     *
-    * See the object doc for the SAFETY CONTRACT and the `__next` swap.
+    * See the object doc for the SAFETY CONTRACT and the commit.
     */
   def compact(
       spark: SparkSession, path: String, upToBatch: Long,
@@ -328,57 +348,28 @@ private[graft] object BatchStore {
       sortCols: Seq[String] = Nil): Unit =
     compactPrepare(spark, path, upToBatch, targetFiles, partitionCols, merge,
         dataSchema, sortCols)
-      .foreach(completeSwap)
+      .foreach(commit)
 
-  /** A fully-staged replacement tree awaiting its [[completeSwap]]. */
-  final case class PendingSwap(fs: FileSystem, live: Path, next: Path)
-
-  /** Phase 1 of [[compact]]: write the consolidated replacement tree
-    * BESIDE the live one (`__next`) and return the pending swap, or None
-    * when there is nothing to compact. Split from the swap so a
-    * MULTI-TREE store ([[Retrieval]]'s postings + stats) can stage every
-    * tree first and then swap them back-to-back — the cross-tree window
-    * in which a serving read can pin one tree's old snapshot and the
-    * other's new one shrinks from a full consolidation write (seconds)
-    * to two renames (microseconds); the serving retry absorbs it. Crash
-    * before [[completeSwap]] leaves a stale `__next` beside an untouched
-    * live tree — harmless; the next prepare clears it.
+  /** Phase 1 of [[compact]]: write the consolidated partition into the
+    * stage and return its [[Swap]], or None when there is nothing to
+    * compact. Split from the [[commit]] so a MULTI-TREE store
+    * ([[Retrieval]]'s postings + stats) can stage every tree first and
+    * then commit them back-to-back — the cross-tree window in which a
+    * serving read can pin one tree's old snapshot and the other's new one
+    * shrinks from a full consolidation write (seconds) to two
+    * roll-forwards (milliseconds); the serving retry absorbs it.
     */
   def compactPrepare(
       spark: SparkSession, path: String, upToBatch: Long,
       targetFiles: Int = 8, partitionCols: Seq[String] = Nil,
       merge: DataFrame => DataFrame = identity,
       dataSchema: Option[StructType] = None,
-      sortCols: Seq[String] = Nil): Option[PendingSwap] = {
+      sortCols: Seq[String] = Nil): Option[Swap] = {
     val (fs, p) = fsPath(spark, path)
-    val batches = listBatches(fs, p)
-    if (!batches.exists(_._1 <= upToBatch)) return None
-    val target = batches.map(_._1).filter(_ <= upToBatch).max
-    val next = new Path(path + "__next")
-    require(fs.delete(next, true) || !fs.exists(next),
-      s"BatchStore.compact: failed to clear stale $next")
-    // `sortCols` keeps a consolidated file's rows clustered on the
-    // caller's data-column key (e.g. the bucketed cells layout stores
-    // `cell` INSIDE `cbk=` files): the sort costs nothing extra — the
-    // shuffle is already paid — and preserves the tight per-row-group
-    // min/max stats the caller's key-isin filters skip on.
-    def write(df: DataFrame, out: String): Unit =
-      if (partitionCols.nonEmpty) {
-        val rep = df.repartition(partitionCols.map(col): _*)
-        val clustered =
-          if (sortCols.isEmpty) rep
-          else rep.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-        clustered.write.partitionBy(partitionCols: _*).parquet(out)
-      } else {
-        // sortCols clusters the coalesced files too — a flat store's
-        // row-group min/max skip key deserves the same treatment as a
-        // partitioned one's (and silently ignoring the parameter here
-        // would hand a future caller unclustered files with no error)
-        val co = df.coalesce(targetFiles)
-        val clustered =
-          if (sortCols.isEmpty) co else co.sortWithinPartitions(sortCols.map(col): _*)
-        clustered.write.parquet(out)
-      }
+    val folded = listBatches(fs, p).filter(_._1 <= upToBatch)
+    if (folded.isEmpty) return None
+    val target = s"batch=${folded.map(_._1).max}"
+    val st = stage(spark, path)
     // `dataSchema` (the store row layout WITHOUT the batch column) lets a
     // tree whose committed partitions can ALL be file-less — a nested
     // store where an empty batch's partitionBy write emits only _SUCCESS,
@@ -390,51 +381,29 @@ private[graft] object BatchStore {
           "batch", org.apache.spark.sql.types.LongType)))
       case None => spark.read
     }
-    write(
-      merge(rootRead.parquet(path)
-        .filter(col("batch") <= upToBatch).drop("batch")),
-      s"$next/batch=$target")
-    batches.filter(_._1 > upToBatch).foreach { case (b, bp) =>
-      // a torn append can leave a FILE-LESS batch dir above the range
-      // (dir created, no task file landed before the crash): there is
-      // nothing to consolidate, but the dir itself must survive the swap
-      // — it is the stream-replay overwrite target, and callers like
-      // compactIndex's pre-flight key divergence detection on its
-      // presence. Recreate it empty instead of schema-inferring nothing —
-      // and when the source dir carries the job-commit _SUCCESS marker
-      // (a legitimately committed zero-row batch, not a torn append),
-      // recreate the marker too: dropping it would silently demote the
-      // batch out of committedBatches, changing what serving reads and
-      // readPriorBands observe.
-      val files = fs.listFiles(bp, true)
-      var hasData = false
-      while (!hasData && files.hasNext) {
-        val n = files.next().getPath.getName
-        hasData = !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (hasData) write(spark.read.parquet(s"$path/batch=$b"), s"$next/batch=$b")
-      else {
-        fs.mkdirs(new Path(s"$next/batch=$b"))
-        if (fs.exists(new Path(bp, "_SUCCESS")))
-          fs.create(new Path(s"$next/batch=$b/_SUCCESS"), true).close()
-      }
+    val df = merge(rootRead.parquet(path)
+      .filter(col("batch") <= upToBatch).drop("batch"))
+    val out = st.at(target).toString
+    // `sortCols` keeps a consolidated file's rows clustered on the
+    // caller's data-column key (e.g. the bucketed cells layout stores
+    // `cell` INSIDE `cbk=` files): the sort costs nothing extra — the
+    // shuffle is already paid — and preserves the tight per-row-group
+    // min/max stats the caller's key-isin filters skip on.
+    if (partitionCols.nonEmpty) {
+      val rep = df.repartition(partitionCols.map(col): _*)
+      val clustered =
+        if (sortCols.isEmpty) rep
+        else rep.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
+      clustered.write.partitionBy(partitionCols: _*).parquet(out)
+    } else {
+      // sortCols clusters the coalesced files too — a flat store's
+      // row-group min/max skip key deserves the same treatment as a
+      // partitioned one's
+      val co = df.coalesce(targetFiles)
+      val clustered =
+        if (sortCols.isEmpty) co else co.sortWithinPartitions(sortCols.map(col): _*)
+      clustered.write.parquet(out)
     }
-    Some(PendingSwap(fs, p, next))
-  }
-
-  /** Phase 2 of [[compact]]: the swap. A crash between delete and rename
-    * leaves only `__next`, which [[adoptNext]] recovers on the next
-    * touch; a FAILED call must surface, not serve a half-swapped store —
-    * except the benign race where a reader's heal completed this exact
-    * transition (live present, `__next` consumed), which is success.
-    */
-  def completeSwap(sw: PendingSwap): Unit = swapLock.synchronized {
-    require(sw.fs.delete(sw.live, true),
-      s"BatchStore.compact: failed to delete old ${sw.live}")
-    if (!sw.fs.rename(sw.next, sw.live)) {
-      require(sw.fs.exists(sw.live) && sw.fs.listStatus(sw.live).nonEmpty &&
-          !sw.fs.exists(sw.next),
-        s"BatchStore.compact: failed to swap ${sw.next} into ${sw.live}")
-    }
+    Some(Swap(st, Seq(target), folded.map(_._2.getName).filter(_ != target)))
   }
 }

@@ -178,13 +178,6 @@ object IncrementalDedup {
         .parquet(missing.map(_._2.toString): _*)))
   }
 
-  /** Self-heal for [[compactStore]]'s swap — the [[BatchStore]] family
-    * discipline (single-sourced there since round 10).
-    */
-  private[operators] def adoptNext(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): Unit =
-    BatchStore.adoptNext(fs, p)
-
   /** Suppress one batch against the store at `storePath`, then persist
     * the labeled batch into `batch=<batchId>`. Returns the labeled batch
     * (doc_id, text, rep_id, survivor). See the object doc for semantics.
@@ -526,8 +519,8 @@ object IncrementalDedup {
 
   /** Read a store's accepted (surviving) corpus. */
   def survivors(spark: SparkSession, storePath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    adoptNext(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    val (fs, p) = BatchStore.fsPath(spark, storePath)
+    BatchStore.heal(fs, p)
     spark.read.parquet(storePath)
       .filter(col("survivor"))
       .select(col("doc_id"), col("text"))
@@ -550,18 +543,17 @@ object IncrementalDedup {
     * so suppression semantics before and after compaction are equal
     * (spec-pinned).
     *
-    * Crash safety: the replacement store is fully written BESIDE the
-    * live one (`__next`), then swapped (delete + rename). A crash
-    * mid-write leaves the live store untouched; a crash between delete
-    * and rename strands the only copy at `__next`, which every reader
-    * ([[lshDedupBatch]], [[survivors]], this method) adopts on entry.
+    * Crash safety: the [[BatchStore]] commit — the consolidated
+    * partition is staged beside the store and swapped in through a
+    * manifest that every reader ([[lshDedupBatch]], [[survivors]], this
+    * method) rolls forward on entry.
     */
   def compactStore(
       spark: SparkSession, storePath: String, upToBatch: Long,
       targetFiles: Int = 8): Unit = {
     // two-tree store: stage BOTH replacement trees fully, then swap
     // back-to-back (the Retrieval.compactIndex discipline) so a
-    // concurrent reader's pin can straddle at most the two renames.
+    // concurrent reader's pin can straddle at most the two roll-forwards.
     // The bucket layout survives compaction (partitionCols), keeping
     // the batch-bucket prune valid over consolidated history.
     //
@@ -608,7 +600,7 @@ object IncrementalDedup {
     // file-less (all-short batches), leaving zero footers to infer from
     val idx = BatchStore.compactPrepare(spark, idxRoot, upToBatch,
       partitionCols = Seq("bucket"), dataSchema = Some(bandIndexSchema))
-    main.foreach(BatchStore.completeSwap)
-    idx.foreach(BatchStore.completeSwap)
+    main.foreach(BatchStore.commit)
+    idx.foreach(BatchStore.commit)
   }
 }

@@ -187,9 +187,8 @@ object IncrementalImageDedup {
 
   /** The store's accepted (surviving) media ids. */
   def survivors(spark: SparkSession, storePath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    IncrementalDedup.adoptNext(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    val (fs, p) = BatchStore.fsPath(spark, storePath)
+    BatchStore.heal(fs, p)
     spark.read.parquet(storePath)
       .filter(col("survivor"))
       .select(col("media_id"))

@@ -108,9 +108,7 @@ object IncrementalSemDedup {
           src, col("__id"), col("__e"), pqM, pqKs, refineIterations,
           seedValue, portableSample, normalize = true)
       else Seq.empty
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    BatchStore.reset(spark, storePath)
     spark.createDataFrame(mat.zipWithIndex.map { case (c, i) => (i, c) })
       .toDF("cell", "centroid")
       .repartition(1)
@@ -300,7 +298,7 @@ object IncrementalSemDedup {
   /** The store's accepted (surviving) items. */
   def survivors(spark: SparkSession, storePath: String): DataFrame = {
     val (fs, p) = BatchStore.fsPath(spark, s"$storePath/rows")
-    BatchStore.adoptNext(fs, p)
+    BatchStore.heal(fs, p)
     spark.read.parquet(s"$storePath/rows")
       .filter(col("survivor"))
       .select(col("vec_id"))

@@ -75,9 +75,7 @@ object IvfIndex {
       .write.mode("overwrite").parquet(s"$path/meta")
     // a fresh build owns the whole cells tree: clear stale batches from a
     // previous index generation before writing batch=0
-    val cellsPath = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val fs = cellsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cellsPath)) fs.delete(cellsPath, true)
+    BatchStore.reset(spark, s"$path/cells")
     writeBatch(assign(corpus, id, emb, mat, replicas), path, batchId = 0L)
   }
 
@@ -266,16 +264,13 @@ private[operators] object IvfCells {
       .parquet(batchDir)
 
   /** Resolve the readable cells tree at `path`, healing a crashed
-    * [[compact]] first: a crash between the old tree's delete and the
-    * rename leaves the ONLY copy at `cells__next`, and until round 9 only
-    * the next compact() call adopted it — every serving read (probe /
-    * readIndex) failed on the missing path in the meantime. All read
-    * paths now resolve through here, so the store self-heals on first
+    * [[compact]] or [[migrate]] commit first ([[BatchStore.heal]]): all
+    * read paths resolve through here, so the store self-heals on first
     * touch. Returns the cells path string for `spark.read.parquet`.
     */
   def resolveCells(spark: SparkSession, path: String): String = {
     val (fs, cells) = BatchStore.fsPath(spark, s"$path/cells")
-    BatchStore.adoptNext(fs, cells)
+    BatchStore.heal(fs, cells)
     assertCbkLayout(fs, cells)
     cells.toString
   }
@@ -307,77 +302,26 @@ private[operators] object IvfCells {
   }
 
   /** One-time in-place migration of a legacy `cell=`-partitioned cells
-    * tree to the bucketed `cbk=` layout: every batch is rewritten
-    * bucketed (legacy batches recover `cell` from their partition
-    * directories; already-bucketed batches pass through re-bucketed,
-    * so a MIXED tree — legacy build + crashed post-upgrade append —
-    * heals too), staged beside the live tree and swapped in with the
-    * [[BatchStore.completeSwap]] crash contract (a crash between delete
-    * and rename leaves only `cells__next`, adopted on next touch).
-    * Batch ids, row content, and probe results are unchanged —
-    * IvfIndexSpec pins probe-equality across the migration. No-op on an
-    * already-bucketed tree.
-    *
-    * SAFETY CONTRACT (the [[compact]] discipline, stated for migrate
-    * too): the caller must be the EXCLUSIVE writer while this runs — an
-    * append that commits after the batch listing would be silently
-    * dropped by the swap. As a backstop the batch set is re-listed just
-    * before the swap and the migration ABORTS (staging tree deleted,
-    * live tree untouched) if new batches appeared; a writer that lands
-    * between that check and the rename is inherently unprotectable on a
-    * rename-based swap, hence the contract.
+    * tree to the bucketed `cbk=` layout: every legacy batch is rewritten
+    * bucketed (`cell` recovered from its partition directories) into the
+    * stage and swapped in by one [[BatchStore.commit]]; bucketed batches
+    * are left as they are, so a MIXED tree — legacy build + crashed
+    * post-upgrade append — heals too. Batch ids, row content, and probe
+    * results are unchanged — IvfIndexSpec pins probe-equality across the
+    * migration. No-op on an already-bucketed tree. The swap replaces only
+    * the rewritten batch directories, so an append that lands meanwhile
+    * is never swapped away; the caller is still the exclusive writer of
+    * the batches being migrated.
     */
   def migrate(spark: SparkSession, path: String): Unit = {
     val (fs, cells) = BatchStore.fsPath(spark, s"$path/cells")
-    BatchStore.adoptNext(fs, cells)
-    if (!fs.exists(cells)) return
-    val batches = fs.listStatus(cells)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    val anyLegacy = batches.exists(b => fs.listStatus(b.getPath)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("cell=")))
-    if (!anyLegacy) return
-    val next = new org.apache.hadoop.fs.Path(cells.toString + "__next")
-    require(fs.delete(next, true) || !fs.exists(next),
-      s"IvfCells.migrate: failed to clear stale $next")
-    batches.foreach { b =>
-      val hasData = {
-        val files = fs.listFiles(b.getPath, true)
-        var found = false
-        while (!found && files.hasNext) {
-          val n = files.next().getPath.getName
-          found = !n.startsWith("_") && !n.startsWith(".")
-        }
-        found
-      }
-      val out = s"$next/${b.getPath.getName}"
-      if (!hasData) {
-        // preserve a committed zero-row batch's dir + _SUCCESS marker
-        // (the compactPrepare rule): dropping it would demote the batch
-        // out of committedBatches and change what serving reads observe
-        fs.mkdirs(new org.apache.hadoop.fs.Path(out))
-        if (fs.exists(new org.apache.hadoop.fs.Path(b.getPath, "_SUCCESS")))
-          fs.create(new org.apache.hadoop.fs.Path(s"$out/_SUCCESS"), true).close()
-      } else {
-        // a legacy batch dir surfaces `cell` as its partition column; a
-        // bucketed one surfaces `cbk` with cell in the data — drop the
-        // stale bucket column and writeBucketed re-derives it
-        val rows = spark.read.parquet(b.getPath.toString).drop("cbk")
-        writeBucketed(rows, out)
-      }
-    }
-    // concurrent-append backstop (see the SAFETY CONTRACT above): abort
-    // rather than swap away a batch committed after the listing
-    val after = fs.listStatus(cells)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName).toSet
-    if (after != batches.map(_.getPath.getName).toSet) {
-      fs.delete(next, true)
-      throw new java.util.ConcurrentModificationException(
-        s"IvfCells.migrate at $cells: batch set changed during migration " +
-          "(concurrent writer detected) — migration aborted, live tree " +
-          "untouched. migrate requires an exclusive writer; re-run it quiesced.")
-    }
-    BatchStore.completeSwap(BatchStore.PendingSwap(fs, cells, next))
+    val legacy = BatchStore.listBatches(fs, cells).map(_._2).filter(b =>
+      fs.listStatus(b).exists(s => s.isDirectory && s.getPath.getName.startsWith("cell=")))
+    if (legacy.isEmpty) return
+    val st = BatchStore.stage(spark, cells.toString)
+    legacy.foreach(b =>
+      writeBucketed(spark.read.parquet(b.toString), st.at(b.getName).toString))
+    BatchStore.commit(BatchStore.Swap(st, legacy.map(_.getName)))
   }
 
   /** Delegates to [[BatchStore.compact]] with the bucket partitioning

@@ -81,9 +81,7 @@ object IvfPqIndex {
       .toDF("j", "ci", "sub")
       .repartition(1)
       .write.mode("overwrite").parquet(s"$path/codebooks")
-    val cellsPath = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val fs = cellsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cellsPath)) fs.delete(cellsPath, true)
+    BatchStore.reset(spark, s"$path/cells")
     writeBatch(encode(resid, mat, books, m, ks), path, batchId = 0L)
   }
 

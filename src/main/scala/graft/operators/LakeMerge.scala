@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** D3/S5: the idempotent keyed merge write — the reference's Mongo
   * `UpdateOne({_id}, {$set: doc}, upsert=True)` bulk
   * (src/resilient_scraper.py:941-974) re-expressed as
-  * last-write-wins-per-key over a date-partitioned Parquet lake with
-  * dynamic partition overwrite (SURVEY §4 "the one place our engine writes
-  * nontrivial plan logic").
+  * last-write-wins-per-key over a date-partitioned Parquet lake,
+  * committed through the [[BatchStore]] swap (SURVEY §4 "the one place
+  * our engine writes nontrivial plan logic").
   *
   * Scale shape: only the partitions DATED by the incoming batch are read,
   * merged, and rewritten — the rest of the lake is untouched (the
@@ -26,6 +26,18 @@ object LakeMerge {
     * on key collision (the `$set` upsert contract); among duplicates within
     * one side, newest `scraped_at` wins with `_id` as final tiebreak.
     *
+    * Commit: the touched partitions' winners are written into the lake's
+    * stage (`<path>__next`, invisible to `spark.read.parquet(path)`), one
+    * file per partition with rows sorted by `_id` — so the lake's bytes
+    * depend only on its content, not on task layout — and swapped in by
+    * one [[BatchStore.commit]], which also drops the touched partitions
+    * left with no rows. A crash before the manifest lands leaves the lake
+    * as it was; after, the next read rolls the swap forward. Because the
+    * write never targets a path its plan reads, neither the lake slice nor
+    * the winners need materializing; the batch is materialized once, and
+    * an `Observation` on that job yields its date set. An empty batch
+    * returns without staging or swapping.
+    *
     * SCOPE: the merge is per-partition — only partitions dated by the
     * incoming batch are read and rewritten. If a re-scraped doc's
     * created_at parses to a DIFFERENT date than its stored copy (e.g. an
@@ -42,109 +54,69 @@ object LakeMerge {
     */
   def mergeWrite(spark: SparkSession, incoming: DataFrame, path: String,
       crossPartitionDedup: Boolean = false): Unit = {
-    // Checkpoint the batch as well: reprocess/backfill batches are
-    // themselves derived FROM the lake, and Spark (rightly) refuses to
-    // overwrite a path still referenced by the writing plan. A batch is
-    // bounded (one scrape/repair slice), so materializing it is cheap
-    // relative to the merge shuffle.
+    val seen = Observation()
+    // the batch is materialized once: its transform (and its date set,
+    // observed on the same job) must not re-run per consumer
     val inc = Checkpoints.materialize(
-      incoming.withColumn(PartitionCol, to_date(col("metadata.created_at"))))
-
-    val (merged, mergedDates) =
-      if (!lakeExists(spark, path)) (inc.withColumn("__pri", lit(1)), Array.empty[java.sql.Date])
-      else {
-        // Only the touched partitions participate in the merge. The date
-        // list is partition METADATA (bounded by the batch's date range),
-        // not data — collecting it to the driver mirrors the reference's
-        // per-day routing loop and enables partition pruning on the read.
-        val batchDates = inc.select(col(PartitionCol)).distinct().collect().map(_.getDate(0))
-        // crossPartitionDedup: partitions holding a stale copy of an
-        // incoming _id under another date join the merge set, so the LWW
-        // window below can retire those copies. (_id, date) only — the
-        // scan never materializes document payloads.
-        val staleDates =
-          if (!crossPartitionDedup) Array.empty[java.sql.Date]
-          else {
-            val (nullB, realB) = batchDates.partition(_ == null)
-            val inBatch = col(PartitionCol).isin(realB.toSeq: _*)
-            val touched = if (nullB.nonEmpty) inBatch || col(PartitionCol).isNull else inBatch
-            spark.read.parquet(path)
-              .filter(!coalesce(touched, lit(false)))
-              .join(inc.select(col("_id")).distinct(), Seq("_id"), "left_semi")
-              .select(col(PartitionCol)).distinct().collect().map(_.getDate(0))
-          }
-        val dates = batchDates ++ staleDates
-        // null event_date (null created_at upstream of nest's fallback)
-        // routes to the default partition — isin(null) would evaluate to
-        // null and silently EXCLUDE existing null-partition rows from the
-        // merge, losing them on the overwrite
-        val (nullDates, realDates) = dates.partition(_ == null)
-        val datePred = {
-          val in = col(PartitionCol).isin(realDates.toSeq: _*)
-          if (nullDates.nonEmpty) in || col(PartitionCol).isNull else in
-        }
-        // Truncate lineage: Spark refuses to overwrite a path that an
-        // active plan still reads from; the checkpoint materializes the
-        // (pruned, small) affected slice before the write.
-        val existing = Checkpoints.materialize(spark.read.parquet(path).filter(datePred))
-        (existing.withColumn("__pri", lit(0))
-          .unionByName(inc.withColumn("__pri", lit(1))), dates)
-      }
-
-    // LWW winner via [[lwwWinners]] — max-over-struct with the batch
-    // priority leading, so incoming beats lake on key collision.
-    val winnersPlan = lwwWinners(merged, leading = Seq(col("__pri")))
-    // In dedup mode the output is consumed twice (emptied-partition
-    // collect below, then the write) — materialize it once instead of
-    // re-running the whole LWW window per consumer
-    val winners =
-      if (crossPartitionDedup) Checkpoints.materialize(winnersPlan) else winnersPlan
-
-    // Dynamic overwrite only rewrites partitions PRESENT in the output: a
-    // partition whose every row was a retired stale copy produces no
-    // output rows and would silently keep its files. In dedup mode, find
-    // such emptied partitions (partition metadata, bounded) and drop their
-    // directories after the write.
-    val emptied: Array[java.sql.Date] =
-      if (!crossPartitionDedup) Array.empty
-      else {
-        val outDates = winners.select(col(PartitionCol)).distinct()
-          .collect().map(_.getDate(0)).toSet
-        mergedDates.filterNot(outDates.contains).distinct
-      }
-
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try winners.write.mode("overwrite").partitionBy(PartitionCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-
-    // The overwrite (above) and this cleanup are two separate filesystem
-    // operations with no transaction between them: a crash in the gap —
-    // or a filesystem that refuses the delete — would silently resurrect
-    // the stale duplicate _id this mode exists to retire on the next
-    // read. So a failed delete FAILS the merge loudly; the merge is
-    // idempotent (LakeMergeSpec), so the documented recovery for either
-    // failure is simply re-running it.
-    if (emptied.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { d =>
-        val leaf = if (d == null) "__HIVE_DEFAULT_PARTITION__" else d.toString
-        val dir = new org.apache.hadoop.fs.Path(root, s"$PartitionCol=$leaf")
-        if (!fs.delete(dir, true) && fs.exists(dir)) {
-          throw new java.io.IOException(
-            s"mergeWrite: could not delete emptied partition $dir — " +
-              "stale rows would resurrect; re-run the merge after fixing the filesystem")
-        }
-      }
-    }
+      incoming.withColumn(PartitionCol, to_date(col("metadata.created_at")))
+        .observe(seen, collect_set(col(PartitionCol)).as("dates"),
+          count(when(col(PartitionCol).isNull, 1)).as("nulls")))
+    try {
+      val observed = seen.get
+      val batchDates =
+        observed("dates").asInstanceOf[scala.collection.Seq[java.sql.Date]].toSeq ++
+          (if (observed("nulls").asInstanceOf[Long] > 0) Seq(null) else Nil)
+      if (batchDates.isEmpty) return
+      val st = BatchStore.stage(spark, path)
+      val lakeExists = st.fs.exists(st.root) && st.fs.listStatus(st.root).exists(
+        _.getPath.getName.startsWith(s"$PartitionCol="))
+      // crossPartitionDedup: partitions holding a stale copy of an
+      // incoming _id under another date join the merge set, so the LWW
+      // window below can retire those copies. (_id, date) only — the
+      // scan never materializes document payloads.
+      val staleDates =
+        if (!crossPartitionDedup || !lakeExists) Nil
+        else spark.read.parquet(path)
+          .filter(!coalesce(inDates(batchDates), lit(false)))
+          .join(inc.select(col("_id")).distinct(), Seq("_id"), "left_semi")
+          .select(col(PartitionCol)).distinct().collect().map(_.getDate(0)).toSeq
+      val dates = batchDates ++ staleDates
+      val batch = inc.withColumn("__pri", lit(1))
+      val merged =
+        if (!lakeExists) batch
+        else spark.read.parquet(path).filter(inDates(dates))
+          .withColumn("__pri", lit(0)).unionByName(batch)
+      // LWW winner via [[lwwWinners]] — max-over-struct with the batch
+      // priority leading, so incoming beats lake on key collision
+      lwwWinners(merged, leading = Seq(col("__pri")))
+        .repartition(col(PartitionCol))
+        .sortWithinPartitions(col(PartitionCol), col("_id"))
+        .write.partitionBy(PartitionCol).parquet(st.dir.toString)
+      // a touched partition with no winner left (every row a retired
+      // stale copy) has no stage directory: the swap drops it
+      val written = st.fs.listStatus(st.dir).map(_.getPath.getName)
+        .filter(_.startsWith(s"$PartitionCol=")).toSeq
+      val touched = dates.map(d =>
+        s"$PartitionCol=${if (d == null) "__HIVE_DEFAULT_PARTITION__" else d}")
+      BatchStore.commit(BatchStore.Swap(st, written, touched.distinct.diff(written)))
+    } finally Checkpoints.free(inc)
   }
 
-  def readLake(spark: SparkSession, path: String): DataFrame =
+  /** The partitions of `dates`. A null date routes to the default
+    * partition, which `isin(null)` would silently exclude.
+    */
+  private def inDates(dates: Seq[java.sql.Date]): Column = {
+    val (nulls, real) = dates.partition(_ == null)
+    val in = col(PartitionCol).isin(real: _*)
+    if (nulls.nonEmpty) in || col(PartitionCol).isNull else in
+  }
+
+  /** Read the lake, rolling forward a merge whose commit crashed. */
+  def readLake(spark: SparkSession, path: String): DataFrame = {
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    BatchStore.heal(fs, root)
     spark.read.parquet(path)
+  }
 
   /** Read-time LWW dedup by `_id` — the query-side alternative to
     * `mergeWrite(crossPartitionDedup = true)` when stale cross-partition
@@ -182,11 +154,5 @@ object LakeMerge {
           .as("__inv"),
         struct(dataCols.map(col).toSeq: _*).as("__row")): _*)).as("__m"))
       .select(col("__m.__row.*"))
-  }
-
-  private def lakeExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 }

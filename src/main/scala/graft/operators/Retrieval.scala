@@ -167,9 +167,7 @@ object Retrieval {
     val spark = docs.sparkSession
     // a fresh build owns the whole tree: clear batches from a previous
     // index generation (the IvfIndex.build discipline)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    BatchStore.reset(spark, path)
     // meta FIRST (it is layout config, not a commit marker — the
     // ensureIndexMeta ordering): a crash between the two writes leaves
     // meta-without-batches, which appendIndex accepts (it reads meta and
@@ -202,9 +200,8 @@ object Retrieval {
       batchId: Long): Unit = {
     require(batchId >= 0L, s"appendIndex: batchId must be >= 0, got $batchId")
     val spark = docs.sparkSession
-    // adopt BEFORE writing: landing a fresh batch dir would make a
-    // half-swapped tree look live and orphan the consolidated history
-    // still sitting at __next
+    // heal BEFORE writing: a committed compaction rolls forward before a
+    // fresh batch dir lands beside its folded partitions
     adoptIndexTrees(spark, path)
     val buckets = spark.read.parquet(s"$path/meta").head().getInt(0)
     writeBatch(docs, id, text, path, buckets, batchId)
@@ -265,8 +262,8 @@ object Retrieval {
     * Posting bucket partitioning is preserved, so the bucket-prune
     * contract survives compaction. Same SAFETY CONTRACT as
     * every store: only compact batch ids the stream's checkpoint has
-    * committed past. Crash-safe via the `__next` + adopt-on-read swap
-    * ([[queryIndex]] and [[appendIndex]] self-heal).
+    * committed past. Crash-safe via the [[BatchStore]] commit
+    * ([[queryIndex]] and [[appendIndex]] heal on entry).
     */
   def compactIndex(
       spark: SparkSession, path: String, upToBatch: Long): Unit = {
@@ -308,7 +305,8 @@ object Retrieval {
     // consolidate to one additive row. STAGE both replacement trees
     // fully, then swap back-to-back: a concurrent [[queryIndex]] pins
     // one committed-batch snapshot across both trees, and the only
-    // window in which its pin can straddle the swap is the two renames —
+    // window in which its pin can straddle the swap is the two
+    // roll-forwards —
     // a straddled pin fails loudly on a missing explicit path (never a
     // torn answer) and the serving retry re-pins.
     val postings = BatchStore.compactPrepare(spark, s"$path/postings",
@@ -317,15 +315,15 @@ object Retrieval {
       targetFiles = 1,
       merge = d => d.agg(sum(col("n")).as("n"),
         sum(col("tot")).cast("long").as("tot")))
-    postings.foreach(BatchStore.completeSwap)
-    stats.foreach(BatchStore.completeSwap)
+    postings.foreach(BatchStore.commit)
+    stats.foreach(BatchStore.commit)
   }
 
   /** Self-heal a crashed [[compactIndex]] swap before any read. */
   private def adoptIndexTrees(spark: SparkSession, path: String): Unit = {
     IndexTrees.foreach { sub =>
       val (fs, p) = BatchStore.fsPath(spark, s"$path/$sub")
-      BatchStore.adoptNext(fs, p)
+      BatchStore.heal(fs, p)
     }
   }
 

@@ -104,11 +104,9 @@ final case class BackfillJob(
       now: Column = current_timestamp()): Long = {
     val lake = LakeMerge.readLake(spark, lakePath)
     val todo = TweetOps.unprocessed(lake).drop(LakeMerge.PartitionCol)
-    if (!todo.isEmpty) {
-      val fixed = TweetOps.applySentimentLabeling(
-        TweetOps.applyDataCleaning(todo, dict, now), lexicon, now)
-      LakeMerge.mergeWrite(spark, fixed, lakePath)
-    }
+    // nothing to repair: the merge observes an empty batch and returns
+    LakeMerge.mergeWrite(spark, TweetOps.applySentimentLabeling(
+      TweetOps.applyDataCleaning(todo, dict, now), lexicon, now), lakePath)
     TweetOps.unprocessed(LakeMerge.readLake(spark, lakePath)).count()
   }
 }

@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.LakeMerge
+import graft.operators.{BatchStore, LakeMerge}
 
 /** A6: the monthly roll-up with resume semantics
   * (`aggregate_monthly_data[_if_needed]`, utils.py:225-253, trigger
@@ -16,8 +16,10 @@ import graft.operators.LakeMerge
   * daily files of a month" is a partition-pruned range scan (the month
   * bounds are literal date predicates — no function over the partition
   * column, so pruning applies); the roll-up itself is a write, not a
-  * shuffle. Skip-if-exists keys on the output's _SUCCESS marker, the
-  * idempotent-resume equivalent of the reference's os.path.exists check.
+  * shuffle. The roll-up is written beside `outPath` and swapped in whole
+  * by the [[BatchStore]] commit, so the output exists complete or not at
+  * all; skip-if-exists keys on its _SUCCESS marker, the idempotent-resume
+  * equivalent of the reference's os.path.exists check.
   */
 object MonthlyRollup {
 
@@ -26,16 +28,16 @@ object MonthlyRollup {
     */
   def runIfNeeded(spark: SparkSession, lakePath: String, yearMonth: String,
       outPath: String, format: String = "parquet"): Boolean = {
-    val success = new org.apache.hadoop.fs.Path(outPath, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(success)) false
+    val st = BatchStore.stage(spark, outPath)
+    if (st.fs.exists(new org.apache.hadoop.fs.Path(st.root, "_SUCCESS"))) false
     else {
       val first = LocalDate.parse(s"$yearMonth-01")
       val next = first.plusMonths(1)
-      val month = LakeMerge.readLake(spark, lakePath)
+      LakeMerge.readLake(spark, lakePath)
         .filter(col(LakeMerge.PartitionCol) >= lit(first.toString).cast("date") &&
           col(LakeMerge.PartitionCol) < lit(next.toString).cast("date"))
-      month.write.mode("overwrite").format(format).save(outPath)
+        .write.format(format).save(st.dir.toString)
+      BatchStore.commit(BatchStore.Swap(st, Seq("")))
       true
     }
   }

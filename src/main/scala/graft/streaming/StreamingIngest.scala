@@ -49,7 +49,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) LakeMerge.mergeWrite(spark, job.transform(batch, now), lakePath)
+        LakeMerge.mergeWrite(spark, job.transform(batch, now), lakePath)
       }
       .start()
   }
@@ -148,10 +148,10 @@ object StreamingIngest {
     *    REPLAYED batch after failure/restart changes nothing, and the
     *    surviving row is independent of batch arrival order.
     *
-    * Crash safety: the store is replaced by write-beside-then-swap, never
-    * overwritten in place — a crash mid-write leaves either the old store
-    * or (between delete and rename) the complete replacement at `__next`,
-    * which the next merge adopts before reading. Empty batches never
+    * Crash safety: the store is replaced by the [[graft.operators
+    * .BatchStore]] commit, never overwritten in place — a crash before
+    * the manifest lands leaves the old store live, one after it is rolled
+    * forward by the next merge before it reads. Empty batches never
     * rewrite the store.
     *
     * Scale note: the merge rewrites the store per batch — the right shape
@@ -198,36 +198,24 @@ object StreamingIngest {
         nt >= minTokens && TextFunctions.punctCount(col("text")) <= nt),
       col("lang"), col("doc_id"), rates, defaultRate)
       .select(cols.map(col): _*)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val next = new org.apache.hadoop.fs.Path(storePath + "__next")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def liveStore = fs.exists(p) && fs.listStatus(p).nonEmpty
-    // self-heal: a crash between the old store's delete and the rename
-    // below leaves the ONLY copy at __next — adopt it before merging, so
-    // the replayed batch sees every previously curated row
-    if (!liveStore && fs.exists(next)) fs.rename(next, p)
-    val exists = liveStore
     // a batch that contributes nothing must not rewrite the store: the
     // store is already deduped, so re-merging it alone is a no-op — and
     // rewriting the only copy is pure risk
     if (kept.isEmpty) return
+    val st = graft.operators.BatchStore.stage(spark, storePath)
     val union =
-      if (exists) spark.read.parquet(storePath).select(cols.map(col): _*).unionByName(kept)
+      if (st.fs.exists(st.root))
+        spark.read.parquet(storePath).select(cols.map(col): _*).unionByName(kept)
       else kept
     // one representative per normalized-text key, min doc_id — the same
     // key and tiebreak as the batch q_exact_dedup, so stream and batch
-    // curation agree on WHICH duplicate survives
-    val merged = Dedup.exact(
-      union, lower(TextFunctions.pyStrip(col("text"))), col("doc_id"), payload = cols)
-    // never overwrite the only copy in place (mode=overwrite deletes the
-    // target BEFORE the job commits — a crash mid-write would lose every
-    // previously curated row, and the stream checkpoint replays only the
-    // current batch): write the replacement beside the store, then swap.
-    // The write reads the OLD store files, so no materialization needed.
-    fs.delete(next, true) // stale leftover from an interrupted attempt
-    merged.write.mode("overwrite").parquet(next.toString)
-    fs.delete(p, true)
-    fs.rename(next, p)
+    // curation agree on WHICH duplicate survives. The replacement is
+    // written beside the store (a crash mid-write must not lose every
+    // previously curated row: the stream checkpoint replays only the
+    // current batch) and swapped in whole.
+    Dedup.exact(union, lower(TextFunctions.pyStrip(col("text"))), col("doc_id"), payload = cols)
+      .write.parquet(st.dir.toString)
+    graft.operators.BatchStore.commit(graft.operators.BatchStore.Swap(st, Seq("")))
   }
 
   /** Streaming MinHash-LSH near-dup suppression against the persistent

@@ -101,8 +101,10 @@ object Probe {
     *    plan (AQE not yet executed) with the numbered operator list,
     *    PushedFilters/ReadSchema, Exchange placement and join strategies
     *    (the evidence files under `plans/r17`, `plans/r18`).
-    * Queries with eager builders (materializeScratch, trained constants)
-    * execute real jobs while their frame is built.
+    * The last two pass through [[graft.Bench.maskIds]] with its session
+    * masks, so two dumps of one query are byte-identical. Queries with
+    * eager builders (materializeScratch, trained constants) execute real
+    * jobs while their frame is built.
     */
   def dump(spark: SparkSession, sfDir: String, out: String, suffix: String,
       names: Seq[String]): Unit = {
@@ -112,10 +114,12 @@ object Probe {
     names.foreach { n =>
       try {
         val df = query(spark, sfDir, n)
-        write(s"${n}_$suffix.txt", df.queryExecution.explainString(mode))
+        write(s"${n}_$suffix.txt",
+          Bench.maskIds(df.queryExecution.explainString(mode), sessionIds = true))
         write(s"$n.txt", Bench.normalizedPlan(df))
         write(s"$n.shape.txt", Bench.normalizedPlan(df, maskLiterals = true))
-        write(s"$n.optimized.txt", df.queryExecution.optimizedPlan.canonicalized.toString)
+        write(s"$n.optimized.txt",
+          Bench.maskIds(df.queryExecution.optimizedPlan.canonicalized.toString, sessionIds = true))
         println(s"[dump] wrote $n")
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[dump] $n FAILED: ${e.getMessage}")

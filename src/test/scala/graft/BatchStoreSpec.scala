@@ -39,3 +39,19 @@ class BatchStoreSpec extends SparkSpec {
     assert(all.toSeq == (0L until 1000L).toSeq)
   }
 }
+
+object BatchStoreSpec {
+
+  /** The crash state of a [[BatchStore.commit]] that published its
+    * manifest and deleted the live entries but renamed none into place:
+    * every child of `path` moves into the stage, and a manifest replacing
+    * them all is published. The first heal must restore the content.
+    */
+  def crashMidSwap(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val st = BatchStore.stage(spark, path)
+    val names = st.fs.listStatus(st.root).map(_.getPath.getName).toSeq
+    st.fs.mkdirs(st.dir)
+    names.foreach(n => require(st.fs.rename(new org.apache.hadoop.fs.Path(st.root, n), st.at(n))))
+    BatchStore.publish(BatchStore.Swap(st, names))
+  }
+}

@@ -25,4 +25,20 @@ class HarnessSpec extends SparkSpec {
     spark.range(10).collect()
     assert(listener.snapshot() == after)
   }
+
+  test("Probe dump files repeat byte for byte within one session") {
+    val qs = Seq("q_curation_e2e", "q_audio_energy")
+    def dumpTo(tag: String): Map[String, String] = {
+      val out = java.nio.file.Files.createTempDirectory(tag).toFile
+      graft.tools.Probe.dump(spark, "/root/testdata/sf0.001", out.getPath, "plan", qs)
+      out.listFiles.toSeq.map(f => f.getName -> new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toMap
+    }
+    val first = dumpTo("dump-a")
+    assert(first.size == 4 * qs.size, first.keys)
+    val second = dumpTo("dump-b")
+    first.foreach { case (name, text) =>
+      assert(second(name) == text, s"$name differs between two dumps")
+    }
+  }
 }

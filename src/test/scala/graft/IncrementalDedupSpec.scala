@@ -205,9 +205,9 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(dirs() === Seq("batch=3"))
     val after = rows()
 
-    // crash between delete and rename: the only copy sits at __next —
-    // the next reader adopts it
-    assert(new java.io.File(store).renameTo(new java.io.File(store + "__next")))
+    // crash mid-swap: the manifest landed, the live partitions were
+    // deleted, none renamed — the next reader rolls the swap forward
+    BatchStoreSpec.crashMidSwap(spark, store)
     val sv = IncrementalDedup.survivors(spark, store)
       .select($"doc_id").collect().map(_.getLong(0)).sorted
     assert(sv.toSeq === Seq(10L, 11L, 21L))

@@ -167,11 +167,9 @@ class IncrementalSemDedupSpec extends SparkSpec {
     // suppression semantics unchanged: a post-compaction batch still
     // suppresses transitively against consolidated history
     assert(run(store, 3, Seq((5L, vec(0, 30)))) == Seq((5L, 1L, false)))
-    // crash between delete and rename strands the tree at __next: every
-    // reader adopts it on entry
-    val p = new org.apache.hadoop.fs.Path(s"$store/rows")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(p, new org.apache.hadoop.fs.Path(s"$store/rows__next"))
+    // a crash mid-swap strands the tree in the stage under a published
+    // manifest: every reader rolls it forward on entry
+    BatchStoreSpec.crashMidSwap(spark, s"$store/rows")
     assert(IncrementalSemDedup.survivors(spark, store)
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{Checkpoints, LakeMerge}
 
 /** Cross-partition duplicate handling and checkpoint modes of the lake
@@ -77,8 +79,8 @@ class LakeMergeSpec extends SparkSpec {
     LakeMerge.mergeWrite(spark, docs(
       ("A", "2025-05-04 09:00:00", "2025-05-04 12:00:00", "a v2")), lake,
       crossPartitionDedup = true)
-    // 2025-05-02 held only the stale copy; dynamic overwrite alone would
-    // have left its files behind (no output rows land there)
+    // 2025-05-02 held only the stale copy: no winner lands there, so the
+    // swap must drop the partition rather than leave its files behind
     assert(!new java.io.File(s"$lake/${LakeMerge.PartitionCol}=2025-05-02").exists())
     val all = LakeMerge.readLake(spark, lake)
     assert(all.count() == 1)
@@ -88,10 +90,14 @@ class LakeMergeSpec extends SparkSpec {
   test("reliable-checkpoint mode produces the same merge (cluster-grade materialization)") {
     import spark.implicits._
     val lake = tmp("reliable") + "/lake"
-    val ckpt = tmp("ckpt")
+    // the checkpoint dir sits on the recording filesystem double, so the
+    // spec sees the checkpoint data written and then freed
+    FaultFs.install(spark)
+    val ckpt = FaultFs.tmpDir("lakemerge-ckpt")
     val prevDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(ckpt)
     spark.conf.set(Checkpoints.ReliableCheckpointConf, "true")
+    FaultFs.arm()
     try {
       LakeMerge.mergeWrite(spark, docs(
         ("A", "2025-05-01 10:00:00", "2025-05-01 11:00:00", "a v1"),
@@ -105,7 +111,67 @@ class LakeMergeSpec extends SparkSpec {
     val all = LakeMerge.readLake(spark, lake).orderBy("_id")
       .select($"_id", $"content.clean_text").as[(String, String)].collect().toSeq
     assert(all == Seq(("A", "a v2"), ("B", "b")))
-    // the reliable checkpoint actually wrote RDD checkpoint data
-    assert(new java.io.File(ckpt).listFiles.nonEmpty)
+    // the reliable checkpoint actually wrote RDD checkpoint data, and
+    // mergeWrite freed it once the swap was done
+    import scala.jdk.CollectionConverters._
+    val created = FaultFs.log.asScala.filter(_.startsWith("create ")).map(_.drop(7))
+    assert(created.exists(_.matches(".*/rdd-\\d+/.*")), created)
+    val rddDirs = new java.io.File(ckpt.stripPrefix("fault:")).listFiles.toSeq
+      .flatMap(d => Option(d.listFiles).toSeq.flatten).filter(_.getName.startsWith("rdd-"))
+    assert(rddDirs.isEmpty, s"checkpoint data not freed: $rddDirs")
+  }
+
+  /** Every file under `dir` with its modification time. */
+  private def listing(dir: String): Seq[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator.asScala.map(p =>
+      (root.relativize(p).toString, p.toFile.lastModified)).toSeq.sorted
+    finally walk.close()
+  }
+
+  /** Data-file SHA-256 digests per partition directory. */
+  private def digests(lake: String): Map[String, Seq[String]] =
+    new java.io.File(lake).listFiles.toSeq.filter(_.isDirectory).map { part =>
+      part.getName -> part.listFiles.toSeq.filter(_.getName.endsWith(".parquet")).map { f =>
+        java.security.MessageDigest.getInstance("SHA-256")
+          .digest(java.nio.file.Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+      }.sorted
+    }.toMap
+
+  test("the lake's bytes depend only on its content, not on task layout") {
+    val batches = Seq(
+      docs((1 to 40).map(i => (s"id$i", s"2025-05-0${1 + i % 3} 10:00:00",
+        "2025-05-04 11:00:00", s"text $i")): _*),
+      // a re-scrape rewriting one partition, plus a new day
+      docs((1 to 40 by 3).map(i => (s"id$i", s"2025-05-0${1 + i % 3} 10:00:00",
+        "2025-05-05 11:00:00", s"text $i v2")) :+
+        (("id99", "2025-05-07 10:00:00", "2025-05-07 11:00:00", "new")): _*))
+    // the same batches, once as built and once scattered over 5 tasks
+    // and merged over 3 uncoalesced shuffle partitions — the task layout
+    // AQE's size-dependent coalescing picks must not reach the files
+    val a = tmp("bytes-a") + "/lake"
+    val b = tmp("bytes-b") + "/lake"
+    batches.foreach(df => LakeMerge.mergeWrite(spark, df, a))
+    val layout = Seq("spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = layout.map { case (k, _) => k -> spark.conf.get(k) }
+    layout.foreach { case (k, v) => spark.conf.set(k, v) }
+    try batches.foreach(df => LakeMerge.mergeWrite(spark, df.repartition(5), b))
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (da, db) = (digests(a), digests(b))
+    assert(da.keySet.size == 4 && da.values.forall(_.nonEmpty), da)
+    assert(da == db)
+  }
+
+  test("an empty batch leaves the lake untouched") {
+    val lake = tmp("empty") + "/lake"
+    val batch = docs(("A", "2025-05-01 10:00:00", "2025-05-01 11:00:00", "a"))
+    LakeMerge.mergeWrite(spark, batch, lake)
+    val before = listing(lake)
+    LakeMerge.mergeWrite(spark, batch.limit(0), lake)
+    LakeMerge.mergeWrite(spark, batch.filter(lit(false)), lake, crossPartitionDedup = true)
+    assert(listing(lake) == before)
+    assert(!new java.io.File(lake + "__next").exists())
   }
 }

@@ -225,13 +225,10 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildIndex(docs, $"doc_id", $"text", path, buckets = 16)
     val want = Retrieval.queryIndex(spark, path, terms, k = 10)
       .orderBy($"rk").collect().toSeq
-    // simulate the crash window: the live tree deleted, the only copy
-    // stranded at __next
-    for (sub <- Seq("postings", "stats")) {
-      val live = java.nio.file.Paths.get(s"$path/$sub")
-      val next = java.nio.file.Paths.get(s"$path/${sub}__next")
-      java.nio.file.Files.move(live, next)
-    }
+    // simulate the crash window: the manifests published, the live
+    // partitions deleted, the only copies stranded in the stages
+    for (sub <- Seq("postings", "stats"))
+      BatchStoreSpec.crashMidSwap(spark, s"$path/$sub")
     val healed = Retrieval.queryIndex(spark, path, terms, k = 10)
       .orderBy($"rk").collect().toSeq
     assert(healed == want)

@@ -122,12 +122,11 @@ class ServingConcurrencySpec extends SparkSpec {
   }
 
   test("adopt-on-read heals an in-flight crashed swap under reader concurrency") {
-    // crashed-swap state: the ONLY copy of the cells tree is at __next
-    // (the window between compact's delete and rename). N readers hit it
-    // SIMULTANEOUSLY: exactly one adoption must win, every reader must
-    // answer, and the store must end healed — the adopt-vs-adopt rename
-    // race (pre-hardening: the loser's require threw, and an interleaved
-    // clear could delete the freshly-adopted tree).
+    // crashed-swap state: the manifest published, the live batches
+    // deleted, the ONLY copy of the cells tree in the stage (the window
+    // between a commit's deletes and renames). N readers hit it
+    // SIMULTANEOUSLY: exactly one roll-forward must run, every reader
+    // must answer, and the store must end healed.
     val emb = Tables.wide(spark, "/root/testdata/sf0.001", "embeddings")
     val probes = emb.filter($"vec_id" < 2).select($"vec_id", $"embedding")
     val path = java.nio.file.Files.createTempDirectory("ivfadopt").toString
@@ -136,7 +135,7 @@ class ServingConcurrencySpec extends SparkSpec {
       .orderBy($"probe_id", $"rk").collect().toSeq
     val (fs, cells) = BatchStore.fsPath(spark, s"$path/cells")
     val next = new org.apache.hadoop.fs.Path(s"$path/cells__next")
-    assert(fs.rename(cells, next), "failed to stage the crashed-swap state")
+    BatchStoreSpec.crashMidSwap(spark, cells.toString)
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Seq[org.apache.spark.sql.Row]]()
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val readers = (0 until 6).map { _ =>
@@ -152,7 +151,9 @@ class ServingConcurrencySpec extends SparkSpec {
     assert(failures.isEmpty, s"reader failed during concurrent adoption: ${failures.peek()}")
     import scala.jdk.CollectionConverters._
     results.asScala.foreach(r => assert(r == want))
-    assert(fs.exists(cells) && !fs.exists(next), "store did not end healed")
+    assert(fs.exists(cells) && !fs.exists(next) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(s"$path/cells__manifest")),
+      "store did not end healed")
   }
 
   test("servingRead rethrows deterministic failures immediately, retries only vanished-path classes") {
@@ -213,87 +214,41 @@ class ServingConcurrencySpec extends SparkSpec {
     assert(hits.nonEmpty)
   }
 
-  test("adoptNext heal is non-destructive: a non-empty aside tree aborts instead of being cleared") {
-    val dir = java.nio.file.Files.createTempDirectory("adoptaside").toString
+  test("heal never adopts a stage without a manifest") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("healstage").toString
     val (fs, p) = BatchStore.fsPath(spark, s"$dir/store")
-    val next = new org.apache.hadoop.fs.Path(s"$dir/store__next")
-    val aside = new org.apache.hadoop.fs.Path(s"$dir/store__aside")
-    // a crashed heal that moved DATA aside (the scenario the old
-    // delete-based clear would have destroyed) must abort loudly
-    fs.mkdirs(p)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(aside, "batch=0"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(next, "batch=1"))
-    val e = intercept[IllegalArgumentException] { BatchStore.adoptNext(fs, p) }
-    assert(e.getMessage.contains("aside"))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(aside, "batch=0")),
-      "heal destroyed the aside tree")
-    // with the aside healed away, the standard adopt completes: empty live
-    // cleared via rename-aside, __next adopted
-    fs.delete(aside, true)
-    BatchStore.adoptNext(fs, p)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(p, "batch=1")))
-    assert(!fs.exists(next) && !fs.exists(aside))
+    val next = new Path(s"$dir/store__next")
+    // an unfinished stage write beside a live tree, and beside an empty
+    // one (the shape the rename-only heal used to adopt)
+    fs.mkdirs(new Path(p, "batch=0"))
+    fs.mkdirs(new Path(next, "batch=1"))
+    fs.mkdirs(new Path(next, "_temporary/0"))
+    assert(BatchStore.listBatches(fs, p).map(_._1) === Seq(0L))
+    fs.delete(new Path(p, "batch=0"), true)
+    assert(BatchStore.listBatches(fs, p).isEmpty)
+    assert(fs.exists(new Path(next, "batch=1")), "heal touched the stage")
+    // the next writer clears it
+    val st = BatchStore.stage(spark, p.toString)
+    assert(!fs.exists(st.dir))
   }
 
-  test("adoptNext tolerates losing the move-aside race to a concurrent healer") {
-    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
-    // Two reader JVMs can heal the same crashed swap concurrently;
-    // swapLock is JVM-local, so the loser's rename(p, aside) fails with
-    // p already taken by the winner. Both shapes of how far the winner
-    // got must be absorbed — an IllegalArgumentException here is not in
-    // servingRead's retry classes, so a spurious throw loses the read.
-    def freshStore(tag: String): (FileSystem, Path, Path) = {
-      val dir = java.nio.file.Files.createTempDirectory(tag).toString
-      val (fs, p) = BatchStore.fsPath(spark, s"$dir/store")
-      val next = new Path(s"$dir/store__next")
-      fs.mkdirs(p) // empty live tree — the crashed-swap shape
-      fs.mkdirs(new Path(next, "batch=0"))
-      (fs, p, next)
-    }
-    // shape 1: the winner completed the WHOLE heal between our emptiness
-    // check and the move-aside (live tree adopted, __next consumed)
-    locally {
-      val (fs, p, next) = freshStore("adoptrace1")
-      val racing = new FilterFileSystem(fs) {
-        override def rename(src: Path, dst: Path): Boolean =
-          if (src.toUri.getPath == p.toUri.getPath &&
-              dst.toString.endsWith("__aside")) {
-            fs.delete(src, true)
-            fs.rename(next, p)
-            false // the loser's view: rename failed, p gone then re-adopted
-          } else super.rename(src, dst)
-      }
-      BatchStore.adoptNext(racing, p)
-      assert(fs.exists(new Path(p, "batch=0")) && !fs.exists(next))
-    }
-    // shape 2: the winner only moved the empty tree aside — the loser
-    // falls through and performs the adoption itself
-    locally {
-      val (fs, p, next) = freshStore("adoptrace2")
-      val racing = new FilterFileSystem(fs) {
-        override def rename(src: Path, dst: Path): Boolean =
-          if (src.toUri.getPath == p.toUri.getPath &&
-              dst.toString.endsWith("__aside")) {
-            fs.delete(src, true) // winner took the empty tree, nothing more
-            false
-          } else super.rename(src, dst)
-      }
-      BatchStore.adoptNext(racing, p)
-      assert(fs.exists(new Path(p, "batch=0")) && !fs.exists(next))
-    }
-    // a rename failure with the EMPTY live tree still present is a real
-    // fault (nobody raced it) and must stay loud
-    locally {
-      val (fs, p, _) = freshStore("adoptrace3")
-      val broken = new FilterFileSystem(fs) {
-        override def rename(src: Path, dst: Path): Boolean =
-          if (src.toUri.getPath == p.toUri.getPath &&
-              dst.toString.endsWith("__aside")) false
-          else super.rename(src, dst)
-      }
-      val e = intercept[IllegalArgumentException] { BatchStore.adoptNext(broken, p) }
-      assert(e.getMessage.contains("failed to move"))
-    }
+  test("concurrent heals in one JVM roll a published manifest forward once") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("healrace").toString
+    val (fs, p) = BatchStore.fsPath(spark, s"$dir/store")
+    (0 until 4).foreach(b => fs.create(new Path(p, s"batch=$b/part-0")).close())
+    BatchStoreSpec.crashMidSwap(spark, p.toString)
+    assert(fs.listStatus(p).isEmpty)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val healers = (0 until 8).map(_ => new Thread(() =>
+      try BatchStore.heal(fs, p) catch { case t: Throwable => failures.add(t); () }))
+    healers.foreach(_.start()); healers.foreach(_.join())
+    assert(failures.isEmpty, s"a concurrent heal failed: ${failures.peek()}")
+    assert(BatchStore.listBatches(fs, p).map(_._1).sorted === (0L until 4L))
+    (0 until 4).foreach(b => assert(fs.exists(new Path(p, s"batch=$b/part-0"))))
+    assert(!fs.exists(new Path(s"$dir/store__next")) &&
+      !fs.exists(new Path(s"$dir/store__manifest")))
   }
 
   test("compactIndex pre-flight is scoped to upToBatch: a torn batch above the range never freezes maintenance") {

@@ -137,10 +137,10 @@ class StreamingIngestSpec extends SparkSpec {
     run()
     assert(listing() === before, "empty-contribution batch rewrote the store")
 
-    // crash simulation: the swap's delete landed but the rename did not —
-    // the ONLY copy of the store now sits at __next. The next merge must
-    // adopt it, so nothing previously curated is lost.
-    assert(new java.io.File(store).renameTo(new java.io.File(store + "__next")))
+    // crash simulation: the swap's manifest and deletes landed but no
+    // rename did — the ONLY copy of the store now sits in the stage. The
+    // next merge must roll it forward, so nothing curated is lost.
+    BatchStoreSpec.crashMidSwap(spark, store)
     Files.write(Paths.get(s"$landing/b3.json"), Seq(
       doc(5L, "a fresh document after the crash")).mkString("\n").getBytes("UTF-8"))
     run()
@@ -148,6 +148,25 @@ class StreamingIngestSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted
     assert(ids.toSeq === Seq(1L, 2L, 5L))
     // and the adopted temp location is gone after the successful swap
+    assert(!new java.io.File(store + "__next").exists())
+    assert(!new java.io.File(store + "__manifest").exists())
+  }
+
+  test("curated store: a stage left by a crash in the first write is never adopted") {
+    val dir = tmpDir("stream-curate-wedge")
+    val landing = s"$dir/landing"
+    val store = s"$dir/store"
+    Files.createDirectories(Paths.get(landing))
+    // a crash in the first stage write leaves the write job's temporary
+    // dir and no live store (and no manifest)
+    Files.createDirectories(Paths.get(s"${store}__next/_temporary/0"))
+    Files.write(Paths.get(s"$landing/b1.json"), Seq(
+      """{"doc_id":1,"text":"first document with enough tokens","lang":"en"}""")
+      .mkString("\n").getBytes("UTF-8"))
+    StreamingIngest.startCurated(spark, landing, store, s"$dir/ck",
+      Map.empty, defaultRate = 1.0, minTokens = 3).awaitTermination()
+    assert(spark.read.parquet(store).select(col("doc_id")).collect().map(_.getLong(0))
+      .toSeq === Seq(1L))
     assert(!new java.io.File(store + "__next").exists())
   }
 
