@@ -353,7 +353,7 @@ object Bench {
       val qLoad = load1m()
       // the cold run's frame, kept for the plan fingerprint below —
       // constructing a FRESH frame for hashing would re-run every eager
-      // builder (CC fixpoints, Checkpoints.materialize, sampled-constant
+      // builder (CC fixpoints, Checkpoints.materializeFrame, sampled-constant
       // training) once more, and doing so BEFORE the cold run warmed
       // exactly what cold measures (found by review this round: the
       // round-10-early hash placement pre-executed q_curation_e2e et al.

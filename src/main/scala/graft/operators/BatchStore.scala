@@ -5,68 +5,78 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The one commit path for persistent writes, and the shared layout
-  * discipline of the append-only `batch=<id>` partition stores
-  * ([[IncrementalDedup]], [[IncrementalSegmentDedup]],
-  * [[IncrementalImageDedup]], [[IncrementalSemDedup]], the [[Retrieval]]
-  * index trees and [[IvfIndex]]'s cells tree). [[LakeMerge]], the curated
-  * store of [[graft.streaming.StreamingIngest]] and
-  * [[graft.pipeline.MonthlyRollup]] commit through the same swap.
+/** The one commit path for persistent writes. A store is ONE root
+  * directory, and whatever a write changes under it lands through one
+  * manifest: a `batch=<id>` append (in every tree it spans), a build's
+  * meta, centroid, codebook and batch-0 trees, a compaction's
+  * consolidated partition together with the folded ones it drops.
+  * Users: the append-only batch stores ([[IncrementalDedup]] with its
+  * band index, [[IncrementalSegmentDedup]], [[IncrementalImageDedup]],
+  * [[IncrementalSemDedup]]), the indexes ([[Retrieval]], [[IvfIndex]],
+  * [[IvfPqIndex]]), [[LakeMerge]], the curated store of
+  * [[graft.streaming.StreamingIngest]], [[graft.pipeline.MonthlyRollup]]
+  * and the JSON exports of [[graft.sources.TweetJsonSource]].
   *
-  *  - '''Commit''' ([[stage]], [[commit]]): a writer writes the
-  *    replacement directories into a stage beside the root
-  *    (`<root>__next`, which no read of the root can see), then commits a
-  *    [[Swap]]: the directories under the root to replace from the stage
-  *    and the ones to drop (`""` names the root itself). The commit
-  *    writes ONE manifest (`<root>__manifest`, published by rename, so it
-  *    is whole or absent) after the stage write has committed, then rolls
-  *    it forward under `swapLock`: delete + rename per replaced
-  *    directory, delete per dropped one, then the stage and the manifest
-  *    go. Every step is idempotent given the manifest.
+  *  - '''Commit''' ([[stage]], [[commit]], [[land]]): a writer writes
+  *    every path it changes into a stage beside the root (`<root>__next`,
+  *    which no read of the root can see), at the relative path it takes
+  *    under the root, then commits a [[Swap]]: the paths to replace from
+  *    the stage and the ones to drop (`""` names the root itself). The
+  *    commit writes ONE manifest (`<root>__manifest`, published by
+  *    rename, so it is whole or absent) after the stage write has
+  *    committed, then rolls it forward under `swapLock`: delete + rename
+  *    per replaced path, delete per dropped one, then the stage and the
+  *    manifest go. Every step is idempotent given the manifest. So a
+  *    write that spans trees (an index's postings and stats, a store and
+  *    its band index) lands in all of them or in none, and a rebuild
+  *    replaces exactly its own subtrees: a crashed one leaves the old
+  *    index serving. No writer keeps a write order of its own.
   *  - '''Adopt on read''' ([[heal]]): every reader and writer heals on
   *    entry. A manifest means the commit was decided: roll it forward, so
   *    a crash anywhere after the manifest lands reads as the new content.
   *    A stage WITHOUT a manifest is never adopted — it is a write that
   *    did not finish (a crash mid-write leaves `__next/_temporary`), so
   *    the old content stays live and the next [[stage]] clears it.
-  *  - '''Layout''': one directory per producer batch, `batch=<id>`,
-  *    written with mode=overwrite so a checkpoint-replayed micro-batch
-  *    rewrites its own partition instead of appending duplicates.
-  *    Nested stores add Hive-style partition subdirs below each batch
-  *    dir (`batch=N/cell=M`) for partition-pruned reads.
+  *  - '''Layout''': one directory per producer batch, `batch=<id>`, in
+  *    each tree of the root (the root itself for a flat store); a
+  *    replayed micro-batch replaces its own partition. Nested stores add
+  *    Hive-style partition subdirs below each batch dir
+  *    (`batch=N/cell=M`) for partition-pruned reads. A second tree inside
+  *    a flat store's root takes a `_` name (`_bands`): Spark's file
+  *    listing skips `_`-prefixed names, so a read of the root sees only
+  *    its batches.
+  *  - '''Snapshot pin''' ([[listBatches]]): the listing heals and lists
+  *    under `swapLock`, so it never sees a roll-forward half done — a
+  *    listed batch is committed in every tree it spans. A serving read
+  *    lists once and reads each tree through those explicit paths.
   *  - '''Replay exclusion''' ([[priorBatchPaths]] / [[readPrior]]): the
   *    pre-batch state is read from the EXPLICIT partition paths with
-  *    `batch < batchId`, never via a full-store read + filter. The
-  *    overwrite of `batch=<batchId>` deletes files a full-store file
-  *    index would reference, so replay safety would otherwise hinge on
-  *    static partition pruning keeping them out of the scan — an
-  *    optimizer behavior, not a contract. Listing the directories
-  *    decouples the write target from the read set by construction and
-  *    removes the torn-partition edge (crash mid-write of `batch=N`,
-  *    then replay reads partial files of N).
+  *    `batch < batchId`, never via a full-store read + filter, so a
+  *    replayed batch never reads its own earlier write — by construction,
+  *    not by an optimizer's static partition pruning.
   *  - '''Corruption is loud''': a `batch=` directory whose suffix does
   *    not parse as a long raises, rather than being silently included
   *    or skipped.
   *  - '''Compaction''' ([[compact]]): consolidate every batch with
   *    id <= `upToBatch` into a single partition under the LARGEST
   *    EXISTING id <= `upToBatch` (a fresh id would collide with a
-  *    future producer batch, whose overwrite would then replace the
-  *    consolidated history wholesale). The swap replaces that one
-  *    directory and drops the folded ones; later batches are never
-  *    touched. SAFETY CONTRACT: only compact batch ids the producer's
-  *    checkpoint has committed past — foreachBatch replays at most the
-  *    last uncommitted batch, so `upToBatch = lastBatchId - 1` is always
-  *    safe while a stream is live. Row content is untouched; only
-  *    physical layout changes.
+  *    future producer batch, whose replace would then drop the
+  *    consolidated history wholesale), in every tree of the store. The
+  *    swap replaces that one directory per tree and drops the folded
+  *    ones; later batches are never touched. SAFETY CONTRACT: only
+  *    compact batch ids the producer's checkpoint has committed past —
+  *    foreachBatch replays at most the last uncommitted batch, so
+  *    `upToBatch = lastBatchId - 1` is always safe while a stream is
+  *    live. Row content is untouched; only physical layout changes.
   */
 private[graft] object BatchStore {
 
-  /** JVM-wide mutex for the roll-forward (never held during stage
-    * writes). A serving JVM runs reader threads (whose [[heal]] may roll
-    * a manifest forward) concurrently with the maintenance thread's
-    * [[commit]]; the lock makes each roll-forward one step for every
-    * other thread of the JVM. Across JVMs a heal is a write, under the
-    * documented single-writer contract.
+  /** JVM-wide mutex for the roll-forward and the snapshot listing (never
+    * held during stage writes). A serving JVM runs reader threads (whose
+    * [[heal]] may roll a manifest forward) concurrently with the
+    * maintenance thread's [[commit]]; the lock makes each roll-forward
+    * one step for every other thread of the JVM. Across JVMs a heal is a
+    * write, under the documented single-writer contract.
     */
   private val swapLock = new Object
 
@@ -76,8 +86,8 @@ private[graft] object BatchStore {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** The stage beside `root`: a replacement directory is written under
-    * `dir` at the relative path it takes under the root.
+  /** The stage beside `root`: a replacement path is written under `dir`
+    * at the relative path it takes under the root.
     */
   final case class Stage(fs: FileSystem, root: Path) {
     val dir: Path = new Path(root.toString + "__next")
@@ -115,18 +125,33 @@ private[graft] object BatchStore {
     rollForward(sw.stage.fs, sw.stage.root)
   }
 
+  /** One write as one commit: `write` fills a fresh stage of `path`,
+    * then `replace` and `drop` land through one manifest.
+    */
+  def land(spark: SparkSession, path: String, replace: Seq[String],
+      drop: Seq[String] = Nil)(write: Stage => Unit): Unit = {
+    val st = stage(spark, path)
+    write(st)
+    commit(Swap(st, replace, drop))
+  }
+
   /** The commit point: the manifest is written beside the root and
     * renamed into place, so a reader sees it whole or not at all.
     */
   private[graft] def publish(sw: Swap): Unit = {
-    val fs = sw.stage.fs
     val tmp = manifestTmp(sw.stage.root)
-    val out = fs.create(tmp, true)
-    try out.write((sw.replace.map("+" + _) ++ sw.drop.map("-" + _))
-      .map(_ + "\n").mkString.getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, manifest(sw.stage.root)),
+    writeText(sw.stage.fs, tmp,
+      (sw.replace.map("+" + _) ++ sw.drop.map("-" + _)).map(_ + "\n").mkString)
+    require(sw.stage.fs.rename(tmp, manifest(sw.stage.root)),
       s"BatchStore: failed to publish the manifest of ${sw.stage.root}")
+  }
+
+  /** A small text file (a build marker) at `rel` in the stage. */
+  def stageText(st: Stage, rel: String, text: String): Unit = writeText(st.fs, st.at(rel), text)
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** Adopt on read: roll forward a commit whose manifest landed. */
@@ -142,7 +167,7 @@ private[graft] object BatchStore {
       finally in.close()
     lines.filter(_.startsWith("+")).map(_.drop(1)).foreach { rel =>
       val (src, dst) = (st.at(rel), under(root, rel))
-      // a replaced directory whose stage copy is gone was moved already
+      // a replaced path whose stage copy is gone was moved already
       if (fs.exists(src)) {
         clear(fs, dst)
         if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
@@ -150,34 +175,10 @@ private[graft] object BatchStore {
       }
     }
     lines.filter(_.startsWith("-")).foreach(l => clear(fs, under(root, l.drop(1))))
-    // what is left of the stage is the write job's _SUCCESS marker
+    // what is left of the stage is the write jobs' _SUCCESS markers
     clear(fs, st.dir)
     clear(fs, manifest(root))
   }
-
-  /** Delete a store for a fresh build: the root, and a stage or manifest
-    * a crashed commit of the previous generation left beside it (a
-    * manifest kept would roll forward onto the new tree).
-    */
-  def reset(spark: SparkSession, path: String): Unit = {
-    val (fs, root) = fsPath(spark, path)
-    Seq(manifest(root), manifestTmp(root), Stage(fs, root).dir, root).foreach(clear(fs, _))
-  }
-
-  /** The COMMITTED subset of [[listBatches]]: batch dirs carrying the
-    * job-commit `_SUCCESS` marker. Serving reads that must be atomic
-    * against a concurrent producer pin their snapshot to this set — a
-    * batch directory exists (and fills with task files) before its job
-    * commits, so an unmarked dir is an in-flight or crashed append that
-    * a point-in-time read must not see. Maintenance paths (replay
-    * exclusion, compaction) keep using [[listBatches]]: they run under
-    * the single-writer contract where no in-flight sibling exists, and
-    * must still see a crashed batch's dir to overwrite it.
-    */
-  def committedBatches(fs: FileSystem, p: Path): Seq[(Long, Path)] =
-    listBatches(fs, p).filter { case (_, bp) =>
-      fs.exists(new Path(bp, "_SUCCESS"))
-    }
 
   /** A maintenance swap completing mid-read can surface in exactly two
     * shapes: the pinned path is gone at PLAN time (AnalysisException
@@ -247,45 +248,38 @@ private[graft] object BatchStore {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Enumerate the store's `batch=` partitions as (id, path), healing a
-    * crashed swap first. A suffix that does not parse is a corrupt store
-    * and raises loudly.
+  /** The store's `batch=` partitions in `tree` (`""` = the root) as
+    * (id, path): a snapshot pin — healed and listed under `swapLock`, so
+    * no roll-forward is half done in it. A suffix that does not parse is
+    * a corrupt store and raises loudly.
     */
-  def listBatches(fs: FileSystem, p: Path): Seq[(Long, Path)] = {
-    heal(fs, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map { s =>
-        val suffix = s.getPath.getName.stripPrefix("batch=")
-        val id = scala.util.Try(suffix.toLong).getOrElse(
-          throw new IllegalStateException(
-            s"BatchStore: corrupt store partition '${s.getPath}' — " +
-              "batch= suffix is not a long"))
-        (id, s.getPath)
-      }
-  }
+  def listBatches(fs: FileSystem, root: Path, tree: String = ""): Seq[(Long, Path)] =
+    swapLock.synchronized {
+      heal(fs, root)
+      val p = under(root, tree)
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+        .map { s =>
+          val suffix = s.getPath.getName.stripPrefix("batch=")
+          val id = scala.util.Try(suffix.toLong).getOrElse(
+            throw new IllegalStateException(
+              s"BatchStore: corrupt store partition '${s.getPath}' — " +
+                "batch= suffix is not a long"))
+          (id, s.getPath)
+        }
+    }
 
-  /** The explicit pre-batch read set: every `batch=` path with
+  /** The explicit pre-batch read set: every `batch=` path of `tree` with
     * id < `batchId` (see the object doc for why explicit paths, not a
     * full-store read + filter).
     */
   def priorBatchPaths(
-      spark: SparkSession, path: String, batchId: Long): Seq[String] = {
+      spark: SparkSession, path: String, batchId: Long, tree: String = ""): Seq[String] = {
     val (fs, p) = fsPath(spark, path)
-    listBatches(fs, p).filter(_._1 < batchId).map(_._2.toString)
+    listBatches(fs, p, tree).filter(_._1 < batchId).map(_._2.toString)
   }
 
-  /** Read the pre-batch store state from the explicit prior paths, or an
-    * empty frame of `schema` when no prior batch exists. For nested
-    * stores, Hive-style subdirs below each batch dir surface as
-    * partition columns (include them in `schema` so the empty frame
-    * matches). `basePath` anchors partition parsing at the store root:
-    * without it, multiple `batch=N` roots that themselves contain
-    * partition subdirs trip CONFLICTING_DIRECTORY_STRUCTURES. The read
-    * therefore also carries a `batch` partition column and possibly a
-    * different column ORDER than `schema` — callers select by name.
-    */
   /** Total DATA bytes at rest in the pre-batch partitions (`batch <
     * batchId`) — the driver-side store-size signal a caller's join-plan
     * gate reads (one FS listing, no Spark job; bookkeeping files
@@ -305,24 +299,33 @@ private[graft] object BatchStore {
     }.sum
   }
 
+  /** Read the pre-batch state of `tree` from the explicit prior paths,
+    * or an empty frame of `schema` when no prior batch exists. For nested
+    * stores, Hive-style subdirs below each batch dir surface as
+    * partition columns (include them in `schema` so the empty frame
+    * matches). `basePath` anchors partition parsing at the tree root:
+    * without it, multiple `batch=N` roots that themselves contain
+    * partition subdirs trip CONFLICTING_DIRECTORY_STRUCTURES. The read
+    * therefore also carries a `batch` partition column and possibly a
+    * different column ORDER than `schema` — callers select by name.
+    */
   def readPrior(
       spark: SparkSession, path: String, batchId: Long,
-      schema: StructType): DataFrame = {
-    val prior = priorBatchPaths(spark, path, batchId)
+      schema: StructType, tree: String = ""): DataFrame = {
+    val prior = priorBatchPaths(spark, path, batchId, tree)
     if (prior.nonEmpty) {
-      spark.read.option("basePath", path).parquet(prior: _*)
+      spark.read.option("basePath", under(new Path(path), tree).toString)
+        .parquet(prior: _*)
     } else {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
   }
 
-  /** Consolidate every `batch=` partition with id <= `upToBatch` into a
-    * single partition of `targetFiles` files under the largest existing
-    * id <= `upToBatch`; later partitions stay as they are. A store
-    * fed hourly for months carries thousands of tiny partitions whose
-    * listing and open costs come to dominate every batch's read — the
-    * standard small-files decay of any append-only layout.
+  /** One tree of a [[compact]]ion: its directory under the root (`""` =
+    * the root) and the layout of its consolidated partition. `rows`
+    * supplies the consolidated rows when they are not the tree's own
+    * folded batches (a derived index that may lack legacy batches).
     *
     * `partitionCols` preserves a nested layout (`batch=N/cell=M` →
     * `partitionCols = Seq("cell")`): the consolidated batch is
@@ -334,76 +337,59 @@ private[graft] object BatchStore {
     * compaction would rename the small-files problem, not fix it; the
     * shuffle costs one pass over history, paid at maintenance time for
     * an optimal serving layout (parquet files stay splittable, so a
-    * large cell in one file still reads in parallel). `merge`
-    * post-processes the consolidated rows (e.g. summing additive
-    * per-batch statistics rows).
-    *
-    * See the object doc for the SAFETY CONTRACT and the commit.
+    * large cell in one file still reads in parallel). A flat tree
+    * coalesces to `targetFiles` files. `sortCols` keeps a consolidated
+    * file's rows clustered on the caller's data-column key (e.g. the
+    * bucketed cells layout stores `cell` INSIDE `cbk=` files): the sort
+    * costs nothing extra — the shuffle is already paid — and preserves
+    * the tight per-row-group min/max stats the caller's key-isin filters
+    * skip on. `merge` post-processes the consolidated rows (e.g. summing
+    * additive per-batch statistics rows).
     */
-  def compact(
-      spark: SparkSession, path: String, upToBatch: Long,
-      targetFiles: Int = 8, partitionCols: Seq[String] = Nil,
-      merge: DataFrame => DataFrame = identity,
-      dataSchema: Option[StructType] = None,
-      sortCols: Seq[String] = Nil): Unit =
-    compactPrepare(spark, path, upToBatch, targetFiles, partitionCols, merge,
-        dataSchema, sortCols)
-      .foreach(commit)
+  final case class Tree(
+      rel: String = "", targetFiles: Int = 8, partitionCols: Seq[String] = Nil,
+      sortCols: Seq[String] = Nil, merge: DataFrame => DataFrame = identity,
+      rows: Option[DataFrame] = None)
 
-  /** Phase 1 of [[compact]]: write the consolidated partition into the
-    * stage and return its [[Swap]], or None when there is nothing to
-    * compact. Split from the [[commit]] so a MULTI-TREE store
-    * ([[Retrieval]]'s postings + stats) can stage every tree first and
-    * then commit them back-to-back — the cross-tree window in which a
-    * serving read can pin one tree's old snapshot and the other's new one
-    * shrinks from a full consolidation write (seconds) to two
-    * roll-forwards (milliseconds); the serving retry absorbs it.
+  /** Consolidate every `batch=` partition with id <= `upToBatch` into a
+    * single partition under the largest existing id <= `upToBatch` of the
+    * first tree, in every tree of the store at once (one [[Swap]]); later
+    * partitions stay as they are. A store fed hourly for months carries
+    * thousands of tiny partitions whose listing and open costs come to
+    * dominate every batch's read — the standard small-files decay of any
+    * append-only layout. No trees means the flat store at the root. See
+    * the object doc for the SAFETY CONTRACT and the commit.
     */
-  def compactPrepare(
-      spark: SparkSession, path: String, upToBatch: Long,
-      targetFiles: Int = 8, partitionCols: Seq[String] = Nil,
-      merge: DataFrame => DataFrame = identity,
-      dataSchema: Option[StructType] = None,
-      sortCols: Seq[String] = Nil): Option[Swap] = {
-    val (fs, p) = fsPath(spark, path)
-    val folded = listBatches(fs, p).filter(_._1 <= upToBatch)
-    if (folded.isEmpty) return None
-    val target = s"batch=${folded.map(_._1).max}"
-    val st = stage(spark, path)
-    // `dataSchema` (the store row layout WITHOUT the batch column) lets a
-    // tree whose committed partitions can ALL be file-less — a nested
-    // store where an empty batch's partitionBy write emits only _SUCCESS,
-    // e.g. IncrementalDedup's band index after an all-short seed batch —
-    // compact without tripping parquet schema inference on zero footers.
-    val rootRead = dataSchema match {
-      case Some(s) => spark.read.schema(
-        s.add(org.apache.spark.sql.types.StructField(
-          "batch", org.apache.spark.sql.types.LongType)))
-      case None => spark.read
+  def compact(spark: SparkSession, path: String, upToBatch: Long, trees: Tree*): Unit = {
+    val (fs, root) = fsPath(spark, path)
+    val folded = (if (trees.isEmpty) Seq(Tree()) else trees).map(t =>
+      t -> listBatches(fs, root, t.rel).filter(_._1 <= upToBatch))
+    if (folded.head._2.isEmpty) return
+    val target = s"batch=${folded.head._2.map(_._1).max}"
+    def rel(t: Tree, name: String) = if (t.rel.isEmpty) name else s"${t.rel}/$name"
+    val written = folded.filter { case (t, ps) => ps.nonEmpty || t.rows.nonEmpty }
+    land(spark, path, written.map(w => rel(w._1, target)),
+      folded.flatMap { case (t, ps) =>
+        ps.map(_._2.getName).filter(_ != target).map(rel(t, _)) }) {
+      st =>
+        written.foreach { case (t, ps) =>
+          val df = t.merge(t.rows.getOrElse(
+            spark.read.option("basePath", under(root, t.rel).toString)
+              .parquet(ps.map(_._2.toString): _*).drop("batch")))
+          val out = st.at(rel(t, target)).toString
+          if (t.partitionCols.nonEmpty) {
+            val rep = df.repartition(t.partitionCols.map(col): _*)
+            val clustered =
+              if (t.sortCols.isEmpty) rep
+              else rep.sortWithinPartitions((t.partitionCols ++ t.sortCols).map(col): _*)
+            clustered.write.partitionBy(t.partitionCols: _*).parquet(out)
+          } else {
+            val co = df.coalesce(t.targetFiles)
+            val clustered =
+              if (t.sortCols.isEmpty) co else co.sortWithinPartitions(t.sortCols.map(col): _*)
+            clustered.write.parquet(out)
+          }
+        }
     }
-    val df = merge(rootRead.parquet(path)
-      .filter(col("batch") <= upToBatch).drop("batch"))
-    val out = st.at(target).toString
-    // `sortCols` keeps a consolidated file's rows clustered on the
-    // caller's data-column key (e.g. the bucketed cells layout stores
-    // `cell` INSIDE `cbk=` files): the sort costs nothing extra — the
-    // shuffle is already paid — and preserves the tight per-row-group
-    // min/max stats the caller's key-isin filters skip on.
-    if (partitionCols.nonEmpty) {
-      val rep = df.repartition(partitionCols.map(col): _*)
-      val clustered =
-        if (sortCols.isEmpty) rep
-        else rep.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-      clustered.write.partitionBy(partitionCols: _*).parquet(out)
-    } else {
-      // sortCols clusters the coalesced files too — a flat store's
-      // row-group min/max skip key deserves the same treatment as a
-      // partitioned one's
-      val co = df.coalesce(targetFiles)
-      val clustered =
-        if (sortCols.isEmpty) co else co.sortWithinPartitions(sortCols.map(col): _*)
-      clustered.write.parquet(out)
-    }
-    Some(Swap(st, Seq(target), folded.map(_._2.getName).filter(_ != target)))
   }
 }

@@ -16,21 +16,6 @@ object Checkpoints {
 
   val ReliableCheckpointConf = "spark.graft.reliableCheckpoint"
 
-  /** Public alias of [[materialize]] for query-layer callers that fan a
-    * frame into several downstream actions. The localCheckpoint blocks
-    * live until the session ends or the RDD is GC'd — a long-lived
-    * pipeline driver that is DONE consuming every descendant of the
-    * returned frame should call [[freeFrame]] on it (a query that
-    * RETURNS a descendant, like q_curation_e2e, cannot: the caller's
-    * action still needs the blocks).
-    */
-  def materializeFrame(df: DataFrame): DataFrame = materialize(df)
-
-  /** Public alias of [[free]]: release a [[materializeFrame]] result's
-    * executor blocks once nothing derived from it will execute again.
-    */
-  def freeFrame(df: DataFrame): Unit = free(df)
-
   /** Size-gated scratch persist for multi-scan operators (r17): when the
     * optimizer's `stats.sizeInBytes` estimate of `df` (an upper bound
     * derived from file bytes — no job) fits
@@ -71,34 +56,43 @@ object Checkpoints {
   def materializeScratch(df: DataFrame): DataFrame = {
     val cap = graft.config.ScaleGates.scratchPersistBytesMax(df.sparkSession)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (cap > 0 && est <= BigInt(cap)) materialize(df) else df
+    if (cap > 0 && est <= BigInt(cap)) materializeFrame(df) else df
   }
 
   /** Truncate `df`'s lineage: a reliable `checkpoint` when the session
     * sets [[ReliableCheckpointConf]] to "true", else `localCheckpoint`.
+    * For callers that fan a frame into several downstream actions. The
+    * localCheckpoint blocks live until the session ends or the RDD is
+    * GC'd — a long-lived pipeline driver that is DONE consuming every
+    * descendant of the returned frame should call [[freeFrame]] on it (a
+    * query that RETURNS a descendant, like q_curation_e2e, cannot: the
+    * caller's action still needs the blocks).
     */
-  private[operators] def materialize(df: DataFrame): DataFrame =
+  def materializeFrame(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.getOption(ReliableCheckpointConf).contains("true"))
       df.checkpoint()
     else df.localCheckpoint()
 
-  /** Free the storage behind a frame [[materialize]] produced, once a
-    * newer frame supersedes it — without this an iterative loop holds one
-    * full copy per iteration (localCheckpoint: executor blocks until GC
-    * happens to run the ContextCleaner; reliable checkpoint: one
+  /** Free the storage behind a frame [[materializeFrame]] produced, once
+    * a newer frame supersedes it — without this an iterative loop holds
+    * one full copy per iteration (localCheckpoint: executor blocks until
+    * GC happens to run the ContextCleaner; reliable checkpoint: one
     * ReliableCheckpointRDD file-set per iteration on durable storage,
     * which the ContextCleaner deletes only at GC time and only when
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true`).
     * `Dataset.unpersist` only talks to the cache manager, so this reaches
-    * through the LogicalRDD; the reliable file-set is deleted eagerly via
-    * the RDD's own checkpoint path. Only call once NOTHING derived from
-    * the frame will execute again — after deletion a re-execution of the
-    * frame fails (that is the contract, same as for freed blocks).
+    * through the LogicalRDD: its blocks go through the context directly
+    * (`RDD.unpersist` warns on every local checkpoint that it cannot be
+    * recomputed — exactly what freeing it means), and the reliable
+    * file-set is deleted eagerly via the RDD's own checkpoint path. Only
+    * call once NOTHING derived from the frame will execute again — after
+    * deletion a re-execution of the frame fails (that is the contract,
+    * same as for freed blocks).
     */
-  private[operators] def free(df: DataFrame): Unit =
+  def freeFrame(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
+        org.apache.spark.graft.BenchTaps.unpersistRdd(l.rdd)
         l.rdd.getCheckpointFile.foreach { dir =>
           try {
             val p = new org.apache.hadoop.fs.Path(dir)

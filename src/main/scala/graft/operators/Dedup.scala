@@ -580,7 +580,7 @@ object Dedup {
     * difference between 6 and 64 shuffle rounds on a 100 TB corpus with
     * one adversarial boilerplate chain. `maxIterations` still bounds the
     * loop, and non-convergence RAISES rather than returning a silently
-    * half-merged clustering. Per-round [[Checkpoints.materialize]]
+    * half-merged clustering. Per-round [[Checkpoints.materializeFrame]]
     * truncates the logical plan (the iterated self-reference would
     * otherwise grow the lineage exponentially and planning, not
     * execution, becomes the bottleneck); the superseded round's blocks
@@ -736,7 +736,7 @@ object Dedup {
       canon: DataFrame, maxIterations: Int): (DataFrame, Int) = {
     // the local contraction pre-pass preserves canonicity: star edges
     // point node → a strictly smaller local min
-    var e = Checkpoints.materialize(localContract(canon).distinct())
+    var e = Checkpoints.materializeFrame(localContract(canon).distinct())
     var eCount = e.count()
     var it = 0
     var converged = false
@@ -745,24 +745,24 @@ object Dedup {
       val sym = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
       val mnAll = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      val ls = Checkpoints.materialize(sym.join(mnAll, Seq("u"))
+      val ls = Checkpoints.materializeFrame(sym.join(mnAll, Seq("u"))
         .filter(col("v") > col("u"))
         .select(col("v").as("a"), least(col("mn"), col("u")).as("b"))
         .distinct())
       // small-star: u and its smaller neighbors re-point to their min
       // (edges are canonical a > b, so N_small(a) is just the b side)
       val mnSmall = ls.groupBy(col("a").as("u")).agg(min(col("b")).as("mn"))
-      val ss = Checkpoints.materialize(
+      val ss = Checkpoints.materializeFrame(
         ls.join(mnSmall, ls("a") === mnSmall("u"))
           .filter(col("b") =!= col("mn"))
           .select(col("b").as("a"), col("mn").as("b"))
           .unionByName(mnSmall.select(col("u").as("a"), col("mn").as("b")))
           .distinct())
-      Checkpoints.free(ls)
+      Checkpoints.freeFrame(ls)
       val ssCount = ss.count()
       converged = ssCount == eCount &&
         ss.join(e, Seq("a", "b"), "left_anti").isEmpty
-      Checkpoints.free(e)
+      Checkpoints.freeFrame(e)
       e = ss
       eCount = ssCount
       it += 1
@@ -771,7 +771,7 @@ object Dedup {
       // release the live edge copy before raising — the error path must
       // not leak executor storage (or reliable-checkpoint files) that
       // only session teardown would otherwise reclaim
-      Checkpoints.free(e)
+      Checkpoints.freeFrame(e)
       throw new IllegalStateException(
         s"connectedComponents: not converged after $maxIterations rounds — " +
           "raise maxIterations")

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *     shingle length carry no bands and can never match or be matched;
   *  2. candidate pairs via band-bucket equality — batch×batch (self-join)
   *     and batch×store (join against the NARROW band-index tree at
-  *     `<store>__bands`, partition-pruned to the batch's colliding
+  *     `<store>/_bands`, partition-pruned to the batch's colliding
   *     buckets; the store's signatures are fetched afterwards for the
   *     distinct colliding ids alone);
   *  3. verification by ESTIMATED Jaccard — the fraction of agreeing
@@ -39,12 +39,12 @@ import org.apache.spark.sql.functions._
   *     member matched, else its minimum member id — so store-connected
   *     clusters suppress entirely and fresh clusters keep exactly one
   *     survivor;
-  *  5. the labeled batch lands in the store at `batch=<batchId>` with
-  *     mode=overwrite — a REPLAYED micro-batch rewrites its own
-  *     partition byte-for-byte instead of appending duplicates, so the
-  *     store is idempotent under failure/restart replay with no
-  *     swap-rename dance (partitions are append-only across DISTINCT
-  *     batches).
+  *  5. the labeled batch lands at `batch=<batchId>`, and its band rows
+  *     at `_bands/batch=<batchId>`, in one [[BatchStore]] commit — a
+  *     REPLAYED micro-batch replaces its own partitions instead of
+  *     appending duplicates, so the store is idempotent under
+  *     failure/restart replay (partitions are append-only across
+  *     DISTINCT batches), and the two trees never disagree on a batch.
   *
   * Monotonicity contract (the honest cost of incrementality): emitted
   * survivors are never retracted. If a later "bridge" doc near-matches
@@ -101,7 +101,7 @@ object IncrementalDedup {
   private def storeSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "doc_id BIGINT, text STRING, sig ARRAY<BIGINT>, bands ARRAY<BIGINT>, rep_id BIGINT, survivor BOOLEAN")
 
-  /** Partition fan of the band-index tree (`<store>__bands`): each
+  /** Partition fan of the band-index tree (`<store>/_bands`): each
     * batch's exploded (band hash, doc id) rows land under
     * `batch=<id>/bucket=pmod(hash(band), BandBuckets)`. The index is
     * what the batch×store candidate join reads INSTEAD of exploding the
@@ -126,8 +126,11 @@ object IncrementalDedup {
   private def broadcastIfLocal(df: DataFrame, isLocal: Boolean): DataFrame =
     if (isLocal) broadcast(df) else df
 
-  private[operators] def bandsRoot(storePath: String): String =
-    storePath + "__bands"
+  /** The band index's tree under the store root: the `_` name keeps it
+    * out of every read of the root, which Spark's file listing sees as
+    * the store's batches only.
+    */
+  private[graft] val BandsTree = "_bands"
 
   private def bandIndexSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "__b BIGINT, __sid BIGINT, bucket INT")
@@ -143,35 +146,32 @@ object IncrementalDedup {
         pmod(hash(col("__b")), lit(BandBuckets)).cast("int").as("bucket"))
 
   /** The pre-batch band index: every prior batch's (band, doc_id)
-    * rows. An index partition counts only when its job-commit
-    * `_SUCCESS` marker exists — a torn index write (crash between the
-    * main and index writes of one batch) must not serve a PARTIAL band
-    * set, which would silently drop candidates. Batches whose index
-    * partition is missing or uncommitted — legacy stores, torn writes —
+    * rows. A batch commits its main and index partitions together, so
+    * an index partition present is a whole one. Batches with NO index
+    * partition — legacy stores written before the index tree existed —
     * are DERIVED from the main tree's `bands` column on the fly:
     * correctness never depends on the index, only speed does.
     */
   private def readPriorBands(
       spark: SparkSession, storePath: String, batchId: Long): DataFrame = {
-    val idxRoot = bandsRoot(storePath)
-    val (mfs, mp) = BatchStore.fsPath(spark, storePath)
-    val (ifs, ip) = BatchStore.fsPath(spark, idxRoot)
-    val mainIds = BatchStore.listBatches(mfs, mp).filter(_._1 < batchId)
-    val committed = BatchStore.committedBatches(ifs, ip).filter(_._1 < batchId)
-    val committedIds = committed.map(_._1).toSet
+    val (fs, root) = BatchStore.fsPath(spark, storePath)
+    val mainIds = BatchStore.listBatches(fs, root).filter(_._1 < batchId)
+    val indexedIds = BatchStore.listBatches(fs, root, BandsTree)
+      .filter(_._1 < batchId)
     val indexed =
-      if (committed.nonEmpty)
-        // EXPLICIT schema: a committed all-short batch writes a file-less
-        // index partition (empty frame + partitionBy emits only _SUCCESS);
-        // when every committed partition is file-less, schema inference
-        // has no footer to read and the whole arrival crashes. The index
-        // schema is a constant of the layout — never infer it.
-        spark.read.schema(bandIndexSchema).option("basePath", idxRoot)
-          .parquet(committed.map(_._2.toString): _*)
+      if (indexedIds.nonEmpty)
+        // EXPLICIT schema: an all-short batch writes a file-less index
+        // partition (empty frame + partitionBy emits only _SUCCESS); when
+        // every prior partition is file-less, schema inference has no
+        // footer to read and the whole arrival crashes. The index schema
+        // is a constant of the layout — never infer it.
+        spark.read.schema(bandIndexSchema)
+          .option("basePath", s"$storePath/$BandsTree")
+          .parquet(indexedIds.map(_._2.toString): _*)
           .select(col("__b"), col("__sid"), col("bucket"))
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bandIndexSchema)
-    val missing = mainIds.filterNot { case (b, _) => committedIds.contains(b) }
+    val missing = mainIds.filterNot { case (b, _) => indexedIds.exists(_._1 == b) }
     if (missing.isEmpty) indexed
     else indexed.unionByName(deriveBands(
       spark.read.option("basePath", storePath)
@@ -198,7 +198,7 @@ object IncrementalDedup {
     // the one batch-sized exchange the store's plan shape promises. The
     // hints/explicit gates only cover the self-join and candidate joins,
     // not the labeling tail.
-    val banded = Checkpoints.materialize(
+    val banded = Checkpoints.materializeFrame(
       keyed.filter(size(col("__toks")) >= shingleLen)
         .select(col("doc_id"), col("text"),
           Dedup.shinglesOfTokens(col("__toks"), shingleLen).as("__sh"))
@@ -433,24 +433,24 @@ object IncrementalDedup {
           col("doc_id").as("rep_id"), lit(true).as("survivor"))
       val out = bandedOut.unionByName(shortOut)
 
-      out.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-      // band index AFTER the main tree (a crash between the two leaves a
-      // main batch the index lacks — readPriorBands derives it from the
-      // main tree, so the gap costs speed, never correctness; the replay
-      // overwrite repairs both). repartition(bucket) puts each bucket in
-      // exactly one task = one file per bucket dir.
-      deriveBands(banded)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"${bandsRoot(storePath)}/batch=$batchId")
+      // both trees in one commit; repartition(bucket) puts each bucket in
+      // exactly one task = one file per bucket dir
+      BatchStore.land(spark, storePath,
+          Seq(s"batch=$batchId", s"$BandsTree/batch=$batchId")) { st =>
+        out.write.parquet(st.at(s"batch=$batchId").toString)
+        deriveBands(banded)
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket")
+          .parquet(st.at(s"$BandsTree/batch=$batchId").toString)
+      }
       spark.read.parquet(s"$storePath/batch=$batchId")
         .select(col("doc_id"), col("text"), col("rep_id"), col("survivor"))
     } finally {
-      // unpersist and Checkpoints.free are idempotent on already-freed
+      // unpersist and Checkpoints.freeFrame are idempotent on already-freed
       // frames, so the eager success-path frees above stay: they release
       // block-manager memory BEFORE the heavy labeling stage rather than
       // merely eventually
-      Checkpoints.free(banded)
+      Checkpoints.freeFrame(banded)
       scratch.foreach(_.unpersist(false))
     }
   }
@@ -527,11 +527,14 @@ object IncrementalDedup {
   }
 
   /** Compact the store: consolidate every `batch=<id>` partition with
-    * id <= `upToBatch` into a single `batch=<upToBatch>` partition of
-    * `targetFiles` files, preserving later partitions verbatim. A store
-    * fed hourly for months carries thousands of tiny partitions whose
-    * listing and open costs come to dominate every batch's read — the
-    * standard small-files decay of any append-only layout.
+    * id <= `upToBatch` into a single partition of `targetFiles` files
+    * under the largest existing id <= `upToBatch`, in both trees (the
+    * band index keeps its bucket layout, so the batch-bucket prune stays
+    * valid over consolidated history), preserving later partitions
+    * verbatim. A store fed hourly for months carries thousands of tiny
+    * partitions whose listing and open costs come to dominate every
+    * batch's read — the standard small-files decay of any append-only
+    * layout.
     *
     * SAFETY CONTRACT: only compact batches the stream's checkpoint has
     * committed past. foreachBatch replays AT MOST the last uncommitted
@@ -543,64 +546,19 @@ object IncrementalDedup {
     * so suppression semantics before and after compaction are equal
     * (spec-pinned).
     *
-    * Crash safety: the [[BatchStore]] commit — the consolidated
-    * partition is staged beside the store and swapped in through a
-    * manifest that every reader ([[lshDedupBatch]], [[survivors]], this
-    * method) rolls forward on entry.
+    * The consolidated index partition covers the consolidated main
+    * batches EXACTLY: its rows are [[readPriorBands]]'s, so a legacy
+    * batch without an index partition is derived into it — compaction
+    * collapses batch identity, after which no per-batch fallback could
+    * catch the gap. Crash safety: both trees land through one
+    * [[BatchStore]] commit, which every reader ([[lshDedupBatch]],
+    * [[survivors]], this method) rolls forward on entry.
     */
   def compactStore(
       spark: SparkSession, storePath: String, upToBatch: Long,
-      targetFiles: Int = 8): Unit = {
-    // two-tree store: stage BOTH replacement trees fully, then swap
-    // back-to-back (the Retrieval.compactIndex discipline) so a
-    // concurrent reader's pin can straddle at most the two roll-forwards.
-    // The bucket layout survives compaction (partitionCols), keeping
-    // the batch-bucket prune valid over consolidated history.
-    //
-    // BACKFILL FIRST: compaction collapses batch identity, so the
-    // consolidated index partition must cover the consolidated main
-    // membership EXACTLY — a legacy batch (written before the index
-    // tree existed) or a torn index write that slipped into the
-    // consolidation would silently drop its docs from all future
-    // candidate generation, with no fallback left to catch it
-    // (readPriorBands derives per missing BATCH, and after compaction
-    // the batch is "present"). Every main batch <= upToBatch therefore
-    // gets a committed index partition before either tree stages; the
-    // backfill write is row-identical to what the batch write would
-    // have landed (deriveBands), so it is idempotent under replay.
-    val idxRoot = bandsRoot(storePath)
-    locally {
-      val (mfs, mp) = BatchStore.fsPath(spark, storePath)
-      val (ifs, ip) = BatchStore.fsPath(spark, idxRoot)
-      // this method also compacts OTHER batch-keyed stores (segment,
-      // perceptual — the shared layout-maintenance discipline): only a
-      // tree actually carrying the LSH signature schema has a band
-      // index to backfill
-      val mainBatches = BatchStore.listBatches(mfs, mp)
-      val isLshTree = mainBatches.nonEmpty && {
-        val cols = scala.util.Try(
-          spark.read.parquet(storePath).columns.toSet).getOrElse(Set.empty[String])
-        cols.contains("doc_id") && cols.contains("bands")
-      }
-      if (isLshTree) {
-        val committedIdx = BatchStore.committedBatches(ifs, ip).map(_._1).toSet
-        mainBatches
-          .filter { case (b, _) => b <= upToBatch && !committedIdx.contains(b) }
-          .foreach { case (b, bp) =>
-            deriveBands(spark.read.option("basePath", storePath)
-                .parquet(bp.toString))
-              .repartition(col("bucket"))
-              .write.mode("overwrite").partitionBy("bucket")
-              .parquet(s"$idxRoot/batch=$b")
-          }
-      }
-    }
-    val main = BatchStore.compactPrepare(spark, storePath, upToBatch, targetFiles)
-    // explicit schema: the index tree's committed partitions can ALL be
-    // file-less (all-short batches), leaving zero footers to infer from
-    val idx = BatchStore.compactPrepare(spark, idxRoot, upToBatch,
-      partitionCols = Seq("bucket"), dataSchema = Some(bandIndexSchema))
-    main.foreach(BatchStore.commit)
-    idx.foreach(BatchStore.commit)
-  }
+      targetFiles: Int = 8): Unit =
+    BatchStore.compact(spark, storePath, upToBatch,
+      BatchStore.Tree(targetFiles = targetFiles),
+      BatchStore.Tree(BandsTree, partitionCols = Seq("bucket"),
+        rows = Some(readPriorBands(spark, storePath, upToBatch + 1))))
 }

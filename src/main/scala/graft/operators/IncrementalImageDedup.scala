@@ -37,10 +37,10 @@ import org.apache.spark.sql.functions._
   *  4. batch-internal clusters via [[Dedup.connectedComponents]]; each
   *     cluster adopts the minimum store rep any member matched, else its
   *     minimum member id;
-  *  5. the labeled batch lands at `batch=<batchId>` with mode=overwrite —
-  *     idempotent under streaming replay, append-only across distinct
-  *     batches. [[IncrementalDedup.compactStore]] applies to this store
-  *     unchanged (same `batch=` layout, content-agnostic consolidation).
+  *  5. the labeled batch lands at `batch=<batchId>` through one
+  *     [[BatchStore]] commit — idempotent under streaming replay,
+  *     append-only across distinct batches, compactable by
+  *     [[BatchStore.compact]] (content-agnostic consolidation).
   *
   * Monotonicity contract: identical to [[IncrementalDedup]] — emitted
   * survivors are never retracted; a later bridge image suppresses under
@@ -179,7 +179,8 @@ object IncrementalImageDedup {
         .select(col("media_id"), col("dh"), col("rep_id"),
           (col("rep_id") === col("media_id")).as("survivor"))
 
-      out.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      BatchStore.land(spark, storePath, Seq(s"batch=$batchId"))(st =>
+        out.write.parquet(st.at(s"batch=$batchId").toString))
       spark.read.parquet(s"$storePath/batch=$batchId")
         .select(col("media_id"), col("rep_id"), col("survivor"))
     } finally scratch.foreach(_.unpersist(false))

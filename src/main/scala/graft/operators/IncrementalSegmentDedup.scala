@@ -38,13 +38,13 @@ import org.apache.spark.sql.functions._
   *  3. losers (within-batch or store-suppressed) drop; survivors
   *     reassemble per document in original order with the keep-fraction
   *     flag, exactly like the batch operator;
-  *  4. the batch's NOVEL segments land at `batch=<batchId>` with
-  *     mode=overwrite. The store read EXCLUDES partitions >= the current
-  *     batch id, so a checkpoint-replayed micro-batch recomputes against
-  *     the exact pre-batch state and rewrites its own partition
+  *  4. the batch's NOVEL segments land at `batch=<batchId>` through one
+  *     [[BatchStore]] commit. The store read EXCLUDES partitions >= the
+  *     current batch id, so a checkpoint-replayed micro-batch recomputes
+  *     against the exact pre-batch state and replaces its own partition
   *     byte-for-byte — idempotent under failure/restart replay
   *     (spec-pinned), append-only across distinct batches, and
-  *     compactable by [[IncrementalDedup.compactStore]]'s discipline.
+  *     compactable by [[BatchStore.compact]].
   *
   * Requirements: ids non-negative, unique, and increasing across batches
   * fed to one store (the equality-with-one-shot contract orders election
@@ -187,9 +187,11 @@ object IncrementalSegmentDedup {
       // no checkpoint needed, and the returned frame's lineage (batch
       // projection + own written partition) stays re-executable because
       // both are fixed regardless of later batches landing in the store
-      novel.select(col("__h").as("seg_hash"), col("__seg").as("seg"),
-          col("__id").as("first_doc_id"), col("__idx").as("first_idx"))
-        .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      BatchStore.land(spark, storePath, Seq(s"batch=$batchId")) { st =>
+        novel.select(col("__h").as("seg_hash"), col("__seg").as("seg"),
+            col("__id").as("first_doc_id"), col("__idx").as("first_idx"))
+          .write.parquet(st.at(s"batch=$batchId").toString)
+      }
     } finally scratch.foreach(_.unpersist(false))
     val written = spark.read.parquet(s"$storePath/batch=$batchId")
 

@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
   *     keep-policy winner: the member with the LOWEST centroid cosine
   *     (SemDeDup's farthest-from-centroid rule), not min id, so the
   *     one-shot and incremental keep policies agree on day one;
-  *  5. land at `batch=<batchId>` with mode=overwrite; the store read
+  *  5. land at `rows/batch=<batchId>` through one [[BatchStore]]
+  *     commit (a replay replaces its own partition); the store read
   *     takes ONLY the explicit `batch < batchId` partition paths
   *     ([[BatchStore.readPrior]]), so a checkpoint-replayed micro-batch
   *     recomputes against the exact pre-batch state — structurally
@@ -74,8 +75,10 @@ object IncrementalSemDedup {
 
   /** Write the fixed centroid geometry from a SEED corpus (typically the
     * first batch, or a representative sample). Must run once before any
-    * [[semDedupBatch]]; re-running overwrites the whole store (a new
-    * index generation).
+    * [[semDedupBatch]]; re-running starts a new index generation: one
+    * commit replaces the geometry and drops every stored row, so a crash
+    * leaves either the old store or the new one, never centroids without
+    * their codebooks.
     *
     * `pqM > 0` switches the store to PQ-CODED rows: per-subspace
     * codebooks (m = pqM, ks = pqKs, normalized inputs) are trained on
@@ -94,11 +97,9 @@ object IncrementalSemDedup {
     val lists =
       if (nlist > 0) nlist
       else Embeddings.deriveNlist(src.count())
-    // ALL training happens before anything destructive: a pqCodebooks
-    // failure (dim % m != 0, a seed smaller than ks, a null embedding)
-    // after the store delete would leave centroids-without-books —
-    // indistinguishable from an intentional float store, so every later
-    // batch would silently run full-width float rows instead of failing
+    // ALL training happens before the stage write: a pqCodebooks failure
+    // (dim % m != 0, a seed smaller than ks, a null embedding) leaves the
+    // store untouched
     val mat = Embeddings.computeCentroids(
       src, col("__id"), col("__e"), lists, refineIterations, seedValue,
       portableSample)
@@ -108,18 +109,12 @@ object IncrementalSemDedup {
           src, col("__id"), col("__e"), pqM, pqKs, refineIterations,
           seedValue, portableSample, normalize = true)
       else Seq.empty
-    BatchStore.reset(spark, storePath)
-    spark.createDataFrame(mat.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$storePath/centroids")
-    if (books.nonEmpty) {
-      spark.createDataFrame(
-          for ((bj, j) <- books.zipWithIndex; (cw, c) <- bj.zipWithIndex)
-            yield (j, c + 1, cw))
-        .toDF("j", "ci", "sub")
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$storePath/pq_books")
+    // a float store drops the books of a previous PQ generation
+    val booksTree = if (books.nonEmpty) Seq("pq_books") else Nil
+    BatchStore.land(spark, storePath, "centroids" +: booksTree,
+        drop = "rows" +: Seq("pq_books").diff(booksTree)) { st =>
+      IvfCells.writeCentroids(spark, mat, st)
+      if (books.nonEmpty) IvfCells.writeCodebooks(spark, books, st.at("pq_books"))
     }
   }
 
@@ -173,6 +168,8 @@ object IncrementalSemDedup {
       s"threshold must be in (0, 1], got $threshold")
     require(adcSlack >= 0.0 && adcSlack < threshold,
       s"adcSlack must be in [0, threshold), got $adcSlack")
+    // heals the root first, so the geometry read below is committed
+    val st = BatchStore.stage(spark, storePath)
     val mat = readCentroids(spark, storePath)
     val books = readPqBooks(spark, storePath)
     // persisted, not checkpointed (the r16 job-floor cut): the first
@@ -221,12 +218,11 @@ object IncrementalSemDedup {
       // its own, possibly torn, prior write). Cell pruning survives: each
       // batch dir's cell= subdirs surface as the `cell` partition column,
       // so the isin filter still prunes directories at file-index time.
-      val rowsPath = s"$storePath/rows"
       // PQ mode: the store side is the packed code's codeword
       // reconstruction; the comparison is asymmetric (exact batch float vs
       // reconstructed store row) at threshold − adcSlack
-      val store = BatchStore.readPrior(spark, rowsPath, batchId,
-          if (books.nonEmpty) pqStoreSchema else storeSchema)
+      val store = BatchStore.readPrior(spark, storePath, batchId,
+          if (books.nonEmpty) pqStoreSchema else storeSchema, tree = "rows")
         .filter(col("cell").isin(touchedCells: _*))
         .select(col("vec_id").as("__sid"), col("cell"),
           (if (books.nonEmpty) reconOf(col("code"), books) else col("emb"))
@@ -288,16 +284,17 @@ object IncrementalSemDedup {
       // time (an 8× production-rate cut at 32 tasks before compaction
       // ever runs)
       outRows.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$rowsPath/batch=$batchId")
-      spark.read.parquet(s"$rowsPath/batch=$batchId")
+        .write.partitionBy("cell")
+        .parquet(st.at(s"rows/batch=$batchId").toString)
+      BatchStore.commit(BatchStore.Swap(st, Seq(s"rows/batch=$batchId")))
+      spark.read.parquet(s"$storePath/rows/batch=$batchId")
         .select(col("vec_id"), col("rep_id"), col("survivor"))
     } finally assigned.unpersist(false)
   }
 
   /** The store's accepted (surviving) items. */
   def survivors(spark: SparkSession, storePath: String): DataFrame = {
-    val (fs, p) = BatchStore.fsPath(spark, s"$storePath/rows")
+    val (fs, p) = BatchStore.fsPath(spark, storePath)
     BatchStore.heal(fs, p)
     spark.read.parquet(s"$storePath/rows")
       .filter(col("survivor"))
@@ -318,6 +315,6 @@ object IncrementalSemDedup {
     */
   def compactStore(
       spark: SparkSession, storePath: String, upToBatch: Long): Unit =
-    BatchStore.compact(spark, s"$storePath/rows", upToBatch,
-      partitionCols = Seq("cell"))
+    BatchStore.compact(spark, storePath, upToBatch,
+      BatchStore.Tree("rows", partitionCols = Seq("cell")))
 }

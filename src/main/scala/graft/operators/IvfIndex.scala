@@ -38,7 +38,9 @@ import org.apache.spark.sql.functions._
   * the dominant small-files producer of the r14 capstone ladder, and at
   * a production nlist of 10k+ an unusable 10k files per append); probes
   * keep directory pruning on `cbk` and recover cell granularity from
-  * parquet row-group min/max stats on the sorted `cell` column.
+  * parquet row-group min/max stats on the sorted `cell` column. Every
+  * write (build, append, compaction, migration) lands the trees it
+  * changes through one [[BatchStore]] commit on `path`.
   * Embeddings are stored in their source
   * precision; every dot runs in doubles either way (DotFExpr casts), so
   * probe() cosines are bit-identical to [[Embeddings.ivfTopK]]'s over
@@ -49,8 +51,8 @@ object IvfIndex {
   private def metaSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "nlist INT, dim INT, replicas INT, seed BIGINT, refine_iterations INT")
 
-  /** Build the index from scratch at `path` (overwrites a previous index
-    * wholesale). Centroid geometry mirrors [[Embeddings.ivfTopK]]:
+  /** Build the index from scratch at `path` (replaces a previous index
+    * in one commit). Centroid geometry mirrors [[Embeddings.ivfTopK]]:
     * nlist = -1 derives ⌈√n⌉.
     */
   def build(
@@ -64,24 +66,22 @@ object IvfIndex {
     val mat = Embeddings.computeCentroids(
       corpus, id, emb, lists, refineIterations, seed, portableSample = false)
     val dim = mat.headOption.map(_.length).getOrElse(0)
-    spark.createDataFrame(
-        mat.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(
-          lists, dim, replicas, seed, refineIterations)), 1), metaSchema)
-      .write.mode("overwrite").parquet(s"$path/meta")
-    // a fresh build owns the whole cells tree: clear stale batches from a
-    // previous index generation before writing batch=0
-    BatchStore.reset(spark, s"$path/cells")
-    writeBatch(assign(corpus, id, emb, mat, replicas), path, batchId = 0L)
+    // one commit replaces the index's three trees: a crashed rebuild
+    // leaves the previous index serving, never new centroids beside old
+    // cells
+    BatchStore.land(spark, path, Seq("centroids", "meta", "cells")) { st =>
+      IvfCells.writeCentroids(spark, mat, st)
+      spark.createDataFrame(
+          spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(
+            lists, dim, replicas, seed, refineIterations)), 1), metaSchema)
+        .write.parquet(st.at("meta").toString)
+      IvfCells.writeBucketed(assign(corpus, id, emb, mat, replicas), st, batchId = 0L)
+    }
   }
 
   /** Assign `rows` to the STORED centroids and land them as `batch=
     * $batchId` — no re-index, no touch of earlier batches. Idempotent on
-    * replay of the same batchId (partition overwrite of its own dir).
+    * replay of the same batchId (the commit replaces its own dir).
     */
   def append(
       spark: SparkSession, rows: DataFrame, id: Column, emb: Column,
@@ -93,7 +93,7 @@ object IvfIndex {
     // error that never names the cause
     IvfCells.resolveCells(spark, path)
     val (mat, replicas) = readCentroids(spark, path)
-    writeBatch(assign(rows, id, emb, mat, replicas), path, batchId)
+    IvfCells.append(spark, assign(rows, id, emb, mat, replicas), path, batchId)
   }
 
   /** Top-k cosine neighbors for each probe against the stored index —
@@ -105,6 +105,13 @@ object IvfIndex {
       probes: DataFrame, probeId: Column, probeEmb: Column,
       k: Int = 5, nprobe: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // SNAPSHOT PIN (the [[Retrieval.queryIndex]] serving discipline),
+    // taken first so the centroids read below is healed too: the cells
+    // tree is read through the explicit committed batch paths, listed
+    // once; a concurrent compaction swap can only invalidate a pinned
+    // path and fail loudly — retried under [[BatchStore.servingRead]],
+    // never a torn answer.
+    val (cellsRoot, committedCells) = IvfCells.pin(spark, path)
     val (mat, replicas) = readCentroids(spark, path)
     def cellScores(e: Column): Column = Embeddings.cellScoresFor(mat)(e)
     val probeScored = probes.select(probeId.as("probe_id"), probeEmb.as("__pe"))
@@ -124,24 +131,12 @@ object IvfIndex {
     // probes·nprobe.
     val neededCells = probeCells.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    // SNAPSHOT PIN (the [[Retrieval.queryIndex]] serving discipline):
-    // read the cells tree through the explicit COMMITTED batch paths,
-    // resolved once. The cells tree is single, so any committed prefix
-    // is a quiesced state; the pin keeps a concurrent append's
-    // in-flight batch (dir present, job not yet committed) out of the
-    // scan, and a concurrent compaction swap can only invalidate a
-    // pinned path and fail loudly — retried under
-    // [[BatchStore.servingRead]], never a torn answer.
-    val cellsRoot = IvfCells.resolveCells(spark, path)
-    val (cfs, cellsP) = BatchStore.fsPath(spark, cellsRoot)
-    val committedCells = BatchStore.committedBatches(cfs, cellsP)
-    require(committedCells.nonEmpty, s"IvfIndex: no committed batches at $cellsRoot")
     // two-level prune: `cbk` is the partition dir (file-index-time
     // prune), `cell` the sorted data column (parquet row-group skip on
     // min/max stats — the bucketed-layout recovery of cell granularity)
     val neededBuckets = neededCells.map(IvfCells.bucketOf).distinct.sorted
     val cells = spark.read.option("basePath", cellsRoot)
-      .parquet(committedCells.map(_._2.toString): _*)
+      .parquet(committedCells: _*)
       .filter(col("cbk").isin(neededBuckets.toIndexedSeq: _*) &&
         col("cell").isin(neededCells.toIndexedSeq: _*))
       .select(col("neighbor_id"), col("emb"), col("nrm"), col("cell"))
@@ -193,9 +188,6 @@ object IvfIndex {
     assigned.withColumn("nrm", Embeddings.norm(col("emb")))
   }
 
-  private def writeBatch(assigned: DataFrame, path: String, batchId: Long): Unit =
-    IvfCells.writeBucketed(assigned, s"$path/cells/batch=$batchId")
-
   /** Consolidate `batch=` partitions with id <= `upToBatch` into one,
     * preserving the cell partitioning — see [[IvfCells.compact]] for the
     * safety contract.
@@ -222,10 +214,10 @@ object IvfIndex {
   *    id <= upToBatch (never a fresh id — the caller hands out ids past
   *    its last committed batch, and a future batch landing on a fresh
   *    consolidated id would overwrite-replace the whole consolidation);
-  *  - later batches are copied verbatim;
-  *  - the new tree is written BESIDE the store and swapped in, with the
-  *    [[IncrementalDedup]] adopt-on-restart self-heal for a crash
-  *    between delete and rename.
+  *  - later batches are never touched;
+  *  - the consolidated partition is staged beside the index root and
+  *    swapped in by one [[BatchStore]] commit, which every read rolls
+  *    forward on entry.
   *
   * SAFETY CONTRACT: only compact batch ids whose producer is fully
   * committed — replaying a COMPACTED id afterward would land a fresh
@@ -249,30 +241,63 @@ private[operators] object IvfCells {
   /** Driver-side twin of the write-path bucket expression. */
   def bucketOf(cell: Int): Int = ((cell % CellBuckets) + CellBuckets) % CellBuckets
 
-  /** Land one batch's assigned/encoded rows in the bucketed layout:
-    * one shuffle keyed on the bucket (each bucket in exactly ONE task =
-    * one file per touched `cbk=` dir), rows sorted by cell within the
-    * task for tight row-group stats.
+  /** Write one batch's assigned/encoded rows in the bucketed layout
+    * into the stage (`cells/batch=<batchId>`): one shuffle keyed on the
+    * bucket (each bucket in exactly ONE task = one file per touched
+    * `cbk=` dir), rows sorted by cell within the task for tight
+    * row-group stats.
     */
-  def writeBucketed(rows: DataFrame, batchDir: String): Unit =
+  def writeBucketed(rows: DataFrame, st: BatchStore.Stage, batchId: Long): Unit =
     rows
       .withColumn("cbk", pmod(col("cell"), lit(CellBuckets)).cast("int"))
       .repartition(col("cbk"))
       .sortWithinPartitions(col("cbk"), col("cell"))
-      .write.mode("overwrite")
+      .write
       .partitionBy("cbk")
-      .parquet(batchDir)
+      .parquet(st.at(s"cells/batch=$batchId").toString)
+
+  /** The centroid matrix as `(cell, centroid)` rows, into the stage. */
+  def writeCentroids(spark: SparkSession, mat: Seq[Seq[Double]], st: BatchStore.Stage): Unit =
+    spark.createDataFrame(mat.zipWithIndex.map { case (c, i) => (i, c) })
+      .toDF("cell", "centroid")
+      .repartition(1)
+      .write.parquet(st.at("centroids").toString)
+
+  /** PQ codebooks as `(j, ci, sub)` rows (`ci` 1-based), at `dir`. */
+  def writeCodebooks(
+      spark: SparkSession, books: Seq[Seq[Seq[Double]]], dir: org.apache.hadoop.fs.Path): Unit =
+    spark.createDataFrame(
+        for ((bj, j) <- books.zipWithIndex; (cw, c) <- bj.zipWithIndex) yield (j, c + 1, cw))
+      .toDF("j", "ci", "sub")
+      .repartition(1)
+      .write.parquet(dir.toString)
+
+  /** Land one appended batch: one commit replacing its cells dir. */
+  def append(spark: SparkSession, rows: DataFrame, path: String, batchId: Long): Unit =
+    BatchStore.land(spark, path, Seq(s"cells/batch=$batchId"))(writeBucketed(rows, _, batchId))
 
   /** Resolve the readable cells tree at `path`, healing a crashed
-    * [[compact]] or [[migrate]] commit first ([[BatchStore.heal]]): all
-    * read paths resolve through here, so the store self-heals on first
-    * touch. Returns the cells path string for `spark.read.parquet`.
+    * commit first ([[BatchStore.heal]]): all read paths resolve through
+    * here, so the store self-heals on first touch. Returns the cells
+    * path string for `spark.read.parquet`.
     */
   def resolveCells(spark: SparkSession, path: String): String = {
-    val (fs, cells) = BatchStore.fsPath(spark, s"$path/cells")
-    BatchStore.heal(fs, cells)
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    BatchStore.heal(fs, root)
+    val cells = new org.apache.hadoop.fs.Path(root, "cells")
     assertCbkLayout(fs, cells)
     cells.toString
+  }
+
+  /** The serving snapshot: the cells root and its committed batch dirs,
+    * listed once.
+    */
+  def pin(spark: SparkSession, path: String): (String, Seq[String]) = {
+    val cellsRoot = resolveCells(spark, path)
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    val batches = BatchStore.listBatches(fs, root, "cells").map(_._2.toString)
+    require(batches.nonEmpty, s"IvfIndex: no committed batches at $cellsRoot")
+    (cellsRoot, batches)
   }
 
   /** LAYOUT GUARD: indexes written before round 15 partitioned the
@@ -314,14 +339,14 @@ private[operators] object IvfCells {
     * the batches being migrated.
     */
   def migrate(spark: SparkSession, path: String): Unit = {
-    val (fs, cells) = BatchStore.fsPath(spark, s"$path/cells")
-    val legacy = BatchStore.listBatches(fs, cells).map(_._2).filter(b =>
-      fs.listStatus(b).exists(s => s.isDirectory && s.getPath.getName.startsWith("cell=")))
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    val legacy = BatchStore.listBatches(fs, root, "cells").filter { case (_, b) =>
+      fs.listStatus(b).exists(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
+    }
     if (legacy.isEmpty) return
-    val st = BatchStore.stage(spark, cells.toString)
-    legacy.foreach(b =>
-      writeBucketed(spark.read.parquet(b.toString), st.at(b.getName).toString))
-    BatchStore.commit(BatchStore.Swap(st, legacy.map(_.getName)))
+    BatchStore.land(spark, path, legacy.map(b => s"cells/${b._2.getName}")) { st =>
+      legacy.foreach { case (id, b) => writeBucketed(spark.read.parquet(b.toString), st, id) }
+    }
   }
 
   /** Delegates to [[BatchStore.compact]] with the bucket partitioning
@@ -334,7 +359,7 @@ private[operators] object IvfCells {
     // layout-guard first: consolidating a legacy cell= tree under
     // partitionBy("cbk") would fail on an unresolved column mid-write
     resolveCells(spark, path)
-    BatchStore.compact(spark, s"$path/cells", upToBatch,
-      partitionCols = Seq("cbk"), sortCols = Seq("cell"))
+    BatchStore.compact(spark, path, upToBatch,
+      BatchStore.Tree("cells", partitionCols = Seq("cbk"), sortCols = Seq("cell")))
   }
 }

@@ -47,12 +47,24 @@ object IvfPqIndex {
   private def metaSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "nlist INT, dim INT, replicas INT, seed BIGINT, m INT, ks INT")
 
-  /** Build the index at `path` (wholesale overwrite, batch=0). */
+  /** Build the index at `path` (batch=0; replaces a previous index). */
   def build(
       corpus: DataFrame, id: Column, emb: Column, path: String,
       nlist: Int = -1, replicas: Int = 1, refineIterations: Int = 1,
       m: Int = 8, ks: Int = 16, pqRefine: Int = 1,
-      seed: Long = 42L): Unit = {
+      seed: Long = 42L): Unit =
+    BatchStore.commit(stageBuild(corpus, id, emb, path, nlist, replicas,
+      refineIterations, m, ks, pqRefine, seed))
+
+  /** [[build]]'s trees written into the stage of `path`, and the [[BatchStore.Swap]]
+    * that replaces them — uncommitted, so a caller can land more with the
+    * build (the streaming capstone's build marker).
+    */
+  private[graft] def stageBuild(
+      corpus: DataFrame, id: Column, emb: Column, path: String,
+      nlist: Int = -1, replicas: Int = 1, refineIterations: Int = 1,
+      m: Int = 8, ks: Int = 16, pqRefine: Int = 1,
+      seed: Long = 42L): BatchStore.Swap = {
     require(replicas >= 1, s"replicas must be >= 1, got $replicas")
     val spark = corpus.sparkSession
     val lists =
@@ -61,42 +73,37 @@ object IvfPqIndex {
       corpus, id, emb, lists, refineIterations, seed, portableSample = false)
     val dim = mat.headOption.map(_.length).getOrElse(0)
     require(dim % m == 0, s"IvfPqIndex: dim $dim not divisible by m $m")
-    spark.createDataFrame(mat.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(
-          lists, dim, replicas, seed, m, ks)), 1), metaSchema)
-      .write.mode("overwrite").parquet(s"$path/meta")
     // residuals of the (replica-)assigned normalized corpus — the
     // codebook training set IS the encode input, one shared projection
     val resid = residuals(corpus, id, emb, mat, replicas)
     val books = Embeddings.pqCodebooks(
       resid, col("neighbor_id"), col("__r"),
       m, ks, pqRefine, seed, portableSample = false, normalize = false)
+    // one commit replaces the index's four trees: a crashed rebuild
+    // leaves the previous index serving
+    val st = BatchStore.stage(spark, path)
+    IvfCells.writeCentroids(spark, mat, st)
     spark.createDataFrame(
-        for ((bj, j) <- books.zipWithIndex; (cw, c) <- bj.zipWithIndex)
-          yield (j, c + 1, cw))
-      .toDF("j", "ci", "sub")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    BatchStore.reset(spark, s"$path/cells")
-    writeBatch(encode(resid, mat, books, m, ks), path, batchId = 0L)
+        spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(
+          lists, dim, replicas, seed, m, ks)), 1), metaSchema)
+      .write.parquet(st.at("meta").toString)
+    IvfCells.writeCodebooks(spark, books, st.at("codebooks"))
+    IvfCells.writeBucketed(encode(resid, mat, books, m, ks), st, batchId = 0L)
+    BatchStore.Swap(st, Seq("centroids", "meta", "codebooks", "cells"))
   }
 
   /** Assign + encode new rows against the STORED centroids and codebooks
     * into `batch=$batchId` — arrival cost is one pass over the new rows;
-    * idempotent on replay (partition overwrite of its own dir).
+    * idempotent on replay (the commit replaces its own dir).
     */
   def append(
       spark: SparkSession, rows: DataFrame, id: Column, emb: Column,
       path: String, batchId: Long): Unit = {
     require(batchId > 0L, s"append batchId must be > 0 (0 is the build), got $batchId")
+    IvfCells.resolveCells(spark, path)
     val (mat, books, replicas, mm, kk) = readIndex(spark, path)
-    writeBatch(
-      encode(residuals(rows, id, emb, mat, replicas), mat, books, mm, kk),
-      path, batchId)
+    IvfCells.append(spark,
+      encode(residuals(rows, id, emb, mat, replicas), mat, books, mm, kk), path, batchId)
   }
 
   /** Top-k cosine neighbors against the stored index — the
@@ -108,6 +115,9 @@ object IvfPqIndex {
       probes: DataFrame, probeId: Column, probeEmb: Column,
       k: Int = 5, nprobe: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // committed-batch snapshot pin, taken first — the [[IvfIndex.probe]]
+    // serving discipline
+    val (cellsRoot, committedCells) = IvfCells.pin(spark, path)
     val (mat, books, replicas, m, ks) = readIndex(spark, path)
     val sub = books.head.head.size
     val probeScored = probes.select(probeId.as("probe_id"), probeEmb.as("__pe"))
@@ -133,17 +143,11 @@ object IvfPqIndex {
       .select(col("probe_id"), col("cell"), col("__cdot"), col("__pn"), col("__tab"))
     val neededCells = probeCells.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    // committed-batch snapshot pin — the [[IvfIndex.probe]] serving
-    // discipline (single cells tree: any committed prefix is quiesced)
-    val cellsRoot = IvfCells.resolveCells(spark, path)
-    val (cfs, cellsP) = BatchStore.fsPath(spark, cellsRoot)
-    val committedCells = BatchStore.committedBatches(cfs, cellsP)
-    require(committedCells.nonEmpty, s"IvfPqIndex: no committed batches at $cellsRoot")
     // two-level prune: `cbk` dirs at file-index time, probed cells via
     // row-group skip on the sorted `cell` data column (bucketed layout)
     val neededBuckets = neededCells.map(IvfCells.bucketOf).distinct.sorted
     val cells = spark.read.option("basePath", cellsRoot)
-      .parquet(committedCells.map(_._2.toString): _*)
+      .parquet(committedCells: _*)
       .filter(col("cbk").isin(neededBuckets.toIndexedSeq: _*) &&
         col("cell").isin(neededCells.toIndexedSeq: _*))
       .select(col("neighbor_id"), col("code"), col("nrm"), col("cell"))
@@ -283,7 +287,4 @@ object IvfPqIndex {
       s"IvfPqIndex: codebook shape ${books.map(_.size)} != ${m}x$ks")
     (mat, books, replicas, m, ks)
   }
-
-  private def writeBatch(encoded: DataFrame, path: String, batchId: Long): Unit =
-    IvfCells.writeBucketed(encoded, s"$path/cells/batch=$batchId")
 }

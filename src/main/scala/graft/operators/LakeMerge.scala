@@ -57,7 +57,7 @@ object LakeMerge {
     val seen = Observation()
     // the batch is materialized once: its transform (and its date set,
     // observed on the same job) must not re-run per consumer
-    val inc = Checkpoints.materialize(
+    val inc = Checkpoints.materializeFrame(
       incoming.withColumn(PartitionCol, to_date(col("metadata.created_at")))
         .observe(seen, collect_set(col(PartitionCol)).as("dates"),
           count(when(col(PartitionCol).isNull, 1)).as("nulls")))
@@ -99,7 +99,7 @@ object LakeMerge {
       val touched = dates.map(d =>
         s"$PartitionCol=${if (d == null) "__HIVE_DEFAULT_PARTITION__" else d}")
       BatchStore.commit(BatchStore.Swap(st, written, touched.distinct.diff(written)))
-    } finally Checkpoints.free(inc)
+    } finally Checkpoints.freeFrame(inc)
   }
 
   /** The partitions of `dates`. A null date routes to the default

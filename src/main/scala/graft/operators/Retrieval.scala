@@ -152,7 +152,11 @@ object Retrieval {
     *    full — a separate tdf tree would be a per-batch write and a
     *    compaction surface for data the query derives for free.
     *  - `stats/batch=N/` — one (n, tot) row per batch (additive;
-    *    [[queryIndex]] sums).
+    *    [[queryIndex]] sums);
+    *  - `meta/` — the bucket count.
+    *
+    * Every write — build, append, compaction — lands all of the trees it
+    * changes through one [[BatchStore]] commit on the index root.
     *
     * [[queryIndex]] then scores a query with NO corpus access: filtered
     * posting pages × df × broadcast stats, the same pivoted fixed-order
@@ -164,35 +168,25 @@ object Retrieval {
       docs: DataFrame, id: Column, text: Column, path: String,
       buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buildIndex: buckets must be >= 1, got $buckets")
-    val spark = docs.sparkSession
-    // a fresh build owns the whole tree: clear batches from a previous
-    // index generation (the IvfIndex.build discipline)
-    BatchStore.reset(spark, path)
-    // meta FIRST (it is layout config, not a commit marker — the
-    // ensureIndexMeta ordering): a crash between the two writes leaves
-    // meta-without-batches, which appendIndex accepts (it reads meta and
-    // lands its batch — the streaming recovery path). The reverse order
-    // left batches-without-meta, which bricked BOTH appendIndex and
-    // queryIndex until a full rebuild. queryIndex on the meta-only tree
-    // still raises on the missing postings path — a crashed ONE-SHOT
-    // build is re-run, that is its recovery; the ordering exists for the
-    // append path.
-    spark.createDataFrame(Seq(Tuple1(buckets))).toDF("buckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    writeBatch(docs, id, text, path, buckets, batchId = 0L)
+    // a fresh build replaces its three trees in one commit: a crashed
+    // rebuild leaves the previous index serving
+    BatchStore.land(docs.sparkSession, path, Seq("meta", "postings", "stats")) { st =>
+      writeMeta(docs.sparkSession, st, buckets)
+      writeBatch(docs, id, text, st, buckets, batchId = 0L)
+    }
   }
 
   /** Incremental APPEND — the crawl-batch shape the other persistent
     * stores already have ([[graft.operators.IvfIndex.append]],
     * [[graft.operators.IncrementalDedup]]): tokenize and land ONLY the
     * new documents as their own `batch=` partitions under postings /
-    * stats. Corpus-level statistics (df per term, N, total
-    * dl) are additive across disjoint doc sets, so [[queryIndex]] merges
-    * them at query time with a per-term sum over matching batches —
-    * results are IDENTICAL to a full rebuild over the union
-    * (RetrievalSpec pins bit-for-bit equality), and arrival cost is one
-    * tokenize pass over the new batch only. Replaying a batchId
-    * overwrites its own partitions (idempotent); doc ids must be unique
+    * stats, both in one [[BatchStore]] commit. Corpus-level statistics
+    * (df per term, N, total dl) are additive across disjoint doc sets,
+    * so [[queryIndex]] merges them at query time with a per-term sum over
+    * matching batches — results are IDENTICAL to a full rebuild over the
+    * union (RetrievalSpec pins bit-for-bit equality), and arrival cost is
+    * one tokenize pass over the new batch only. Replaying a batchId
+    * replaces its own partitions (idempotent); doc ids must be unique
     * across all batches ever fed to one index.
     */
   def appendIndex(
@@ -200,132 +194,72 @@ object Retrieval {
       batchId: Long): Unit = {
     require(batchId >= 0L, s"appendIndex: batchId must be >= 0, got $batchId")
     val spark = docs.sparkSession
-    // heal BEFORE writing: a committed compaction rolls forward before a
-    // fresh batch dir lands beside its folded partitions
-    adoptIndexTrees(spark, path)
-    val buckets = spark.read.parquet(s"$path/meta").head().getInt(0)
-    writeBatch(docs, id, text, path, buckets, batchId)
+    BatchStore.land(spark, path, Seq(s"postings/batch=$batchId", s"stats/batch=$batchId")) {
+      st => writeBatch(docs, id, text, st, readBuckets(spark, path), batchId)
+    }
   }
 
   /** Write the layout meta if absent — the streaming entry point: a
     * stream feeds EVERY batch (including the first) through
     * [[appendIndex]], so there is no one-shot [[buildIndex]] call to
-    * record the bucket count. Idempotent; a crash between meta and the
-    * first batch's write replays into the same state.
+    * record the bucket count. Idempotent.
     */
   def ensureIndexMeta(
       spark: SparkSession, path: String, buckets: Int): Unit = {
     require(buckets >= 1, s"ensureIndexMeta: buckets must be >= 1, got $buckets")
-    val meta = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(meta)) {
-      spark.createDataFrame(Seq(Tuple1(buckets))).toDF("buckets")
-        .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    BatchStore.heal(fs, root)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "meta"))) {
+      BatchStore.land(spark, path, Seq("meta"))(writeMeta(spark, _, buckets))
     } else {
-      val existing = spark.read.parquet(s"$path/meta").head().getInt(0)
+      val existing = readBuckets(spark, path)
       require(existing == buckets,
         s"ensureIndexMeta: index at $path has $existing buckets, asked for $buckets")
     }
   }
 
+  private def writeMeta(spark: SparkSession, st: BatchStore.Stage, buckets: Int): Unit =
+    spark.createDataFrame(Seq(Tuple1(buckets))).toDF("buckets")
+      .repartition(1).write.parquet(st.at("meta").toString)
+
+  private def readBuckets(spark: SparkSession, path: String): Int =
+    spark.read.parquet(s"$path/meta").head().getInt(0)
+
   private def writeBatch(
-      docs: DataFrame, id: Column, text: Column, path: String,
+      docs: DataFrame, id: Column, text: Column, st: BatchStore.Stage,
       buckets: Int, batchId: Long): Unit = {
     val base = docs.select(id.as("doc_id"),
       regexp_extract_all(lower(text), lit(TermRegex), lit(0)).as("__toks"))
       .withColumn("dl", size(col("__toks")))
-    // postings FIRST, stats LAST: the committed stats dir (its job-commit
-    // _SUCCESS marker) is the batch's COMMIT RECORD. [[queryIndex]] pins
-    // its snapshot to the committed-stats batch set, so under a
-    // CONCURRENT append a batch becomes visible atomically and only
-    // after its postings are fully landed — the reverse order exposed a
-    // torn read (stats counted into N/avgdl while the batch's postings
-    // were still writing), an answer equal to NO quiesced index.
     // dl rides the posting row (grouped by — it is functionally
     // dependent on doc_id, so the key cardinality is unchanged)
     base.select(col("doc_id"), col("dl"), explode(col("__toks")).as("term"))
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings/batch=$batchId")
+      .write.partitionBy("bucket")
+      .parquet(st.at(s"postings/batch=$batchId").toString)
     base.agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("tot"))
-      .write.mode("overwrite").parquet(s"$path/stats/batch=$batchId")
+      .write.parquet(st.at(s"stats/batch=$batchId").toString)
   }
-
-  private val IndexTrees = Seq("postings", "stats")
 
   /** Consolidate every `batch=` partition with id <= `upToBatch` across
-    * the two index subtrees (postings / stats) — the
-    * [[IncrementalDedup.compactStore]] small-files discipline, with one
-    * index-specific merge: stats consolidate to a single additive row.
-    * Posting bucket partitioning is preserved, so the bucket-prune
-    * contract survives compaction. Same SAFETY CONTRACT as
-    * every store: only compact batch ids the stream's checkpoint has
-    * committed past. Crash-safe via the [[BatchStore]] commit
-    * ([[queryIndex]] and [[appendIndex]] heal on entry).
+    * the two index subtrees (postings / stats) in one [[BatchStore]]
+    * commit — the [[IncrementalDedup.compactStore]] small-files
+    * discipline, with one index-specific merge: stats consolidate to a
+    * single additive row. Posting bucket partitioning is preserved, so
+    * the bucket-prune contract survives compaction. Same SAFETY CONTRACT
+    * as every store: only compact batch ids the stream's checkpoint has
+    * committed past. A concurrent [[queryIndex]] whose pinned paths the
+    * swap removes fails loudly and re-pins under
+    * [[BatchStore.servingRead]].
     */
   def compactIndex(
-      spark: SparkSession, path: String, upToBatch: Long): Unit = {
-    // PRE-FLIGHT: both trees must resolve the SAME batch-id set, hence
-    // the same consolidation target. [[BatchStore.compactPrepare]]
-    // computes each tree's target independently (max existing id <=
-    // upToBatch per tree); if the sets ever diverge — a crashed
-    // writeBatch landed postings batch=N without its stats commit
-    // record, and compaction ran before the stream's replay overwrote
-    // batch=N — the consolidated stats would pin ids whose postings
-    // paths no longer exist and every queryIndex read would fail
-    // PERSISTENTLY (servingRead retries cannot heal a wrong layout).
-    // Fail loudly here instead, pointing at the replay contract.
-    locally {
-      // scope the check to ids <= upToBatch — the set this compaction
-      // actually consolidates. A torn batch ABOVE the compaction range
-      // (stream died before replaying it) is outside this run's blast
-      // radius: blocking consolidation of older fully-committed batches
-      // on it would make one dead stream permanently freeze maintenance.
-      val pIds = {
-        val (fs, p) = BatchStore.fsPath(spark, s"$path/postings")
-        BatchStore.listBatches(fs, p).map(_._1).filter(_ <= upToBatch).toSet
-      }
-      val sIds = {
-        val (fs, p) = BatchStore.fsPath(spark, s"$path/stats")
-        BatchStore.listBatches(fs, p).map(_._1).filter(_ <= upToBatch).toSet
-      }
-      require(pIds == sIds,
-        s"compactIndex: postings/stats batch-id sets diverge at $path " +
-          s"(postings-only ${(pIds -- sIds).toSeq.sorted.mkString(",")}; " +
-          s"stats-only ${(sIds -- pIds).toSeq.sorted.mkString(",")}) — a " +
-          "crashed writeBatch left a torn append; let the stream's " +
-          "checkpoint replay overwrite that batch id (the foreachBatch " +
-          "replay contract) before compacting")
-    }
-    // both trees ride [[BatchStore.compactPrepare]] (the single-sourced
-    // swap + largest-existing-id discipline); postings keep their bucket
-    // partitioning so the bucket-prune contract survives, and stats
-    // consolidate to one additive row. STAGE both replacement trees
-    // fully, then swap back-to-back: a concurrent [[queryIndex]] pins
-    // one committed-batch snapshot across both trees, and the only
-    // window in which its pin can straddle the swap is the two
-    // roll-forwards —
-    // a straddled pin fails loudly on a missing explicit path (never a
-    // torn answer) and the serving retry re-pins.
-    val postings = BatchStore.compactPrepare(spark, s"$path/postings",
-      upToBatch, partitionCols = Seq("bucket"))
-    val stats = BatchStore.compactPrepare(spark, s"$path/stats", upToBatch,
-      targetFiles = 1,
-      merge = d => d.agg(sum(col("n")).as("n"),
-        sum(col("tot")).cast("long").as("tot")))
-    postings.foreach(BatchStore.commit)
-    stats.foreach(BatchStore.commit)
-  }
-
-  /** Self-heal a crashed [[compactIndex]] swap before any read. */
-  private def adoptIndexTrees(spark: SparkSession, path: String): Unit = {
-    IndexTrees.foreach { sub =>
-      val (fs, p) = BatchStore.fsPath(spark, s"$path/$sub")
-      BatchStore.heal(fs, p)
-    }
-  }
+      spark: SparkSession, path: String, upToBatch: Long): Unit =
+    BatchStore.compact(spark, path, upToBatch,
+      BatchStore.Tree("postings", partitionCols = Seq("bucket")),
+      BatchStore.Tree("stats", targetFiles = 1,
+        merge = d => d.agg(sum(col("n")).as("n"), sum(col("tot")).cast("long").as("tot"))))
 
   /** Top-k BM25 against a [[buildIndex]] store — identical output
     * contract and arithmetic to [[bm25TopK]], zero corpus scans: only
@@ -346,21 +280,17 @@ object Retrieval {
     require(queryTerms.nonEmpty, "queryIndex: empty query")
     require(queryTerms.distinct == queryTerms,
       s"queryIndex: duplicate query terms in ${queryTerms.mkString(",")}")
-    adoptIndexTrees(spark, path)
-    val buckets = spark.read.parquet(s"$path/meta").head().getInt(0)
-    // SNAPSHOT PIN: resolve the committed batch set ONCE (from the stats
-    // tree — the commit record, see [[writeBatch]]) and read BOTH trees
-    // through those explicit paths. Listing each tree independently
-    // would let a concurrent append or compact land between the two
-    // reads, scoring one tree's batches against the other's — N/avgdl
-    // from a batch whose postings aren't counted, an answer no quiesced
-    // index returns. With the pin, a concurrent maintenance swap can
-    // only invalidate a pinned path and fail loudly (PATH_NOT_FOUND /
-    // vanished file), which [[BatchStore.servingRead]] retries.
-    val (sfs, statsRoot) = BatchStore.fsPath(spark, s"$path/stats")
-    val committed = BatchStore.committedBatches(sfs, statsRoot)
-      .map(_._1).sorted
+    // SNAPSHOT PIN: ONE listing of the committed batch set (healed and
+    // taken under the commit lock, so every listed batch is in both
+    // trees), and BOTH trees read through those explicit paths. A
+    // concurrent append or compaction can then only invalidate a pinned
+    // path and fail loudly (PATH_NOT_FOUND / vanished file), which
+    // [[BatchStore.servingRead]] retries — never score one tree's batches
+    // against the other's.
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    val committed = BatchStore.listBatches(fs, root, "stats").map(_._1).sorted
     require(committed.nonEmpty, s"queryIndex: no committed batches at $path")
+    val buckets = readBuckets(spark, path)
     val neededBuckets = {
       // derive the buckets with ONE tiny Spark job over the literal terms
       // (xxhash64's exact seed/variant is an engine internal — never

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.model.TweetSchema
+import graft.operators.BatchStore
 
 /** S2/S4/S7 — JSON landing-zone source and sink (SURVEY.md §2.1).
   *
@@ -75,10 +76,13 @@ object TweetJsonSource {
     s"$dir/tweets_$yearMonth-*_labeled.json"
 
   /** S4: JSON sink (one object per line, UTF-8; see [[writeJsonArray]] for
-    * the reference's array framing — resilient_etl.py:574-584).
+    * the reference's array framing — resilient_etl.py:574-584). The
+    * export is staged and replaces the previous one in one
+    * [[graft.operators.BatchStore]] commit, so a crash leaves the old
+    * export or the new one.
     */
   def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+    BatchStore.land(df.sparkSession, path, Seq(""))(st => df.write.json(st.dir.toString))
 
   /** S4 array-framing variant: ONE file holding ONE strict JSON array, the
     * shape the reference emits via `json.dump(docs, f, indent=2)`
@@ -108,7 +112,7 @@ object TweetJsonSource {
     // repartition only the empty 0-partition case (nothing to misorder).
     val json = df.toJSON
     val one = if (json.rdd.getNumPartitions == 0) json.repartition(1) else json.coalesce(1)
-    one.mapPartitions { it =>
+    val framed = one.mapPartitions { it =>
       if (!it.hasNext) Iterator("[]")
       else {
         val body = new Iterator[String] {
@@ -121,6 +125,9 @@ object TweetJsonSource {
         }
         Iterator("[") ++ body ++ Iterator("]")
       }
-    }.write.mode("overwrite").text(path)
+    }
+    // committed like [[writeJson]]: the previous export stays until the
+    // new one replaces it whole
+    BatchStore.land(spark, path, Seq(""))(st => framed.write.text(st.dir.toString))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 
 import graft.functions.{DictionaryLocator, LexiconSentiment}
 import graft.model.TweetSchema
@@ -41,18 +41,30 @@ object StreamingIngest {
       maxFilesPerTrigger: Int = 10,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val job = IngestJob(dict, lexicon)
-    val raw = spark.readStream
-      .schema(TweetSchema.rawScrape)
+    landingStream(spark, landingDir, TweetSchema.rawScrape, checkpointDir,
+        maxFilesPerTrigger, trigger) { (batch, _) =>
+      LakeMerge.mergeWrite(spark, job.transform(batch, now), lakePath)
+    }
+  }
+
+  /** The skeleton every landing stream shares: JSON files in `landingDir`
+    * read with `schema`, at most `maxFilesPerTrigger` a trigger, each
+    * micro-batch handed to `sink` with its batch id.
+    */
+  private[graft] def landingStream(
+      spark: SparkSession, landingDir: String,
+      schema: org.apache.spark.sql.types.StructType, checkpointDir: String,
+      maxFilesPerTrigger: Int, trigger: Trigger)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    spark.readStream
+      .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(landingDir)
-    raw.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        LakeMerge.mergeWrite(spark, job.transform(batch, now), lakePath)
-      }
+      .foreachBatch(sink)
       .start()
-  }
 
   /** Watermarked per-day sentiment distribution over a processed-doc
     * stream: event-time tumbling day windows on metadata.created_at, late
@@ -168,19 +180,8 @@ object StreamingIngest {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string").add("lang", "string")
-    val raw = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(landingDir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          curatedMerge(spark, batch, storePath, rates, defaultRate, minTokens)
-        }
-      }
-      .start()
+    landingStream(spark, landingDir, schema, checkpointDir, maxFilesPerTrigger,
+      trigger)((batch, _) => curatedMerge(spark, batch, storePath, rates, defaultRate, minTokens))
   }
 
   /** One micro-batch of [[startCurated]]: gate → sample → keyed dedup
@@ -232,7 +233,7 @@ object StreamingIngest {
     * single partition every N batches, inside foreachBatch — the one
     * place `batchId - 1` is KNOWN checkpoint-committed (foreachBatch
     * replays at most the current id after a crash), so the compaction
-    * honors [[graft.operators.IncrementalDedup.compactStore]]'s safety
+    * honors [[graft.operators.BatchStore.compact]]'s safety
     * contract without coordinating with an external maintenance job.
     * A months-long hourly stream otherwise accrues thousands of tiny
     * `batch=` partitions whose listing cost dominates every read.
@@ -247,25 +248,17 @@ object StreamingIngest {
       compactEvery: Int = 0): StreamingQuery = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
-    val raw = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(landingDir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.IncrementalDedup.lshDedupBatch(
-            spark, batch, col("doc_id"), col("text"), storePath, batchId,
-            threshold = threshold, k = k, bands = bands)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            graft.operators.IncrementalDedup.compactStore(
-              spark, storePath, upToBatch = batchId - 1)
-          ()
-        }
+    landingStream(spark, landingDir, schema, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        graft.operators.IncrementalDedup.lshDedupBatch(
+          spark, batch, col("doc_id"), col("text"), storePath, batchId,
+          threshold = threshold, k = k, bands = bands)
+        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+          graft.operators.IncrementalDedup.compactStore(
+            spark, storePath, upToBatch = batchId - 1)
       }
-      .start()
+    }
   }
 
   /** Streaming segment-level exact dedup against the persistent segment
@@ -286,35 +279,26 @@ object StreamingIngest {
       maxFilesPerTrigger: Int = 10,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery = {
+    import graft.operators.BatchStore
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val r = graft.operators.IncrementalSegmentDedup.segmentDedupBatch(
-            spark, batch, col("doc_id"), col("text"), storePath, batchId,
-            segTokens = segTokens, minKeepFrac = minKeepFrac)
-          // per-batch output partition mirrors the store's idempotency:
-          // a replayed batch overwrites its own partition, never appends
-          r.write.mode("overwrite").parquet(s"$outputPath/batch=$batchId")
-          graft.operators.Checkpoints.freeFrame(r)
-          // compactStore is layout-generic (column-agnostic partition
-          // fold), so the LSH store's in-stream maintenance — and its
-          // checkpoint-committed `batchId - 1` safety window — applies to
-          // the segment store unchanged
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            graft.operators.IncrementalDedup.compactStore(
-              spark, storePath, upToBatch = batchId - 1)
-          ()
-        }
+    landingStream(spark, landingDir, schema, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val r = graft.operators.IncrementalSegmentDedup.segmentDedupBatch(
+          spark, batch, col("doc_id"), col("text"), storePath, batchId,
+          segTokens = segTokens, minKeepFrac = minKeepFrac)
+        // per-batch output partition mirrors the store's idempotency: a
+        // replayed batch replaces its own partition, never appends
+        BatchStore.land(spark, outputPath, Seq(s"batch=$batchId"))(st =>
+          r.write.parquet(st.at(s"batch=$batchId").toString))
+        graft.operators.Checkpoints.freeFrame(r)
+        // the same checkpoint-committed `batchId - 1` safety window as
+        // the LSH store's in-stream maintenance
+        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+          BatchStore.compact(spark, storePath, upToBatch = batchId - 1)
       }
-      .start()
+    }
   }
 
   /** A7 streaming: running totals per key across micro-batches via

@@ -81,7 +81,7 @@ object CapstoneScaleBench {
           imgStore = s"$root/img_store", semStore = s"$root/sem_store")
         else base
       val watched = Seq(
-        "lsh" -> stores.lshStore, "lsh_bands" -> (stores.lshStore + "__bands"),
+        "lsh" -> stores.lshStore, "lsh_bands" -> (stores.lshStore + "/_bands"),
         "seg" -> stores.segStore,
         "bm25" -> stores.bm25Store, "curated" -> stores.curatedDir) ++
         (if (mode == "full") Seq(

@@ -52,18 +52,20 @@ object Harness {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
   }
 
-  /** Data files under `path` (0 if absent), excluding `_`/`.` bookkeeping
-    * (`_SUCCESS`, checksums) — the files a reader actually opens.
+  /** Data files under `path` (0 if absent), excluding `_`/`.` names
+    * (`_SUCCESS`, checksums, a store's `_bands` tree) — the files a read
+    * of `path` actually opens.
     */
   def fileCount(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0L
+    val root = fs.makeQualified(p).toUri.getPath
     val it = fs.listFiles(p, true)
     var n = 0L
     while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
+      val rel = it.next().getPath.toUri.getPath.stripPrefix(root)
+      if (!rel.split('/').exists(c => c.startsWith("_") || c.startsWith("."))) n += 1
     }
     n
   }

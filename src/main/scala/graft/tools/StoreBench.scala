@@ -162,7 +162,6 @@ object StoreBench {
       println(f"HALF-SEED    history=$history%9d chunks=  2 " +
         f"seed=$seedBT%8.1fs survivors=${b.rows}%9d (sets equal)")
       rmrf(spark, storeB)
-      rmrf(spark, storeB + "__bands")
       val incT = (0 until 2).map(_ => timed(
         arrive(spark, all.filter(col("doc_id") >= history), storeA, lastA + 1))._2).min
       println(f"ARRIVAL      history=$history%9d arrival=$arrival%8d " +

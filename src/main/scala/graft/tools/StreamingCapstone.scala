@@ -34,10 +34,10 @@ import graft.sources.LocationDictSource
   *     cosine suppression) — all checkpoint-replay-safe.
   *
   * The foreachBatch body is deterministic per (batch, store state), every
-  * store write is an idempotent partition overwrite keyed by batchId, and
-  * the sink partitions mirror that — so a checkpoint kill/resume replays
-  * at most one batch onto identical state (StreamingCapstoneSpec pins
-  * output equality across a mid-run kill).
+  * store write is an idempotent [[BatchStore]] commit of the partition
+  * keyed by batchId, and the sink partitions mirror that — so a
+  * checkpoint kill/resume replays at most one batch onto identical state
+  * (StreamingCapstoneSpec pins output equality across a mid-run kill).
   *
   * Run: SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   sbt "runMain graft.tools.StreamingCapstone"
@@ -58,9 +58,8 @@ object StreamingCapstone {
     * vector-bearing batch, appended thereafter as the idempotent
     * `batch=` partition append() already is. Replay safety follows the
     * other stores' argument: only the last uncommitted batch replays;
-    * a replayed build batch rebuilds wholesale (only reachable before
-    * any append committed), a replayed append overwrites its own
-    * partition.
+    * a replayed build batch rebuilds (only reachable before any append
+    * committed), a replayed append replaces its own partition.
     */
   private[graft] def processBatch(
       spark: SparkSession, batch: DataFrame, stores: Stores, batchId: Long,
@@ -95,9 +94,8 @@ object StreamingCapstone {
     val cleaned = enriched
       .join(loc, enriched("doc_id") === col("__lid"), "left")
       .drop("__lid")
-    // idempotent landing: a replayed batch rewrites its own partition
-    cleaned.write.mode("overwrite")
-      .parquet(s"${stores.curatedDir}/batch=$batchId")
+    // idempotent landing: a replayed batch replaces its own partition
+    landBatch(spark, stores.curatedDir, batchId, cleaned)
     val landed = spark.read.parquet(s"${stores.curatedDir}/batch=$batchId")
     // both stores read the LANDED batch — the write above is the batch's
     // one materialization; the stores' own writes are their documented
@@ -108,7 +106,7 @@ object StreamingCapstone {
     val seg = IncrementalSegmentDedup.segmentDedupBatch(
       spark, landed, col("doc_id"), col("clean_text"),
       stores.segStore, batchId)
-    seg.write.mode("overwrite").parquet(s"${stores.segOut}/batch=$batchId")
+    landBatch(spark, stores.segOut, batchId, seg)
     for (emb <- vectors if stores.vecStore.nonEmpty)
       maintainVectorIndex(spark, landed, emb, stores.vecStore, batchId,
         minVecBuildRows, vecKs)
@@ -148,9 +146,9 @@ object StreamingCapstone {
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       val upTo = batchId - 1
       IncrementalDedup.compactStore(spark, stores.lshStore, upTo)
-      IncrementalDedup.compactStore(spark, stores.segStore, upTo)
+      BatchStore.compact(spark, stores.segStore, upTo)
       if (stores.imgStore.nonEmpty)
-        IncrementalDedup.compactStore(spark, stores.imgStore, upTo)
+        BatchStore.compact(spark, stores.imgStore, upTo)
       if (stores.semStore.nonEmpty)
         IncrementalSemDedup.compactStore(spark, stores.semStore, upTo)
       if (stores.vecStore.nonEmpty)
@@ -161,77 +159,59 @@ object StreamingCapstone {
     landed.count()
   }
 
+  /** `rows` as the `batch=<batchId>` partition of `store`, in one commit. */
+  private def landBatch(spark: SparkSession, store: String, batchId: Long, rows: DataFrame): Unit =
+    BatchStore.land(spark, store, Seq(s"batch=$batchId"))(st =>
+      rows.write.parquet(st.at(s"batch=$batchId").toString))
+
   /** The shared DEFERRED-INIT lifecycle of the two vector-backed stages
-    * ([[maintainVectorIndex]], [[maintainSemStore]]) — single-sourced
-    * here for the same reason [[graft.operators.BatchStore]] exists: the
-    * crash-window reasoning lived in two hand-synced copies, and the
-    * marker-ordering bug class was already hit once (an earlier version
-    * wrote the vector marker BEFORE the build and keyed "built" on
-    * centroids existence; a crash between centroids and the cells tree
-    * then skipped both the rebuild and the append branch on replay,
-    * silently dropping the staged base from the index).
+    * ([[maintainVectorIndex]], [[maintainSemStore]]).
     *
     * Shape: a store whose seed geometry cannot come from a toy sample
     * (PQ codebooks, SemDeDup centroids) STAGES each batch's rows as an
-    * idempotent `batch=` partition until `minRows` accumulate, then
-    * `build(allStaged)` runs, the staged history optionally REPLAYS per
-    * batch in arrival order, and the marker commits LAST — it is the
-    * ONLY signal a complete store exists, so a crash anywhere mid-build
-    * re-stages and re-runs the whole deterministic sequence onto
-    * identical state (every builder wipes/overwrites wholesale). After
-    * the marker commits the staged tree is DELETED: it is dead data from
-    * that point (a full float copy of the pre-init history, kept forever
-    * otherwise), and it is re-creatable only before the marker, when it
-    * is still needed. A crash between marker write and staged delete
-    * self-heals on the next append-path batch. Replayed pre-init batches
-    * (batchId <= marker) are already inside the built store and are
-    * skipped; replayed post-init batches overwrite their own `batch=`
-    * partition in `append`.
+    * idempotent `staged/batch=` partition of the store until the staged
+    * batches and this one hold `minRows`. That batch builds instead of
+    * staging: `build` gets the staged batches plus this one in arrival
+    * order and returns its uncommitted [[BatchStore.Swap]], and the
+    * marker (the build batch id) and the drop of the staged tree land in
+    * that same manifest — the marker is the ONLY signal a complete store
+    * exists, so a crash before it lands leaves the staged state, and the
+    * stream's replay of the batch re-runs the deterministic build onto
+    * it. Replayed pre-init batches (batchId <= marker) are already inside
+    * the built store and are skipped; later batches go to `append`, which
+    * replaces its own `batch=` partition on replay.
     */
   private[graft] def stagedInit(
-      spark: SparkSession, rows: DataFrame, staged: String,
-      markerPath: String, batchId: Long, minRows: Int,
-      build: DataFrame => Unit,
-      replayStaged: Option[(Long, DataFrame) => Unit],
+      spark: SparkSession, rows: DataFrame, store: String, marker: String,
+      batchId: Long, minRows: Int,
+      build: Seq[(Long, DataFrame)] => BatchStore.Swap,
       append: DataFrame => Unit): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(markerPath)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagedP = new org.apache.hadoop.fs.Path(staged)
-    def readMarker(): Long =
-      if (!fs.exists(marker)) -1L
-      else {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8").trim.toLong
-        finally in.close()
-      }
-    if (readMarker() < 0L) {
-      rows.write.mode("overwrite").parquet(s"$staged/batch=$batchId")
-      val all = spark.read.parquet(staged)
-        .select(col("vec_id"), col("embedding"))
-      if (all.count() >= minRows) {
-        build(all)
-        replayStaged.foreach { f =>
-          val (sfs, sp) = BatchStore.fsPath(spark, staged)
-          BatchStore.listBatches(sfs, sp).sortBy(_._1).foreach {
-            case (bid, path) => f(bid, spark.read.parquet(path.toString))
-          }
-        }
-        // marker LAST: build-complete commit point
-        val out = fs.create(marker, true)
-        try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-        fs.delete(stagedP, true): Unit
-      }
-    } else if (batchId > readMarker() && !rows.isEmpty) {
-      // self-heal the marker-write → staged-delete crash window
-      if (fs.exists(stagedP)) fs.delete(stagedP, true): Unit
-      append(rows)
+    val (fs, root) = BatchStore.fsPath(spark, store)
+    BatchStore.heal(fs, root)
+    val markerP = new org.apache.hadoop.fs.Path(root, marker)
+    if (fs.exists(markerP)) {
+      val in = fs.open(markerP)
+      val built = try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+      if (batchId > built && !rows.isEmpty) append(rows)
+    } else {
+      val batches = BatchStore.listBatches(fs, root, "staged").filter(_._1 < batchId)
+        .sortBy(_._1).map { case (b, p) => b -> spark.read.parquet(p.toString) } :+
+        (batchId -> rows)
+      if (batches.map(_._2.select(col("vec_id"), col("embedding")))
+          .reduce(_ unionByName _).count() >= minRows) {
+        val sw = build(batches)
+        BatchStore.stageText(sw.stage, marker, batchId.toString)
+        BatchStore.commit(sw.copy(replace = sw.replace :+ marker, drop = sw.drop :+ "staged"))
+      } else BatchStore.land(spark, store, Seq(s"staged/batch=$batchId"))(st =>
+        rows.write.parquet(st.at(s"staged/batch=$batchId").toString))
     }
   }
 
   /** Streaming ANN-index maintenance ([[stagedInit]] with
-    * [[IvfPqIndex.build]]/append): a PQ codebook cannot be seeded from a
-    * toy sample, so the index build is deferred, not degraded. No staged
-    * replay — the build over the full staged set IS the base.
+    * [[IvfPqIndex.stageBuild]]/append): a PQ codebook cannot be seeded
+    * from a toy sample, so the index build is deferred, not degraded.
+    * The build over the staged batches IS the base, landed in one commit
+    * with its marker.
     */
   private[graft] def maintainVectorIndex(
       spark: SparkSession, landed: DataFrame, embeddings: DataFrame,
@@ -240,23 +220,23 @@ object StreamingCapstone {
     val vecs = embeddings.join(landed.select(col("doc_id").as("__vid")),
         col("vec_id") === col("__vid"))
       .select(col("vec_id"), col("embedding"))
-    stagedInit(spark, vecs, s"$vecStore/staged", s"$vecStore/_built_through",
-      batchId, minVecBuildRows,
-      build = all => IvfPqIndex.build(all, col("vec_id"), col("embedding"),
-        vecStore, replicas = 2, ks = vecKs),
-      replayStaged = None,
+    stagedInit(spark, vecs, vecStore, "_built_through", batchId, minVecBuildRows,
+      build = batches => IvfPqIndex.stageBuild(
+        batches.map(_._2.select(col("vec_id"), col("embedding"))).reduce(_ unionByName _),
+        col("vec_id"), col("embedding"), vecStore, replicas = 2, ks = vecKs),
       append = b => IvfPqIndex.append(spark, b, col("vec_id"),
         col("embedding"), vecStore, batchId))
   }
 
   /** Streaming semantic-dedup store maintenance ([[stagedInit]] with
-    * [[IncrementalSemDedup.init]] + a per-batch staged replay in arrival
-    * order — suppression decisions are order-dependent, so the history
-    * must re-run batch by batch, not as one blob). The staged tree is a
-    * SIBLING (`<semStore>_staged`), not nested, because init clears the
-    * store root wholesale. Centroid geometry seeded from a toy sample
-    * would fix a degenerate cell structure forever — deferred, not
-    * degraded.
+    * [[IncrementalSemDedup.init]] + a per-batch replay of the staged
+    * batches in arrival order — suppression decisions are
+    * order-dependent, so the history must re-run batch by batch, not as
+    * one blob). The init and each replay commit on their own, and the
+    * marker lands after them: a crash before it re-inits (dropping the
+    * replayed rows) and replays again. Centroid geometry seeded from a
+    * toy sample would fix a degenerate cell structure forever —
+    * deferred, not degraded.
     */
   private[graft] def maintainSemStore(
       spark: SparkSession, landed: DataFrame, embeddings: DataFrame,
@@ -265,20 +245,20 @@ object StreamingCapstone {
     val vecs = embeddings.join(landed.select(col("doc_id").as("__sid")),
         col("vec_id") === col("__sid"))
       .select(col("vec_id"), col("embedding"))
-    stagedInit(spark, vecs, s"${semStore}_staged", s"$semStore/_init_through",
-      batchId, minSemInitRows,
-      build = all => IncrementalSemDedup.init(
-        all, col("vec_id"), col("embedding"), semStore),
-      replayStaged = Some((bid, b) => {
-        IncrementalSemDedup.semDedupBatch(spark, b, col("vec_id"),
-          col("embedding"), semStore, bid, semThreshold)
-        ()
-      }),
-      append = b => {
-        IncrementalSemDedup.semDedupBatch(spark, b, col("vec_id"),
-          col("embedding"), semStore, batchId, semThreshold)
-        ()
-      })
+    def dedup(b: DataFrame, bid: Long): Unit = {
+      IncrementalSemDedup.semDedupBatch(spark, b, col("vec_id"), col("embedding"),
+        semStore, bid, semThreshold)
+      ()
+    }
+    stagedInit(spark, vecs, semStore, "_init_through", batchId, minSemInitRows,
+      build = batches => {
+        IncrementalSemDedup.init(
+          batches.map(_._2.select(col("vec_id"), col("embedding"))).reduce(_ unionByName _),
+          col("vec_id"), col("embedding"), semStore)
+        batches.foreach { case (bid, b) => dedup(b, bid) }
+        BatchStore.Swap(BatchStore.stage(spark, semStore), Nil)
+      },
+      append = dedup(_, batchId))
   }
 
   /** Start the capstone stream over a JSONL landing directory with
@@ -296,24 +276,17 @@ object StreamingCapstone {
       compactEvery: Int = 0): StreamingQuery = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string").add("lang", "string")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(spark, batch, stores, batchId, dict,
-            vectors = vectors, minVecBuildRows = minVecBuildRows,
-            vecKs = vecKs, media = media,
-            minSemInitRows = minSemInitRows, semThreshold = semThreshold,
-            compactEvery = compactEvery)
-          ()
-        }
+    graft.streaming.StreamingIngest.landingStream(spark, landingDir, schema,
+        checkpointDir, maxFilesPerTrigger, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        processBatch(spark, batch, stores, batchId, dict,
+          vectors = vectors, minVecBuildRows = minVecBuildRows,
+          vecKs = vecKs, media = media,
+          minSemInitRows = minSemInitRows, semThreshold = semThreshold,
+          compactEvery = compactEvery)
+        ()
       }
-      .start()
+    }
   }
 
   def main(args: Array[String]): Unit = {

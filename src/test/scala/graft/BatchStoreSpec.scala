@@ -23,7 +23,7 @@ class BatchStoreSpec extends SparkSpec {
         .write.parquet(s"$path/batch=$b")
     }
     BatchStore.compact(spark, path, upToBatch = 1L,
-      targetFiles = 2, sortCols = Seq("k"))
+      BatchStore.Tree(targetFiles = 2, sortCols = Seq("k")))
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/batch=1"))
@@ -37,6 +37,23 @@ class BatchStoreSpec extends SparkSpec {
     // content unchanged
     val all = spark.read.parquet(path).select($"k").as[Long].collect().sorted
     assert(all.toSeq == (0L until 1000L).toSeq)
+  }
+
+  test("a _-named tree inside a store root is invisible to reads of the root") {
+    // the LSH store keeps its band index at <store>/_bands and reads its
+    // batches as spark.read.parquet(<store>): Spark's file listing must
+    // skip the `_` tree, or the two schemas would merge into one read
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("bstore").toString + "/t"
+    Seq(1L, 2L).toDF("k").write.parquet(s"$path/batch=0")
+    Seq((7L, 7L, 7)).toDF("__b", "__sid", "bucket")
+      .write.partitionBy("bucket").parquet(s"$path/_bands/batch=0")
+    val read = spark.read.parquet(path)
+    assert(read.columns.toSeq == Seq("k", "batch"))
+    assert(read.select($"k").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    assert(BatchStore.listBatches(fs, root).map(_._1) == Seq(0L))
+    assert(BatchStore.listBatches(fs, root, "_bands").map(_._1) == Seq(0L))
   }
 }
 

@@ -42,6 +42,19 @@ class CheckpointsSpec extends SparkSpec {
     }
   }
 
+  test("freeFrame drops a local checkpoint's blocks from the context") {
+    val ck = Checkpoints.materializeFrame(spark.range(0, 1000).toDF("id"))
+    assert(ck.count() === 1000)
+    val rdd = ck.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+      "precondition: a local checkpoint is a persisted RDD")
+    Checkpoints.freeFrame(ck)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+      "freeFrame left the local checkpoint registered")
+  }
+
   test("connectedComponents under reliable checkpoints leaves at most the live result's file-set") {
     withReliable { dir =>
       // two triangles + a 4-chain: converges in a few iterations, each of

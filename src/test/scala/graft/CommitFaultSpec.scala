@@ -5,9 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BatchStore, IncrementalDedup, LakeMerge}
+import graft.operators.{BatchStore, IncrementalDedup, IncrementalImageDedup, IncrementalSemDedup, IvfIndex, IvfPqIndex, LakeMerge, Retrieval}
 import graft.pipeline.MonthlyRollup
+import graft.sources.TweetJsonSource
 import graft.streaming.StreamingIngest
+import graft.tools.StreamingCapstone
 
 /** Fault harness for the [[BatchStore]] commit: every writer that commits
   * through it is crashed at each of its mutating filesystem calls in turn
@@ -20,6 +22,7 @@ class CommitFaultSpec extends SparkSpec {
   import spark.implicits._
 
   FaultFs.install(spark)
+
 
   /** A writer under test: `setup` builds the old state under a fresh
     * directory, `write` is the commit crashed and replayed, `fold` reads
@@ -48,49 +51,61 @@ class CommitFaultSpec extends SparkSpec {
     fs.mkdirs(p): Unit
   }
 
-  /** Tasks of a failed job may still be finishing: wait them out. */
-  private def quiesce(): Unit = {
-    val tracker = spark.sparkContext.statusTracker
+  /** Tasks of a failed job may still be finishing: wait out the job
+    * group's.
+    */
+  private def quiesce(group: String): Unit = {
+    val t = spark.sparkContext.statusTracker
+    def active = t.getJobIdsForGroup(group).toSeq.flatMap(t.getJobInfo(_)).flatMap(_.stageIds)
+      .flatMap(t.getStageInfo(_)).map(_.numActiveTasks).sum
     val deadline = System.nanoTime() + 10000000000L
-    while (tracker.getExecutorInfos.map(_.numRunningTasks).sum > 0 &&
-        System.nanoTime() < deadline) Thread.sleep(10)
+    while (active > 0 && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
-  /** Crash `w` at every mutating call k = 1..N of its clean run. */
+  /** Crash `w` at every mutating call k = 1..N of its clean run. The
+    * crashes run concurrently, each on its own copy of the old state,
+    * under its own fault scope and job group.
+    */
   private def crashEveryCall(tag: String, w: Writer): Int = {
     val template = FaultFs.tmpDir(s"fault-$tag") + "/t"
-    FaultFs.disarm()
     w.setup(template)
     val clean = FaultFs.tmpDir(s"fault-$tag-clean") + "/t"
     copyTree(template, clean)
     val old = w.fold(clean)
-    FaultFs.arm()
-    w.write(clean)
-    val n = FaultFs.calls.get.toInt
-    FaultFs.disarm()
+    val counted = FaultFs.arm(clean)
+    try w.write(clean) finally FaultFs.disarm(counted)
+    val n = counted.calls.get.toInt
     val fresh = w.fold(clean)
     assert(old != fresh, s"$tag: the write changed nothing")
     // a replay must reproduce `fresh`, so one key check covers every k
     val ks = w.keys(clean)
     assert(ks.distinct.size == ks.size, s"$tag: duplicate key")
     info(s"$tag: $n mutating calls")
-    (1 to n).foreach { k =>
+    def crashAt(k: Int): Unit = {
       val dir = FaultFs.tmpDir(s"fault-$tag-$k") + "/t"
       copyTree(template, dir)
-      FaultFs.arm(k)
-      try scala.util.Try(w.write(dir))
-      finally {
-        FaultFs.disarm()
-        quiesce()
-      }
-      val healed = w.fold(dir)
-      assert(healed == old || healed == fresh,
-        s"$tag: crash at call $k of $n left a mix of old and new content")
-      w.write(dir)
-      assert(w.fold(dir) == fresh, s"$tag: replay after a crash at call $k differs")
-      for (root <- w.roots(dir); suffix <- Seq("__next", "__manifest", "__manifest.tmp"))
-        assert(!exists(root + suffix), s"$tag: $root$suffix left after a crash at call $k")
+      val group = s"$tag-$k"
+      spark.sparkContext.setJobGroup(group, group)
+      try {
+        val scope = FaultFs.arm(dir, k)
+        try scala.util.Try(w.write(dir))
+        finally {
+          FaultFs.disarm(scope)
+          quiesce(group)
+        }
+        val healed = w.fold(dir)
+        assert(healed == old || healed == fresh,
+          s"$tag: crash at call $k of $n left a mix of old and new content")
+        w.write(dir)
+        assert(w.fold(dir) == fresh, s"$tag: replay after a crash at call $k differs")
+        for (root <- w.roots(dir); suffix <- Seq("__next", "__manifest", "__manifest.tmp"))
+          assert(!exists(root + suffix), s"$tag: $root$suffix left after a crash at call $k")
+      } finally spark.sparkContext.clearJobGroup()
     }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try (1 to n).map(k => pool.submit[Unit](() => crashAt(k))).foreach { f =>
+      try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    } finally pool.shutdown()
     n
   }
 
@@ -195,11 +210,6 @@ class CommitFaultSpec extends SparkSpec {
       IncrementalDedup.lshDedupBatch(spark, Seq((i.toLong + 1) -> t).toDF("doc_id", "text"),
         $"doc_id", $"text", s"$dir/store", i.toLong, bands = 1).collect(): Unit
     }
-    def tree(root: String): Seq[String] = {
-      val (fs, p) = BatchStore.fsPath(spark, root)
-      BatchStore.heal(fs, p)
-      spark.read.parquet(root).drop("batch").toJSON.collect().toSeq.sorted
-    }
     val n = crashEveryCall("compact", Writer(
       setup = setup,
       write = dir => IncrementalDedup.compactStore(spark, s"$dir/store", upToBatch = 1L),
@@ -207,13 +217,153 @@ class CommitFaultSpec extends SparkSpec {
       // the layout's content fold, so the batch count rides along
       fold = dir => {
         val (fs, p) = BatchStore.fsPath(spark, s"$dir/store")
-        BatchStore.heal(fs, p)
         val batches = BatchStore.listBatches(fs, p).size
-        s"batches=$batches" +: (tree(s"$dir/store") ++ tree(s"$dir/store__bands"))
+        s"batches=$batches" +: trees(s"$dir/store", "", IncrementalDedup.BandsTree)
+          .map(_.replaceAll(""","batch":\\d+""", ""))
       },
-      keys = dir => spark.read.parquet(s"$dir/store").select($"doc_id".cast("string"))
-        .as[String].collect().toSeq,
-      roots = dir => Seq(s"$dir/store", s"$dir/store__bands")))
+      keys = dir => keysOf(s"$dir/store", "doc_id"),
+      roots = dir => Seq(s"$dir/store")))
     assert(n > 5, n)
+  }
+
+  /** The trees of a store root as sorted JSON rows, read after a heal
+    * (`""` = the root's own batches); an absent tree reads as such.
+    */
+  private def trees(root: String, names: String*): Seq[String] = {
+    val (fs, p) = BatchStore.fsPath(spark, root)
+    BatchStore.heal(fs, p)
+    names.flatMap { t =>
+      val at = if (t.isEmpty) root else s"$root/$t"
+      if (!exists(at)) Seq(s"$t absent")
+      else spark.read.parquet(at).toJSON.collect().toSeq.sorted.map(r => s"$t $r")
+    }
+  }
+
+  private def keysOf(path: String, cols: String*): Seq[String] =
+    spark.read.parquet(path).select(concat_ws("|", cols.map(col): _*)).as[String]
+      .collect().toSeq
+
+  private def storeWriter(root: String, setup: String => Unit, write: String => Unit,
+      foldTrees: Seq[String], keyTree: String, keyCols: String*) = Writer(
+    setup = dir => setup(s"$dir/$root"), write = dir => write(s"$dir/$root"),
+    fold = dir => trees(s"$dir/$root", foldTrees: _*),
+    keys = dir => keysOf(if (keyTree.isEmpty) s"$dir/$root" else s"$dir/$root/$keyTree",
+      keyCols: _*),
+    roots = dir => Seq(s"$dir/$root"))
+
+  // the smallest inputs that still write every tree: two 4-dim
+  // clusters of 4 vectors, two 2-term documents per batch
+  private def vecs(ids: Seq[Long], shift: Float): DataFrame =
+    ids.map { i =>
+      val base = if (i % 2 == 0) 0 else 2
+      (i, Array.tabulate(4)(j => (if (j == base) 1.0f else 0.1f) + shift + i / 100f))
+    }.toDF("vec_id", "embedding").repartition(1)
+  private def terms(rows: (Long, String)*): DataFrame =
+    rows.toSeq.toDF("doc_id", "text").repartition(1)
+
+  test("index and store builds over an existing one survive a crash at every step") {
+    val nIvf = crashEveryCall("ivf-build", storeWriter("idx",
+      setup = IvfIndex.build(vecs(1L to 4L, 0f), $"vec_id", $"embedding", _, nlist = 2),
+      write = IvfIndex.build(vecs(5L to 8L, 0.5f), $"vec_id", $"embedding", _, nlist = 2),
+      foldTrees = Seq("centroids", "meta", "cells"), keyTree = "cells", "neighbor_id"))
+    val nSem = crashEveryCall("sem-init", storeWriter("store",
+      setup = dir => {
+        IncrementalSemDedup.init(vecs(1L to 4L, 0f), $"vec_id", $"embedding", dir,
+          nlist = 2, pqM = 2, pqKs = 2)
+        IncrementalSemDedup.semDedupBatch(spark, vecs(1L to 4L, 0f), $"vec_id",
+          $"embedding", dir, 0L).collect(): Unit
+      },
+      write = IncrementalSemDedup.init(vecs(5L to 8L, 0.5f), $"vec_id", $"embedding", _,
+        nlist = 2, pqM = 2, pqKs = 2),
+      foldTrees = Seq("centroids", "pq_books", "rows"), keyTree = "centroids", "cell"))
+    val nBm25 = crashEveryCall("bm25-build", storeWriter("idx",
+      setup = Retrieval.buildIndex(terms(1L -> "spark data", 2L -> "duck data"),
+        $"doc_id", $"text", _, buckets = 1),
+      write = Retrieval.buildIndex(terms(3L -> "spark join", 4L -> "duck join"),
+        $"doc_id", $"text", _, buckets = 2),
+      foldTrees = Seq("meta", "postings", "stats"), keyTree = "postings", "term", "doc_id"))
+    assert(Seq(nIvf, nSem, nBm25).forall(_ > 5), (nIvf, nSem, nBm25))
+  }
+
+  test("index and store appends survive a crash at every step") {
+    val nBm25 = crashEveryCall("bm25-append", storeWriter("idx",
+      setup = Retrieval.buildIndex(terms(1L -> "spark data", 2L -> "duck data"),
+        $"doc_id", $"text", _, buckets = 1),
+      write = Retrieval.appendIndex(terms(3L -> "spark join", 4L -> "duck join"),
+        $"doc_id", $"text", _, batchId = 1L),
+      foldTrees = Seq("postings", "stats"), keyTree = "postings", "term", "doc_id"))
+    val nPq = crashEveryCall("ivfpq-append", storeWriter("idx",
+      setup = IvfPqIndex.build(vecs(1L to 4L, 0f), $"vec_id", $"embedding", _,
+        nlist = 2, m = 2, ks = 2),
+      write = IvfPqIndex.append(spark, vecs(5L to 8L, 0f), $"vec_id", $"embedding", _,
+        batchId = 1L),
+      foldTrees = Seq("cells"), keyTree = "cells", "neighbor_id"))
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog near the river bank today",
+      "a slow green turtle walks under the busy bridge across the wide river")
+    val nLsh = crashEveryCall("lsh-append", storeWriter("store",
+      setup = IncrementalDedup.lshDedupBatch(spark, terms(1L -> texts(0)), $"doc_id",
+        $"text", _, 0L, bands = 4).collect(): Unit,
+      write = IncrementalDedup.lshDedupBatch(spark, terms(2L -> texts(1)), $"doc_id",
+        $"text", _, 1L, bands = 4).collect(): Unit,
+      foldTrees = Seq("", IncrementalDedup.BandsTree), keyTree = "", "doc_id"))
+    val bits = Seq.tabulate(64)(i => if (i % 5 == 0) 1 else 0)
+    def media(rows: (Long, Seq[Int])*): DataFrame =
+      rows.map { case (i, b) => (i, TestImages.bmpOfBits(b)) }.toDF("media_id", "payload")
+    val nImg = crashEveryCall("dhash-append", storeWriter("store",
+      setup = IncrementalImageDedup.dhashDedupBatch(spark, media(1L -> bits), $"media_id",
+        $"payload", _, 0L).collect(): Unit,
+      write = IncrementalImageDedup.dhashDedupBatch(spark,
+        media(2L -> TestImages.flip(bits, 3), 3L -> bits.map(1 - _)), $"media_id",
+        $"payload", _, 1L).collect(): Unit,
+      foldTrees = Seq(""), keyTree = "", "media_id"))
+    assert(Seq(nBm25, nPq, nLsh, nImg).forall(_ > 3), (nBm25, nPq, nLsh, nImg))
+  }
+
+  test("the capstone's build batch stages, builds and commits its marker in one go") {
+    // batch 0 stages below the build threshold; batch 1 stages, reaches
+    // it, builds the index and commits the marker with the staged drop
+    def feed(store: String, ids: Seq[Long], batchId: Long): Unit = {
+      val landed = ids.toDF("doc_id")
+      StreamingCapstone.maintainVectorIndex(spark, landed,
+        vecs(ids, 0f).withColumn("embedding", concat($"embedding", $"embedding")),
+        store, batchId, minVecBuildRows = 4, vecKs = 2)
+    }
+    def fold(store: String): Seq[String] = {
+      val marker = s"$store/_built_through"
+      val m = if (exists(marker)) spark.read.text(marker).as[String].collect().toSeq else Nil
+      m ++ trees(store, "staged", "centroids", "cells")
+    }
+    val n = crashEveryCall("capstone-build", Writer(
+      setup = dir => feed(s"$dir/vec", Seq(1L, 2L), 0L),
+      write = dir => feed(s"$dir/vec", Seq(3L, 4L), 1L),
+      fold = dir => fold(s"$dir/vec"),
+      keys = dir => keysOf(s"$dir/vec/cells", "neighbor_id", "cell"),
+      roots = dir => Seq(s"$dir/vec")))
+    assert(n > 5, n)
+  }
+
+  test("the JSON export sinks survive a crash at every step") {
+    def docs(n: Int): DataFrame = (1 to n).map(i => (i.toLong, s"t$i")).toDF("_id", "text")
+    // the array export's fold is its text, so framing is checked too
+    def readBack(path: String, array: Boolean, text: Boolean): Seq[String] = {
+      val (fs, p) = BatchStore.fsPath(spark, path)
+      BatchStore.heal(fs, p)
+      if (!fs.exists(p)) Nil
+      else if (text) spark.read.text(path).as[String].collect().toSeq
+      else spark.read.option("multiLine", array).json(path)
+        .select($"_id".cast("string")).as[String].collect().toSeq
+    }
+    val Seq(nJson, nArray) = Seq(false, true).map { array =>
+      def write(path: String, n: Int): Unit =
+        if (array) TweetJsonSource.writeJsonArray(docs(n), path)
+        else TweetJsonSource.writeJson(docs(n), path)
+      crashEveryCall(if (array) "json-array" else "json", Writer(
+        setup = dir => write(s"$dir/out", 2), write = dir => write(s"$dir/out", 3),
+        fold = dir => readBack(s"$dir/out", array, text = array).sorted,
+        keys = dir => readBack(s"$dir/out", array, text = false),
+        roots = dir => Seq(s"$dir/out")))
+    }
+    assert(nJson > 3 && nArray > 3, (nJson, nArray))
   }
 }

@@ -9,12 +9,14 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
 /** Test double: the local filesystem under its own `fault:` scheme. It
-  * counts every mutating call (mkdirs, create, rename, delete) and, once
-  * armed, throws at the `crashAt`-th and at every call after it — a
-  * process that died at that call makes no further change, so a writer's
-  * cleanup handlers cannot tidy the crash state away. Registered only in
-  * the spec session's Hadoop conf ([[FaultFs.install]]); main code has no
-  * hook for it.
+  * counts the mutating calls (mkdirs, create, rename, delete) under each
+  * armed directory ([[FaultFs.arm]]) and, from that directory's
+  * `crashAt`-th call on, throws at every call under it — a process that
+  * died at that call makes no further change there, so a writer's
+  * cleanup handlers cannot tidy the crash state away. Directories are
+  * armed independently, so writers on different directories can crash
+  * concurrently. Registered only in the spec session's Hadoop conf
+  * ([[FaultFs.install]]); main code has no hook for it.
   */
 class FaultFs extends RawLocalFileSystem {
   override def getUri: URI = FaultFs.Root
@@ -51,31 +53,45 @@ object FaultFs {
   val Scheme = "fault"
   val Root: URI = URI.create(s"$Scheme:///")
 
-  /** Mutating calls seen since the last [[arm]], and their log
-    * (`"<op> <path>"`).
+  final class Crash(n: Long) extends java.io.IOException(s"injected crash at mutating call $n")
+
+  /** An armed directory: the mutating calls under it since [[arm]], and
+    * their log (`"<op> <path>"`).
     */
-  val calls = new AtomicLong
-  val log = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  @volatile private var crashAt = Long.MaxValue
+  final class Scope private[FaultFs] (val dir: String, crashAt: Long) {
+    val calls = new AtomicLong
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    private[FaultFs] def covers(p: String): Boolean = p == dir || p.startsWith(dir + "/")
+    private[FaultFs] def count(name: String, p: String): Unit = {
+      log.add(s"$name $p")
+      val n = calls.incrementAndGet()
+      if (n >= crashAt) throw new Crash(n)
+    }
+  }
+
+  private val scopes = new java.util.concurrent.CopyOnWriteArrayList[Scope]
   // a mutating call may recurse (mkdirs creates parents, create makes
   // its parent dir): only the outermost one counts
   private val depth = ThreadLocal.withInitial[Int](() => 0)
 
-  final class Crash(n: Long) extends java.io.IOException(s"injected crash at mutating call $n")
-
   private def mutate[T](name: String, path: Path)(op: => T): T = {
     if (depth.get == 0) {
-      log.add(s"$name ${path.toUri.getPath}")
-      val n = calls.incrementAndGet()
-      if (n >= crashAt) throw new Crash(n)
+      val p = path.toUri.getPath
+      scopes.forEach(s => if (s.covers(p)) s.count(name, p))
     }
     depth.set(depth.get + 1)
     try op finally depth.set(depth.get - 1)
   }
 
-  /** Reset the counter; crash from the `k`-th mutating call on. */
-  def arm(k: Long = Long.MaxValue): Unit = { crashAt = k; calls.set(0); log.clear() }
-  def disarm(): Unit = crashAt = Long.MaxValue
+  /** Count the mutating calls under `dir` (a `fault:` path); crash from
+    * the `k`-th on.
+    */
+  def arm(dir: String, k: Long = Long.MaxValue): Scope = {
+    val s = new Scope(new Path(dir).toUri.getPath, k)
+    scopes.add(s)
+    s
+  }
+  def disarm(s: Scope): Unit = scopes.remove(s): Unit
 
   def install(spark: SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -220,7 +220,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def idxDirs(batch: String): Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(s"${store}__bands/$batch")
+      val p = new org.apache.hadoop.fs.Path(s"$store/_bands/$batch")
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).map(_.getPath.getName)
         .filter(_.startsWith("bucket=")).toSeq.sorted
@@ -233,14 +233,14 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(idxDirs("batch=0").nonEmpty && idxDirs("batch=0").forall(_.startsWith("bucket=")))
 
     // LEGACY FALLBACK: a store written before the index tree existed
-    // (or whose index write crashed) must still suppress identically —
-    // delete the whole index tree and replay batch 2's suppression
+    // must still suppress identically — delete the whole index tree and
+    // replay batch 2's suppression
     val suppressed = IncrementalDedup.lshDedupBatch(
       spark, Seq(3L -> textG).toDF("doc_id", "text"),
       col("doc_id"), col("text"), store, 2L, threshold = Threshold, bands = TestBands)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3))).toSeq
     assert(suppressed === Seq((3L, 1L, false)), "indexed path: G chains to A through B")
-    fs.delete(new org.apache.hadoop.fs.Path(s"${store}__bands"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$store/_bands"), true)
     val replayed = IncrementalDedup.lshDedupBatch(
       spark, Seq(3L -> textG).toDF("doc_id", "text"),
       col("doc_id"), col("text"), store, 2L, threshold = Threshold, bands = TestBands)
@@ -279,7 +279,7 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(b0 === Map(1L -> ((1L, true)), 2L -> ((2L, true))))
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idx0 = new org.apache.hadoop.fs.Path(s"${store}__bands/batch=0")
+    val idx0 = new org.apache.hadoop.fs.Path(s"$store/_bands/batch=0")
     assert(fs.exists(new org.apache.hadoop.fs.Path(idx0, "_SUCCESS")),
       "precondition: the all-short index partition should be committed")
     assert(fs.listStatus(idx0).forall(_.getPath.getName.startsWith("_")),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IncrementalDedup, IncrementalImageDedup}
+import graft.operators.{BatchStore, IncrementalImageDedup}
 import TestImages.{bmpOfBits, flip}
 
 /** Cross-batch perceptual dedup store: transitive suppression, replay
@@ -93,7 +93,7 @@ class IncrementalImageDedupSpec extends SparkSpec {
     val before = spark.read.parquet(store)
       .select("media_id", "dh", "rep_id", "survivor")
       .collect().map(_.toSeq).toSet
-    IncrementalDedup.compactStore(spark, store, upToBatch = 1)
+    BatchStore.compact(spark, store, upToBatch = 1)
     val after = spark.read.parquet(store)
       .select("media_id", "dh", "rep_id", "survivor")
       .collect().map(_.toSeq).toSet

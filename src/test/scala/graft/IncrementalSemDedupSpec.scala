@@ -169,7 +169,7 @@ class IncrementalSemDedupSpec extends SparkSpec {
     assert(run(store, 3, Seq((5L, vec(0, 30)))) == Seq((5L, 1L, false)))
     // a crash mid-swap strands the tree in the stage under a published
     // manifest: every reader rolls it forward on entry
-    BatchStoreSpec.crashMidSwap(spark, s"$store/rows")
+    BatchStoreSpec.crashMidSwap(spark, store)
     assert(IncrementalSemDedup.survivors(spark, store)
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
   }

@@ -97,7 +97,7 @@ class LakeMergeSpec extends SparkSpec {
     val prevDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(ckpt)
     spark.conf.set(Checkpoints.ReliableCheckpointConf, "true")
-    FaultFs.arm()
+    val scope = FaultFs.arm(ckpt)
     try {
       LakeMerge.mergeWrite(spark, docs(
         ("A", "2025-05-01 10:00:00", "2025-05-01 11:00:00", "a v1"),
@@ -105,6 +105,7 @@ class LakeMergeSpec extends SparkSpec {
       LakeMerge.mergeWrite(spark, docs(
         ("A", "2025-05-01 10:00:00", "2025-05-01 12:00:00", "a v2")), lake)
     } finally {
+      FaultFs.disarm(scope)
       spark.conf.unset(Checkpoints.ReliableCheckpointConf)
       prevDir.foreach(spark.sparkContext.setCheckpointDir)
     }
@@ -114,7 +115,7 @@ class LakeMergeSpec extends SparkSpec {
     // the reliable checkpoint actually wrote RDD checkpoint data, and
     // mergeWrite freed it once the swap was done
     import scala.jdk.CollectionConverters._
-    val created = FaultFs.log.asScala.filter(_.startsWith("create ")).map(_.drop(7))
+    val created = scope.log.asScala.filter(_.startsWith("create ")).map(_.drop(7))
     assert(created.exists(_.matches(".*/rdd-\\d+/.*")), created)
     val rddDirs = new java.io.File(ckpt.stripPrefix("fault:")).listFiles.toSeq
       .flatMap(d => Option(d.listFiles).toSeq.flatten).filter(_.getName.startsWith("rdd-"))

@@ -225,10 +225,9 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildIndex(docs, $"doc_id", $"text", path, buckets = 16)
     val want = Retrieval.queryIndex(spark, path, terms, k = 10)
       .orderBy($"rk").collect().toSeq
-    // simulate the crash window: the manifests published, the live
-    // partitions deleted, the only copies stranded in the stages
-    for (sub <- Seq("postings", "stats"))
-      BatchStoreSpec.crashMidSwap(spark, s"$path/$sub")
+    // simulate the crash window: the manifest published, the live trees
+    // deleted, the only copies stranded in the stage
+    BatchStoreSpec.crashMidSwap(spark, path)
     val healed = Retrieval.queryIndex(spark, path, terms, k = 10)
       .orderBy($"rk").collect().toSeq
     assert(healed == want)

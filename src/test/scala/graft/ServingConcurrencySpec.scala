@@ -15,10 +15,11 @@ import graft.operators.{BatchStore, IvfIndex, Retrieval}
   * [[BatchStore.servingRead]], not surfaced.
   *
   * Mechanism under test (see [[Retrieval.queryIndex]] /
-  * [[IvfIndex.probe]]): commit-record append ordering (postings first,
-  * stats last), committed-batch snapshot pinning via `_SUCCESS`-gated
-  * explicit paths, back-to-back two-tree swaps, and the
-  * adopt-vs-swap mutex in [[BatchStore]].
+  * [[IvfIndex.probe]]): every append and compaction lands all of its
+  * trees through one [[BatchStore]] manifest, serving reads pin their
+  * batch set with one listing taken under the commit lock and read
+  * through those explicit paths, and the adopt-vs-swap mutex in
+  * [[BatchStore]].
   */
 class ServingConcurrencySpec extends SparkSpec {
   import spark.implicits._
@@ -133,9 +134,10 @@ class ServingConcurrencySpec extends SparkSpec {
     IvfIndex.build(emb, $"vec_id", $"embedding", path, nlist = 8, replicas = 1)
     val want = IvfIndex.probe(spark, path, probes, $"vec_id", $"embedding", k = 5)
       .orderBy($"probe_id", $"rk").collect().toSeq
-    val (fs, cells) = BatchStore.fsPath(spark, s"$path/cells")
-    val next = new org.apache.hadoop.fs.Path(s"$path/cells__next")
-    BatchStoreSpec.crashMidSwap(spark, cells.toString)
+    val (fs, root) = BatchStore.fsPath(spark, path)
+    val cells = new org.apache.hadoop.fs.Path(root, "cells")
+    val next = new org.apache.hadoop.fs.Path(s"${path}__next")
+    BatchStoreSpec.crashMidSwap(spark, path)
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Seq[org.apache.spark.sql.Row]]()
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val readers = (0 until 6).map { _ =>
@@ -152,7 +154,7 @@ class ServingConcurrencySpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     results.asScala.foreach(r => assert(r == want))
     assert(fs.exists(cells) && !fs.exists(next) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$path/cells__manifest")),
+      !fs.exists(new org.apache.hadoop.fs.Path(s"${path}__manifest")),
       "store did not end healed")
   }
 
@@ -190,28 +192,69 @@ class ServingConcurrencySpec extends SparkSpec {
     assert(healed2 == 7 && wrapCalls == 2)
   }
 
-  test("compactIndex refuses a postings/stats batch-id divergence loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("idxdiverge").toString
-    val docs = Seq((1L, "spark shuffles data"), (2L, "duck reads parquet"))
-      .toDF("doc_id", "text")
-    Retrieval.buildIndex(docs, $"doc_id", $"text", s"$dir/idx", buckets = 4)
-    val more = Seq((3L, "spark compacts stores")).toDF("doc_id", "text")
-    Retrieval.appendIndex(more, $"doc_id", $"text", s"$dir/idx", batchId = 1L)
-    // simulate a crashed writeBatch: postings batch=2 landed, stats did not
-    val (fs, p) = BatchStore.fsPath(spark, s"$dir/idx/postings")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(p, "batch=2"))
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.compactIndex(spark, s"$dir/idx", upToBatch = 2L)
+  /** An index of batches 0 and 1, plus the crash states of appending
+    * batch `torn`: its trees moved back into the stage, and — with
+    * `published` — the manifest landed and the postings tree already
+    * rolled forward (a crash between the two renames).
+    */
+  private def tornAppend(dir: String, torn: Long, published: Boolean): String = {
+    import org.apache.hadoop.fs.Path
+    val idx = s"$dir/idx"
+    Retrieval.buildIndex(Seq((1L, "spark shuffles data"), (2L, "duck reads parquet"))
+      .toDF("doc_id", "text"), $"doc_id", $"text", idx, buckets = 4)
+    Retrieval.appendIndex(Seq((3L, "spark compacts stores")).toDF("doc_id", "text"),
+      $"doc_id", $"text", idx, batchId = 1L)
+    Retrieval.appendIndex(Seq((4L, "spark joins tables")).toDF("doc_id", "text"),
+      $"doc_id", $"text", idx, batchId = torn)
+    val st = BatchStore.stage(spark, idx)
+    val rels = Seq(s"postings/batch=$torn", s"stats/batch=$torn")
+    rels.foreach { rel =>
+      st.fs.mkdirs(st.at(rel).getParent)
+      require(st.fs.rename(new Path(st.root, rel), st.at(rel)))
     }
-    assert(e.getMessage.contains("diverge") && e.getMessage.contains("replay"))
-    // healing the divergence (replay overwrites batch=2 — here: remove the
-    // torn dir) makes the same compaction succeed
-    fs.delete(new org.apache.hadoop.fs.Path(p, "batch=2"), true)
-    Retrieval.compactIndex(spark, s"$dir/idx", upToBatch = 1L)
-    val hits = BatchStore.servingRead() {
-      Retrieval.queryIndex(spark, s"$dir/idx", Seq("spark")).collect()
+    if (published) {
+      BatchStore.publish(BatchStore.Swap(st, rels))
+      require(st.fs.rename(st.at(rels.head), new Path(st.root, rels.head)))
     }
-    assert(hits.nonEmpty)
+    idx
+  }
+
+  private def sparkHits(idx: String): Set[Long] = BatchStore.servingRead() {
+    Retrieval.queryIndex(spark, idx, Seq("spark"), k = 10)
+      .select($"doc_id").as[Long].collect().toSet
+  }
+
+  test("a crashed append lands in both index trees or in neither") {
+    val dir = java.nio.file.Files.createTempDirectory("idxtorn").toString
+    // staged without a manifest: the batch is in neither tree, so the
+    // compaction folds 0..1 alone and the stage is cleared
+    val staged = tornAppend(s"$dir/a", torn = 2L, published = false)
+    assert(sparkHits(staged) == Set(1L, 3L))
+    Retrieval.compactIndex(spark, staged, upToBatch = 2L)
+    assert(sparkHits(staged) == Set(1L, 3L))
+    assert(!new java.io.File(s"${staged}__next").exists())
+    // the stream's replay lands it whole
+    Retrieval.appendIndex(Seq((4L, "spark joins tables")).toDF("doc_id", "text"),
+      $"doc_id", $"text", staged, batchId = 2L)
+    assert(sparkHits(staged) == Set(1L, 3L, 4L))
+    // published, one tree rolled forward: the first read completes it
+    val rolled = tornAppend(s"$dir/b", torn = 2L, published = true)
+    assert(sparkHits(rolled) == Set(1L, 3L, 4L))
+    Retrieval.compactIndex(spark, rolled, upToBatch = 2L)
+    assert(sparkHits(rolled) == Set(1L, 3L, 4L))
+    def batchDirs(sub: String) = new java.io.File(s"$rolled/$sub").listFiles()
+      .map(_.getName).filter(_.startsWith("batch=")).toSet
+    assert(batchDirs("postings") == Set("batch=2") && batchDirs("stats") == Set("batch=2"))
+  }
+
+  test("a crashed append above the compaction range never blocks it") {
+    val dir = java.nio.file.Files.createTempDirectory("idxscope").toString
+    val idx = tornAppend(dir, torn = 5L, published = false)
+    Retrieval.compactIndex(spark, idx, upToBatch = 1L)
+    assert(sparkHits(idx) == Set(1L, 3L))
+    // compacting through the crashed id finds only committed batches
+    Retrieval.compactIndex(spark, idx, upToBatch = 5L)
+    assert(sparkHits(idx) == Set(1L, 3L))
   }
 
   test("heal never adopts a stage without a manifest") {
@@ -251,36 +294,12 @@ class ServingConcurrencySpec extends SparkSpec {
       !fs.exists(new Path(s"$dir/store__manifest")))
   }
 
-  test("compactIndex pre-flight is scoped to upToBatch: a torn batch above the range never freezes maintenance") {
-    val dir = java.nio.file.Files.createTempDirectory("idxscope").toString
-    val docs = Seq((1L, "spark shuffles data"), (2L, "duck reads parquet"))
-      .toDF("doc_id", "text")
-    Retrieval.buildIndex(docs, $"doc_id", $"text", s"$dir/idx", buckets = 4)
-    val more = Seq((3L, "spark compacts stores")).toDF("doc_id", "text")
-    Retrieval.appendIndex(more, $"doc_id", $"text", s"$dir/idx", batchId = 1L)
-    // a torn postings batch ABOVE the compaction range (the stream died
-    // before its replay): older fully-committed batches must still compact
-    val (fs, p) = BatchStore.fsPath(spark, s"$dir/idx/postings")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(p, "batch=5"))
-    Retrieval.compactIndex(spark, s"$dir/idx", upToBatch = 1L)
-    val hits = BatchStore.servingRead() {
-      Retrieval.queryIndex(spark, s"$dir/idx", Seq("spark")).collect()
-    }
-    assert(hits.nonEmpty)
-    // but compacting THROUGH the torn id still refuses loudly
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.compactIndex(spark, s"$dir/idx", upToBatch = 5L)
-    }
-    assert(e.getMessage.contains("diverge"))
-  }
-
-  test("compaction preserves the _SUCCESS marker of a committed zero-row batch above the range") {
+  test("compaction keeps a zero-row batch above the range") {
     // a NESTED store's zero-row batch commits file-less (partitionBy of
-    // an empty frame emits only _SUCCESS). Compacting below it recreates
-    // the dir — and must recreate the marker too, or the batch silently
-    // demotes out of committedBatches after the swap, changing the commit
-    // status serving reads and readPriorBands observe.
-    val dir = java.nio.file.Files.createTempDirectory("succkeep").toString
+    // an empty frame emits only _SUCCESS); compacting below it must keep
+    // it listed, and an unfinished write (a stage without a manifest)
+    // must never surface as a batch
+    val dir = java.nio.file.Files.createTempDirectory("zerokeep").toString
     val path = s"$dir/store"
     Seq((1L, 0), (2L, 1)).toDF("v", "cell")
       .repartition(col("cell"))
@@ -289,17 +308,13 @@ class ServingConcurrencySpec extends SparkSpec {
       .repartition(col("cell"))
       .write.partitionBy("cell").parquet(s"$path/batch=1")
     val (fs, p) = BatchStore.fsPath(spark, path)
-    assert(BatchStore.committedBatches(fs, p).map(_._1).sorted === Seq(0L, 1L))
-    BatchStore.compact(spark, path, upToBatch = 0L, partitionCols = Seq("cell"))
-    assert(BatchStore.committedBatches(fs, p).map(_._1).sorted === Seq(0L, 1L),
-      "compaction demoted the committed zero-row batch above the range")
-    // a torn (uncommitted) file-less dir must stay uncommitted — the
-    // marker is preserved, never invented
-    fs.mkdirs(new org.apache.hadoop.fs.Path(p, "batch=2"))
-    BatchStore.compact(spark, path, upToBatch = 0L, partitionCols = Seq("cell"))
-    assert(BatchStore.listBatches(fs, p).map(_._1).sorted === Seq(0L, 1L, 2L))
-    assert(BatchStore.committedBatches(fs, p).map(_._1).sorted === Seq(0L, 1L),
-      "compaction invented a _SUCCESS marker for a torn batch dir")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"${path}__next/batch=2"))
+    BatchStore.compact(spark, path, upToBatch = 0L,
+      BatchStore.Tree(partitionCols = Seq("cell")))
+    assert(BatchStore.listBatches(fs, p).map(_._1).sorted === Seq(0L, 1L),
+      "compaction dropped the zero-row batch above the range")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${path}__next")))
+    assert(spark.read.parquet(path).select($"v").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 
   test("deterministic 'does not exist' analysis failures are not retried as vanished paths") {

@@ -225,10 +225,10 @@ class StreamingCapstoneSpec extends SparkSpec {
     assert(graft.operators.IncrementalSemDedup.survivors(
         spark, stWithImg(dir).semStore)
       .as[Long].collect().toSet == Set(1L, 4L, 5L, 7L))
-    // the staged sibling tree is dead data once the init marker commits
+    // the staged tree is dead data once the init marker commits
     // (a full float copy of the pre-init history) — it must be gone
     assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"${stWithImg(dir).semStore}_staged")),
+        java.nio.file.Paths.get(s"${stWithImg(dir).semStore}/staged")),
       "staged tree retained after init")
   }
 
